@@ -243,20 +243,3 @@ object AliasTrieScorer {
     root
   }
 }
-
-/** Placeholder for the production path: a batched ONNX-Runtime session per
-  * executor scoring wordpiece tensors (exported as in the reference's
-  * `export_models.py:78-106`, served in-process instead of TorchServe —
-  * SURVEY M1-M3). The ONNX runtime is not bundled in this build; the class
-  * documents the contract and fails loudly if constructed without it.
-  * The batched tensor wiring itself (encode → fixed-shape batch → logits →
-  * softmax → realign → decode) is exercised end-to-end by
-  * [[LinearTokenScorer]], whose `logits` computation is the single line an
-  * ONNX session call would replace.
-  */
-final class OnnxTokenScorer(modelPath: String) extends TokenScorer {
-  override def score(tokens: IndexedSeq[String]): IndexedSeq[(String, Double)] =
-    throw new UnsupportedOperationException(
-      s"ONNX Runtime is not available in this build (model=$modelPath). " +
-        "Use AliasTrieScorer, or add onnxruntime to the executor classpath.")
-}

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Article, Mention, Triple}
@@ -29,6 +29,12 @@ import graft.ner.{AliasTrieScorer, NerStage, TokenScorer}
   * On restart, buckets already present in the manifest are skipped — a
   * resumed run never recomputes finished work and per-partition lineage is
   * queryable from the `_manifest` table.
+  *
+  * A bucket commits with three writes — mentions, triples, manifest row —
+  * and no other job: its input is scanned once, NER runs once, and the
+  * manifest counts are observed on the write jobs (`Dataset.observe`), not
+  * counted by re-scans or read-backs. A bucket with no article, mention or
+  * triple commits a manifest row of zeros.
   */
 object KgPipeline {
 
@@ -122,26 +128,50 @@ object KgPipeline {
       buckets
     }
 
-    val stats = (0 until effectiveBuckets).filterNot(done).map { b =>
+    val mentionSchema = Encoders.product[Mention].schema
+    (0 until effectiveBuckets).filterNot(done).map { b =>
       val t0 = System.nanoTime()
-      val part = bucketed.where(col("_bucket") === b).drop("_bucket").as[Article]
-      val ms = NerStage.detect(part, scorer).cache()
-      val nMentions = ms.count()
-      val nArticles = part.count()
-      val ts = GraphMaterialize.triples(ms)
-      ms.toDF().write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/mentions/bucket=$b")
-      ts.toDF().write.mode(SaveMode.Overwrite)
+      val mentionsDir = s"$outDir/mentions/bucket=$b"
+      val (ms, articlesIn) = bucketMentions(bucketed, b, scorer)
+      val (msOut, mentionsOut) = observedRows(ms.toDF(), s"bucket $b mentions")
+      msOut.write.mode(SaveMode.Overwrite).parquet(mentionsDir)
+      // triples come from the bucket's just-written mentions, read with
+      // the known schema so no schema-inference job runs
+      val written = spark.read.schema(mentionSchema).parquet(mentionsDir).as[Mention]
+      val (ts, triplesOut) =
+        observedRows(GraphMaterialize.triples(written).toDF(), s"bucket $b triples")
+      ts.write.mode(SaveMode.Overwrite)
         .partitionBy("pred")
         .parquet(s"$outDir/triples/bucket=$b")
-      val nTriples = spark.read.parquet(s"$outDir/triples/bucket=$b").count()
-      ms.unpersist()
-      val stat = BucketStat(b, nArticles, nMentions, nTriples,
+      val stat = BucketStat(b, articlesIn(), mentionsOut(), triplesOut(),
         (System.nanoTime() - t0) / 1000000)
       Seq(stat).toDS().write.mode(SaveMode.Append).parquet(manifestDir)
       stat
     }
-    stats
+  }
+
+  /** The plan of one bucket's mentions: the bucket's rows of the staged
+    * table (partition-pruned on `_bucket`), counted BEFORE the NER gate —
+    * `n_articles` is the bucket's input rows, not the gated ones — then
+    * NER. Builds a plan and runs no job; the returned count is read after
+    * the plan's write. */
+  private[graft] def bucketMentions(
+      bucketed: DataFrame,
+      b: Int,
+      scorer: TokenScorer
+  ): (Dataset[Mention], () => Long) = {
+    import bucketed.sparkSession.implicits._
+    val (part, articlesIn) = observedRows(
+      bucketed.where(col("_bucket") === b).drop("_bucket"), s"bucket $b articles")
+    (NerStage.detect(part.as[Article], scorer), articlesIn)
+  }
+
+  /** `df` with a row count observed on whatever job runs it; the returned
+    * function reads the count after that job (0 for an empty input). */
+  private def observedRows(df: DataFrame, name: String): (DataFrame, () => Long) = {
+    val obs = Observation(name)
+    (df.observe(obs, count(lit(1)).as("rows")),
+      () => obs.get("rows").asInstanceOf[Long])
   }
 
   /** Per-partition lineage/metrics view over the manifest (north rule:

@@ -1,13 +1,17 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.GoldMention
+import graft.core.{GoldMention, Mention, Triple}
 import graft.eval.SpanEval
 import graft.graph.GraphMaterialize
 import graft.ner.{AliasTrieScorer, NerStage}
@@ -131,5 +135,103 @@ class PipelineSpec extends AnyFunSuite {
     m.write.mode("overwrite").parquet(s"$dir/_manifest")
     val stats = KgPipeline.runResumable(articles, dir, buckets = 4)
     assert(stats.map(_.bucket) == Seq(2))
+  }
+
+  /** Every manifest count equals what the bucket actually wrote or read:
+    * mention and triple rows under the bucket's output directories, and
+    * the bucket's staged input rows (before the NER gate). */
+  private def assertManifestMatchesOutput(
+      dir: String, stats: Seq[KgPipeline.BucketStat], inputRows: Long): Unit = {
+    import spark.implicits._
+    val mentionSchema = Encoders.product[Mention].schema
+    val tripleSchema = Encoders.product[Triple].schema
+    val staged = spark.read.parquet(s"$dir/_staging")
+      .groupBy("_bucket").count().as[(Int, Long)].collect().toMap
+    stats.foreach { s =>
+      val b = s.bucket
+      assert(s.n_articles == staged.getOrElse(b, 0L), s"bucket $b n_articles")
+      assert(s.n_mentions ==
+        spark.read.schema(mentionSchema).parquet(s"$dir/mentions/bucket=$b").count(),
+        s"bucket $b n_mentions")
+      assert(s.n_triples ==
+        spark.read.schema(tripleSchema).parquet(s"$dir/triples/bucket=$b").count(),
+        s"bucket $b n_triples")
+    }
+    assert(stats.map(_.n_articles).sum == inputRows)
+    assert(KgPipeline.manifest(spark, dir).as[KgPipeline.BucketStat]
+      .collect().map(_.copy(wall_ms = 0)).sortBy(_.bucket).toSeq ==
+      stats.map(_.copy(wall_ms = 0)))
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started. A marker job posted afterwards proves every earlier job
+    * event reached the listener (the listener bus is FIFO). */
+  private def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val marker = "graft.spec.marker"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null)
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("bucket commit: at most 5 jobs per bucket, manifest counts equal the written rows") {
+    val dir = Files.createTempDirectory("kg_jobs").toString
+    val n = 1200L
+    val articles = Synth.articles(spark, n, 42L, 8)
+    val (stats, jobs) = countingJobs(KgPipeline.runResumable(articles, dir, buckets = 8))
+    assert(stats.map(_.bucket) == (0 until 8))
+    info(f"$jobs jobs for ${stats.length} buckets " +
+      f"(${jobs.toDouble / stats.length}%.2f per bucket, staging included)")
+    // a bucket needs its mentions write (1 job), its triples write (a
+    // shuffle: 2) and its manifest append (1); a count or read-back job
+    // per bucket would break the bound
+    assert(jobs <= 5 * stats.length, s"$jobs jobs for ${stats.length} buckets")
+    assertManifestMatchesOutput(dir, stats, n)
+    assert(stats.map(_.n_triples).sum > 0)
+  }
+
+  test("empty buckets commit: 100 articles in 64 buckets run to completion") {
+    // a bucket without a triple leaves no parquet file under triples/, and
+    // one without an article none under _staging; both commit zeros
+    val dir = Files.createTempDirectory("kg_empty").toString
+    val articles = Synth.articles(spark, 100, 42L, 4)
+    val stats = KgPipeline.runResumable(articles, dir, buckets = 64)
+    assert(stats.map(_.bucket) == (0 until 64))
+    assert(stats.map(_.n_articles).sum == 100)
+    assert(stats.map(_.n_mentions).sum == 34)
+    assert(stats.map(_.n_triples).sum == 58)
+    assert(stats.count(_.n_articles == 0) == 16)
+    assert(stats.count(_.n_triples == 0) == 46)
+    assertManifestMatchesOutput(dir, stats, 100)
+    assert(KgPipeline.runResumable(articles, dir, buckets = 64).isEmpty)
+  }
+
+  test("Main: --model and other unknown flags fail at argument parse") {
+    val before = SparkSession.getDefaultSession
+    val e = intercept[IllegalArgumentException](graft.app.Main.main(
+      Array("--model", "x", "--synth", "10", "--output", "/nonexistent/out")))
+    assert(e.getMessage.contains("--model"), e.getMessage)
+    assert(SparkSession.getDefaultSession == before, "Main started a session")
+    intercept[IllegalArgumentException](graft.app.Main.parseArgs(
+      Array("--synth", "10", "--output", "o", "--buckets", "many")))
+    intercept[IllegalArgumentException](graft.app.Main.parseArgs(
+      Array("--synth", "10", "--output")))
+    assert(graft.app.Main.parseArgs(
+      Array("--synth", "10", "--output", "o", "--buckets", "4")) ==
+      Map("synth" -> "10", "output" -> "o", "buckets" -> "4"))
   }
 }

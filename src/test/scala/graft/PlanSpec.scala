@@ -42,6 +42,24 @@ class PlanSpec extends AnyFunSuite {
     assert(nerScan.contains("text"), nerScan)
   }
 
+  test("per-bucket KG plan reads only the NER columns of its one bucket") {
+    val dir = java.nio.file.Files.createTempDirectory("plan_bucketed").toString
+    Synth.articles(spark, 200, 42L, 2)
+      .withColumn("_bucket", pmod(xxhash64(col("url")), lit(4)).cast("int"))
+      .write.mode("overwrite").partitionBy("_bucket").parquet(dir)
+    val (ms, _) = graft.pipeline.KgPipeline.bucketMentions(
+      spark.read.parquet(dir), 2, new AliasTrieScorer)
+    val scan = ms.queryExecution.executedPlan.collectLeaves().head.toString
+    // the articles count observed before the gate keeps the scan pruned
+    assert(scan.contains(
+      "ReadSchema: struct<url:string,text:string,lang:string,tp:string>"), scan)
+    assert(!scan.contains("html"), scan)
+    assert(!scan.contains("warc_ts"), scan)
+    assert(scan.contains("PartitionFilters: [isnotnull(_bucket"), scan)
+    assert(scan.contains("(_bucket#"), scan)
+    assert(scan.contains(" = 2)]"), scan)
+  }
+
   test("dimension joins broadcast (q03), big-big joins never go Cartesian") {
     val q3 = SparkEntry.queries("q03_region_revenue")(spark, sfDir)
     q3.count() // finalize AQE
