@@ -17,17 +17,15 @@ import org.apache.spark.sql.functions._
   * shingle expression). Here the corpus text is read EXACTLY ONCE
   * (spec-asserted via filesystem read statistics): the first projection
   * computes per-document content hash, distinct shingle set, and MinHash
-  * signature in one codegen'd pass and checkpoints the result; every
+  * signature in one codegen'd pass and stages the result; every
   * stage after that exchanges ids, hashes, and shingle/signature arrays —
   * never text.
   *
-  * Staging is an EAGER `localCheckpoint` (executor memory with disk
-  * spill): lazy materialization could let two downstream branches race
-  * into the text scan concurrently and read it twice. The staged artifact
-  * is about the size of the shingle sets (≈ corpus text); a deployment
-  * whose cleaning chain spans multiple jobs would stage the same frame to
-  * parquet instead — every hook here ([[Dedup.bandRowsFromSigs]],
-  * [[Dedup.jaccardVerifyOnShingles]],
+  * Staging is a PARQUET table under the caller's `stageDir`
+  * ([[cleanedMetaResumable]] documents the layout), so the staged
+  * artifact (≈ corpus-text-sized) lives at rest rather than in executor
+  * memory, and the chain resumes per stage. Every hook
+  * ([[Dedup.bandRowsFromSigs]], [[Dedup.verifiedPairs]],
   * [[Decontaminate.contaminationReportOnShingles]]) takes any
   * `(doc_id, …)` table, however persisted.
   *
@@ -38,178 +36,30 @@ import org.apache.spark.sql.functions._
   *     ≥ `minRatio` benchmark containment) with any benchmark row;
   *  2. keep the min doc_id per identical text (hash keyed — one uniform
   *     shuffle);
-  *  3. LSH candidates (shared cap code) → exact Jaccard verify on the
-  *     staged shingle sets → connected components → keep the min doc_id
-  *     per near-dup cluster;
+  *  3. the near-dup core [[Dedup.verifiedPairs]] (LSH candidates →
+  *     Jaccard verify on the staged shingle sets) → connected components
+  *     → keep the min doc_id per near-dup cluster;
   *  4. optionally append the survivors' ALREADY-COMPUTED band keys and
   *     shingle sets into a persisted [[SignatureStore]] so future
   *     incremental batches dedup against the cleaned corpus.
   *
-  * Note this is a pipeline, not a pure plan builder: the staging
-  * checkpoint and the connected-components loop run Spark jobs when
-  * called.
+  * Note this is a pipeline, not a pure plan builder: every stage's
+  * write, the store append and the connected-components loop run Spark
+  * jobs when called.
   */
 object CleaningPipeline {
 
   /** Surviving `(doc_id, keepCols…)` rows of the cleaning chain. The
     * output is metadata-only by design — joining text back in is the
-    * caller's write-side concern ([[clean]]) and the only place a second
-    * text scan can occur. */
-  /** `allowStoreReplay`: a RE-RUN of the same cleaning job after its
-    * store append already committed re-appends the same survivors —
-    * with strict monotone checking the retry refuses on the watermark.
-    * Pass true for an idempotent re-run (the store's windowed replay
-    * gate still refuses genuinely misnumbered ids; duplicate rows are
-    * probe-tolerated and compactable). */
-  def cleanedMeta(
-      docs: DataFrame,
-      bench: DataFrame,
-      keepCols: Seq[String] = Nil,
-      k: Int = 32,
-      bands: Int = 8,
-      shingleN: Int = 3,
-      maxBucket: Int = 64,
-      minJaccard: Double = 0.8,
-      minOverlap: Int = 5,
-      minRatio: Double = 0.0,
-      broadcastBench: Boolean = true,
-      storePath: Option[String] = None,
-      allowStoreReplay: Boolean = false
-  ): DataFrame = {
-    val spark = docs.sparkSession
-    // the store's banding must equal the pipeline's or the appended rows
-    // would never collide with future probes — check BEFORE doing work
-    storePath.foreach { p =>
-      val m = SignatureStore.readMeta(spark, p)
-      require(m.k == k && m.bands == bands && m.shingleN == shingleN,
-        s"store $p has (k=${m.k}, bands=${m.bands}, shingleN=${m.shingleN})" +
-          s" but the pipeline runs (k=$k, bands=$bands, shingleN=$shingleN)" +
-          " — appending differently-banded signatures would silently miss" +
-          " every future near-duplicate")
-    }
-    val keep = keepCols.map(col)
-    // THE text pass: hash + shingles + signature in one projection. The
-    // shingle sets carry the at-rest HASHED representation
-    // ([[Dedup.hashShingles]]): every consumer below (decontamination
-    // overlap counts, Jaccard verify, the store append) is
-    // cardinality-arithmetic over the sets, which hashing preserves,
-    // and the staged artifact drops ~2.5× in bytes.
-    val staged = docs.select(
-      Seq(col("doc_id")) ++ keep ++ Seq(
-        md5(col("text").cast("binary")).as("_h"),
-        Dedup.hashShingles(
-          Dedup.distinctShingles(col("text"), shingleN)).as("sh"),
-        Dedup.minhashSignature(col("text"), k, shingleN).as("sig")): _*)
-      .localCheckpoint()
-
-    // stage 1: decontamination over the staged shingle sets
-    val flagged = Decontaminate.contaminationReportOnShingles(
-        staged.select(col("doc_id"), col("sh")), bench, shingleN,
-        minOverlap, minRatio, broadcastBench)
-      .select(col("doc_id")).distinct()
-    val r1 = staged.join(flagged, Seq("doc_id"), "left_anti")
-
-    // stage 2: exact dedup, keep min doc_id per content hash
-    // (digest-keyed window — uniform by construction, skew-proof)
-    val r2 = r1
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("_h")).orderBy(col("doc_id"))))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-
-    // stage 3: near-dup dedup — band the staged signatures (sub-shingle
-    // docs gated exactly like the batch path: no shingles, no banding),
-    // shared bucket-cap pair stage, verify on the staged shingle sets,
-    // CC keep-min representative. The drop-filter anti-joins touch only
-    // the (doc_id, sig) projection; the verify join reads the heavy
-    // shingle column from the UNfiltered staged frame — candidate ids
-    // came from banding over r2, so they already exclude every dropped
-    // document, and the shingle sets never ride through an anti-join
-    // exchange. The verify side is further semi-join-REDUCED to the
-    // candidate population before its two heavy joins
-    // ([[Dedup.jaccardVerifyOnShinglesReduced]]).
-    val banded = Dedup.bandRowsFromSigs(
-      r2.where(size(col("sh")) > 0).select(col("doc_id"), col("sig")),
-      k, bands)
-    // candidates are id pairs — tiny next to the corpus. Checkpointing
-    // them (a) makes the broadcast gate's count free and (b) keeps the
-    // banding/candidate shuffle from re-running under the verify joins
-    // and the CC loop.
-    val cand = Dedup.candidatePairsFromBanded(banded, maxBucket)
-      .localCheckpoint()
-    // checkpoint the candidate-population reduction too: the verify plan
-    // reads its shingle side twice (id1/id2), and materializing the
-    // candidate-sized reduced frame turns two heavy staged-column scans
-    // into one
-    val reduced = Dedup.reduceShingleSetsToPairs(
-        staged.select(col("doc_id"), col("sh")), cand,
-        broadcastIds = 2 * cand.count() <= Dedup.BroadcastIdsGuidance)
-      .localCheckpoint()
-    val pairs = Dedup.jaccardVerifyOnShingles(reduced, cand, minJaccard)
-    val survivors0 =
-      r2.join(Dedup.nearDupDropIds(pairs), Seq("doc_id"), "left_anti")
-    // the store-append tail has THREE more consumers of the survivor
-    // frame (the watermark agg and two staged writes) plus the caller's
-    // own action — checkpoint once so each reads materialized rows
-    // instead of replaying the flagged-join + window + anti-join chain
-    val survivors =
-      if (storePath.isDefined) survivors0.localCheckpoint() else survivors0
-
-    // stage 4: fold the cleaned corpus into the incremental store with
-    // the signatures ALREADY computed in the staged pass (the journaled
-    // staged-commit append; no text, no recompute)
-    storePath.foreach { p =>
-      SignatureStore.appendSignatures(spark, p,
-        Dedup.bandRowsFromSigs(
-          survivors.where(size(col("sh")) > 0)
-            .select(col("doc_id"), col("sig")), k, bands),
-        survivors.select(col("doc_id"), col("sh")),
-        allowReplay = allowStoreReplay)
-    }
-
-    survivors.select(Seq(col("doc_id")) ++ keep: _*)
-  }
-
-  /** The cleaning chain as a full corpus TRANSFORM: input rows minus
-    * contaminated documents, exact-duplicate non-representatives, and
-    * near-duplicate non-representatives. The id-level chain reads corpus
-    * text once; re-attaching the payload for output is one more scan on
-    * the write side (semi-join on id — broadcastable when survivors of a
-    * partition-sized slice are listed, shuffled-hash otherwise). */
-  def clean(
-      docs: DataFrame,
-      bench: DataFrame,
-      k: Int = 32,
-      bands: Int = 8,
-      shingleN: Int = 3,
-      maxBucket: Int = 64,
-      minJaccard: Double = 0.8,
-      minOverlap: Int = 5,
-      minRatio: Double = 0.0,
-      broadcastBench: Boolean = true,
-      storePath: Option[String] = None,
-      allowStoreReplay: Boolean = false
-  ): DataFrame =
-    docs.join(
-      cleanedMeta(docs, bench, Nil, k, bands, shingleN, maxBucket,
-        minJaccard, minOverlap, minRatio, broadcastBench, storePath,
-        allowStoreReplay),
-      Seq("doc_id"), "left_semi")
-
-  // ---- parquet-staged, resumable chain ---------------------------------
-
-  /** [[cleanedMeta]] in its multi-job operational shape: the one-pass
-    * `(doc_id, keep…, _h, sh, sig)` projection is staged to PARQUET under
-    * `stageDir` instead of `localCheckpoint`, and every stage persists
-    * its (id-only, tiny) output with a completion marker, so a crashed
-    * chain RESUMES from the last completed stage without re-scanning
-    * corpus text. At 100 TB the cleaning chain is a multi-hour job; with
-    * `localCheckpoint` staging a failure anywhere re-runs everything and
-    * the staged artifact (≈ corpus-text-sized) lives in executor
-    * memory/spill — here it lives at rest, any stage re-reads only the
-    * columns it needs (the text column does not exist in the staged
-    * table at all), and the whole run is restartable per stage, the same
-    * manifest-resume discipline as
+    * caller's write-side concern ([[cleanResumable]]).
+    *
+    * The one-pass `(doc_id, keep…, _h, sh, sig)` projection is staged to
+    * PARQUET under `stageDir`, and every stage persists its (id-only,
+    * tiny) output with a completion marker, so a crashed chain RESUMES
+    * from the last completed stage without re-scanning corpus text. At
+    * 100 TB the cleaning chain is a multi-hour job; any stage re-reads
+    * only the columns it needs (the text column does not exist in the
+    * staged table at all), the same manifest-resume discipline as
     * [[graft.pipeline.KgPipeline.runResumable]].
     *
     * Layout under `stageDir` (each stage gated on its own parquet
@@ -241,6 +91,13 @@ object CleaningPipeline {
     * stage's parquet write and its manifest append loses that stage's
     * `_manifest` ROW only — the stage itself (gated on `_SUCCESS`, not
     * the manifest) resumes correctly.
+    *
+    * `allowStoreReplay`: a RE-RUN of the same cleaning job after its
+    * store append already committed re-appends the same survivors —
+    * with strict monotone checking the retry refuses on the watermark.
+    * Pass true for an idempotent re-run (the store's windowed replay
+    * gate still refuses genuinely misnumbered ids; duplicate rows are
+    * probe-tolerated and compactable).
     */
   def cleanedMetaResumable(
       docs: DataFrame,
@@ -266,9 +123,11 @@ object CleaningPipeline {
   def manifest(spark: SparkSession, stageDir: String): DataFrame =
     spark.read.parquet(s"$stageDir/_manifest")
 
-  /** [[clean]] over the resumable chain: the full-row corpus transform,
-    * with the id-level work staged/resumed under `stageDir`. The payload
-    * re-attach is the one deliberate second text scan (write-side). */
+  /** The cleaning chain as a full corpus TRANSFORM: input rows minus
+    * contaminated documents, exact-duplicate non-representatives, and
+    * near-duplicate non-representatives, with the id-level work
+    * staged/resumed under `stageDir`. The payload re-attach (a semi-join
+    * on id) is the one deliberate second text scan (write-side). */
   def cleanResumable(
       docs: DataFrame,
       bench: DataFrame,
@@ -492,38 +351,22 @@ object CleaningPipeline {
     def exactDrops = spark.read.parquet(exactDir)
     if (upTo < 3) return None
 
-    // stage 3 — near-dup drops from the staged signatures/shingles. The
+    // stage 3 — near-dup drops through the near-dup core. The
     // drop-filter anti-joins run over the (doc_id, sig) projection only;
-    // the verify join reads the heavy shingle column straight from the
-    // staged table (candidate ids came from banding over the filtered
-    // frame, so they already exclude every dropped document) — the
-    // shingle sets never ride through an anti-join exchange, and the
-    // verify side is semi-join-reduced to the candidate population
-    // before its two heavy joins.
+    // the core reads the heavy shingle column straight from the staged
+    // table (candidate ids came from banding over the filtered frame, so
+    // they already exclude every dropped document) — the shingle sets
+    // never ride through an anti-join exchange, and the core reduces
+    // them to the candidate population before its two verify joins.
     t0 = System.nanoTime()
     if (!hasSuccess(nearDir)) {
       val sigs = staged
         .where(shCount > 0).select(col("doc_id"), col("sig"))
         .join(flagged, Seq("doc_id"), "left_anti")
         .join(exactDrops, Seq("doc_id"), "left_anti")
-      // candidate id pairs checkpointed once: the broadcast gate's count
-      // is then free, and neither the verify joins nor the CC loop
-      // re-runs the banding/candidate shuffle. The candidate-population
-      // reduction is checkpointed too, so the heavy at-rest `sh` column
-      // is scanned ONCE here instead of once per verify join side —
-      // at 20M docs that is ~9.5 GB of core-invariant disk read saved.
-      // lazy checkpoints (r8): the broadcast-gate count materializes the
-      // candidate frame (and the staged scan feeding it) in its one job;
-      // the reduced frame materializes under the verify/CC job — the
-      // former eager checkpoints each spent a dedicated job first
-      val cand = Dedup.candidatePairsFromBanded(
-          Dedup.bandRowsFromSigs(sigs, k, bands), maxBucket)
-        .localCheckpoint(eager = false)
-      val reduced = Dedup.reduceShingleSetsToPairs(
-          staged.select(col("doc_id"), col("sh")), cand,
-          broadcastIds = 2 * cand.count() <= Dedup.BroadcastIdsGuidance)
-        .localCheckpoint(eager = false)
-      val pairs = Dedup.jaccardVerifyOnShingles(reduced, cand, minJaccard)
+      val pairs = Dedup.verifiedPairs(sigs,
+        staged.select(col("doc_id"), col("sh")), k, bands, maxBucket,
+        minJaccard)
       val (df3, rows3) = observed(3, Dedup.nearDupDropIds(pairs))
       df3.write.mode(SaveMode.Overwrite).parquet(nearDir)
       record(3, rows3())

@@ -59,13 +59,6 @@ object Dedup {
   def shingles(text: Column, n: Int): Column =
     shinglesFromToks(split(text, " "), n)
 
-  /** k-permutation MinHash signature over a pre-staged shingle-array
-    * column: h_j(s) = xxhash64(s, j), signature element = min. One narrow
-    * projection; no UDF, no shuffle. */
-  def minhashSignatureFromShingles(sh: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      j => array_min(transform(sh, s => xxhash64(s, j))))
-
   /** Single-pass MinHash signature — one tokenize pass, one hash per
     * shingle, one splitmix64 lane mix per permutation. Backed by the
     * native codegen'd [[graft.functions.MinHashSig]] expression in the
@@ -140,9 +133,9 @@ object Dedup {
       graft.functions.WordShingles(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(text), n))
 
-  /** Distinct word-shingle set per document `(doc_id, sh)` — the exact
-    * representation [[jaccardVerify]] compares (and [[SignatureStore]]
-    * persists so incremental verification never refetches corpus text). */
+  /** Distinct word-shingle set per document `(doc_id, sh)` — the raw-string
+    * representation [[jaccardVerify]] compares. Everything at rest uses
+    * the hashed form ([[distinctShingleHashSets]]). */
   private[ops] def distinctShingleSets(docs: DataFrame, shingleN: Int): DataFrame =
     docs.select(col("doc_id"), distinctShingles(col("text"), shingleN).as("sh"))
 
@@ -161,12 +154,11 @@ object Dedup {
     * on). Both are the class of bound as the documented LSH miss
     * probabilities, so set sizes, intersections, and unions — Jaccard,
     * containment overlaps — computed over hashed sets equal those over
-    * the raw sets,
-    * while at-rest bytes drop ~2.5× (8-byte longs vs ~20-byte UTF-8
-    * 3-gram strings) and every downstream `array_intersect` compares
-    * longs instead of strings. Direct (unstaged) verify paths keep raw
-    * strings: their shingle sets never rest on disk, and exactness is
-    * then unconditional. */
+    * the raw sets, while at-rest bytes drop ~2.5× (8-byte longs vs
+    * ~20-byte UTF-8 3-gram strings). Every production verify (the core
+    * [[verifiedPairs]], [[SignatureStore]]'s probe) runs on hashed sets
+    * and rests on this bound; only the raw-string [[jaccardVerify]], the
+    * specs' reference, compares strings. */
   def hashShingles(sh: Column): Column = transform(sh, s => xxhash64(s))
 
   /** Distinct HASHED word-shingle set per document `(doc_id, sh)` —
@@ -219,12 +211,6 @@ object Dedup {
     pairsFromBuckets(buckets)
   }
 
-  /** Pairs from capped buckets — exposed to BoundedCapSpec so the
-    * retired window-cap twin (which now lives in the spec) shares the
-    * exact pair-emission logic with the production aggregate path. */
-  private[ops] def pairsFromCappedBuckets(buckets: DataFrame): DataFrame =
-    pairsFromBuckets(buckets)
-
   /** `k` smallest values of a long column per group, ascending —
     * [[graft.functions.BoundedMinLongs]] as a Column. */
   private def boundedMinIds(c: Column, k: Int): Column =
@@ -233,7 +219,10 @@ object Dedup {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(c), k)
         .toAggregateExpression())
 
-  private def pairsFromBuckets(buckets: DataFrame): DataFrame =
+  /** Pairs `(id1 < id2)` from capped buckets `(…, ids)`. Package-private
+    * so BoundedCapSpec's window-cap reference shares the exact
+    * pair-emission logic with the production aggregate path. */
+  private[ops] def pairsFromBuckets(buckets: DataFrame): DataFrame =
     buckets
       .select(explode(pairsOf(col("ids"))).as("p"))
       .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
@@ -271,10 +260,11 @@ object Dedup {
       pairs: DataFrame,
       minJaccard: Double = 0.8
   ): DataFrame = {
-    val withSh = shingleSets
     pairs
-      .join(withSh.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(withSh.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
+      .join(shingleSets.select(col("doc_id").as("id1"), col("sh").as("sh1")),
+        Seq("id1"))
+      .join(shingleSets.select(col("doc_id").as("id2"), col("sh").as("sh2")),
+        Seq("id2"))
       .withColumn("jaccard",
         // guard 0/0: two sub-shingle docs have empty shingle sets, and a
         // NaN jaccard would sort ABOVE minJaccard (Spark orders NaN last),
@@ -288,52 +278,24 @@ object Dedup {
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  /** Guidance bound for `broadcastIds` in
-    * [[jaccardVerifyOnShinglesReduced]]: a candidate-id set under ~4M
-    * longs builds a compact broadcast relation (tens of MB); beyond it,
-    * drop the hint and let AQE pick the semi-join strategy from runtime
-    * sizes. Callers with a materialized pair set gate on
-    * `2 * pairs.count() <= BroadcastIdsGuidance` (a free upper bound on
-    * the distinct-id count — no extra distinct job). */
-  val BroadcastIdsGuidance: Long = 4000000L
+  /** A candidate-id set under ~4M longs broadcasts compactly (tens of
+    * MB); beyond it AQE picks the semi-join strategy from runtime sizes.
+    * `2 * |pairs|` bounds the distinct-id count with no extra job. */
+  private val BroadcastIdsGuidance: Long = 4000000L
 
-  /** As [[jaccardVerifyOnShingles]], but the heavy shingle-set table is
-    * first REDUCED to the documents that appear in some candidate pair.
-    *
-    * Why this exists: the verify step joins `pairs` against `shingleSets`
-    * twice, and without reduction BOTH joins exchange the full corpus-
-    * sized shingle arrays — at 20M docs that is 2 × ~17 GB of heavy rows
-    * through the shuffle when only the few percent of documents that LSH
-    * banding actually paired are ever matched. The semi-join keeps the
-    * heavy arrays of exactly those documents (inner joins on ids drawn
-    * from `pairs` make the reduction a semantic no-op — spec-asserted
-    * against the unreduced path), so the heavy exchange is proportional
-    * to the CANDIDATE population, not the corpus. With `broadcastIds`
-    * the reduction itself is a map-side broadcast semi-join and the
-    * corpus-sized table is never shuffled at all; with it off the ids
-    * still cut the two downstream heavy joins to candidate scale. */
-  def jaccardVerifyOnShinglesReduced(
+  /** The shingle-set table REDUCED to the documents of some candidate
+    * pair. Unreduced, both verify joins exchange corpus-sized shingle
+    * arrays (2 × ~17 GB at 20M docs) when only the few percent of paired
+    * documents are ever matched. The verify joins are inner on ids from
+    * `pairs`, so the reduction is a semantic no-op (spec-asserted, both
+    * broadcast settings). With `broadcastIds` it is a map-side broadcast
+    * semi-join and the corpus-sized table is never shuffled. In
+    * production only [[verifiedPairs]] calls it, setting the flag from
+    * its measured candidate count. */
+  private[graft] def reduceShingleSetsToPairs(
       shingleSets: DataFrame,
       pairs: DataFrame,
-      minJaccard: Double = 0.8,
-      broadcastIds: Boolean = true
-  ): DataFrame =
-    jaccardVerifyOnShingles(
-      reduceShingleSetsToPairs(shingleSets, pairs, broadcastIds), pairs,
-      minJaccard)
-
-  /** The candidate-population reduction itself — the reusable half of
-    * [[jaccardVerifyOnShinglesReduced]], for callers that additionally
-    * CHECKPOINT the reduced frame: the verify plan references its
-    * shingle side twice (id1 and id2), so an un-materialized reduction
-    * scans the heavy at-rest `sh` column once per side, while a
-    * checkpointed one reads it exactly once (the reduced frame is
-    * candidate-sized — bounded by 2·|pairs| rows — so materializing it
-    * is cheap next to the corpus-sized scan it saves). */
-  def reduceShingleSetsToPairs(
-      shingleSets: DataFrame,
-      pairs: DataFrame,
-      broadcastIds: Boolean = true
+      broadcastIds: Boolean
   ): DataFrame = {
     val ids = pairs.select(col("id1").as("doc_id"))
       .union(pairs.select(col("id2").as("doc_id")))
@@ -342,30 +304,45 @@ object Dedup {
     shingleSets.join(hinted, Seq("doc_id"), "left_semi")
   }
 
+  /** THE near-dup candidate→verify core, behind [[nearDupPairsStaged]]
+    * and the cleaning chain's stage 3 ([[CleaningPipeline]]): band the
+    * `(doc_id, sig)` signatures into capped candidate pairs, reduce the
+    * `(doc_id, sh)` shingle sets to the candidates, verify Jaccard ≥
+    * `minJaccard`. Callers gate sub-shingle docs out of `sigs`.
+    *
+    * Both intermediate frames are lazy `localCheckpoint`s: the candidate
+    * pairs materialize under the broadcast gate's `count()` — one Spark
+    * job run when this is called — and are not re-derived by the verify
+    * joins or a downstream CC loop; the reduced frame materializes under
+    * its first consumer, so the verify's two shingle sides scan the
+    * heavy `sh` column once. */
+  private[ops] def verifiedPairs(
+      sigs: DataFrame,
+      shingleSets: DataFrame,
+      k: Int,
+      bands: Int,
+      maxBucket: Int,
+      minJaccard: Double
+  ): DataFrame = {
+    val cand = candidatePairsFromBanded(bandRowsFromSigs(sigs, k, bands),
+        maxBucket)
+      .localCheckpoint(eager = false)
+    val reduced = reduceShingleSetsToPairs(shingleSets, cand,
+        broadcastIds = 2 * cand.count() <= BroadcastIdsGuidance)
+      .localCheckpoint(eager = false)
+    jaccardVerifyOnShingles(reduced, cand, minJaccard)
+  }
+
   /** Verified near-dup pairs `(id1, id2, jaccard)` over ONE staged text
-    * pass — the composed candidate→verify chain of [[nearDupGroups]] /
-    * [[nearDupDedup]] in the cleaning pipeline's shape
-    * ([[CleaningPipeline.cleanedMeta]], stage 3): per-document content
-    * signature AND distinct hashed shingle set are computed in a single
-    * codegen'd projection and checkpointed, banding reads only `sig`,
-    * and verification reads the `sh` column semi-join-REDUCED to the
-    * candidate population.
+    * pass: the hashed distinct shingle set and the MinHash signature
+    * come from a single codegen'd projection (lazily checkpointed), then
+    * [[verifiedPairs]] bands `sig` and verifies on `sh`. The raw-string
+    * composition ([[lshCandidatePairs]] + [[jaccardVerify]]) reads
+    * `text` three times and exchanges corpus-sized shingle arrays; here
+    * text is read once. OpsSpec asserts equal pairs and jaccards.
     *
-    * Why (guide §8 / §2.3): the previous composition re-derived its
-    * per-document features from `text` three times — the MinHash pass in
-    * [[bandedSignatures]] plus one shingle pass per side of
-    * [[jaccardVerify]]'s double join — so at corpus scale the dominant
-    * cost (the text scan + shingle expression) was paid 3×, and the two
-    * verify joins exchanged corpus-sized shingle arrays. Here text is
-    * read once; everything downstream exchanges ids, signatures, and
-    * candidate-bounded shingle sets. Shingle sets ride at rest in the
-    * hashed representation ([[hashShingles]] — cardinality arithmetic,
-    * hence Jaccard, is preserved; see its pairwise collision bound), the
-    * same representation the oracle-green kg19 chain stages.
-    *
-    * All checkpoints are lazy: the broadcast-gate count materializes
-    * staged+candidates in one job, and the reduced frame materializes
-    * under its first consumer — no dedicated materialization jobs. */
+    * Runs one Spark job when called: the core's candidate count, which
+    * also materializes the staged frame. */
   def nearDupPairsStaged(
       docs: DataFrame,
       k: Int = 32,
@@ -380,15 +357,9 @@ object Dedup {
         hashShingles(distinctShingles(col("text"), shingleN)).as("sh"),
         minhashSignature(col("text"), k, shingleN).as("sig"))
       .localCheckpoint(eager = false)
-    val cand = candidatePairsFromBanded(
-        bandRowsFromSigs(staged.select(col("doc_id"), col("sig")), k, bands),
-        maxBucket)
-      .localCheckpoint(eager = false)
-    val reduced = reduceShingleSetsToPairs(
-        staged.select(col("doc_id"), col("sh")), cand,
-        broadcastIds = 2 * cand.count() <= BroadcastIdsGuidance)
-      .localCheckpoint(eager = false)
-    jaccardVerifyOnShingles(reduced, cand, minJaccard)
+    verifiedPairs(staged.select(col("doc_id"), col("sig")),
+      staged.select(col("doc_id"), col("sh")), k, bands, maxBucket,
+      minJaccard)
   }
 
   // ---- near-dup clusters (pairs → components → representative) --------
@@ -420,6 +391,10 @@ object Dedup {
     * Jaccard verification → connected components → keep-min
     * representative. Output `(doc_id, cluster_rep, n_members)`, one row
     * per document that belongs to a near-dup cluster (singletons omitted).
+    *
+    * Not a pure plan builder: [[nearDupPairsStaged]] runs its one
+    * candidate-count job when this is called, and the connected-components
+    * step runs its own solve jobs.
     */
   def nearDupGroups(
       docs: DataFrame,
@@ -449,6 +424,10 @@ object Dedup {
     * except its representative (min doc_id per component); singletons pass
     * through. The anti-join's right side is `(doc_id)` only — id-scale,
     * broadcastable when the duplicate fraction is small.
+    *
+    * Not a pure plan builder: as [[nearDupGroups]], the candidate-count
+    * job of [[nearDupPairsStaged]] and the connected-components jobs run
+    * when this is called.
     */
   def nearDupDedup(
       docs: DataFrame,

@@ -30,12 +30,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Exactness: the store and the batch derive band keys through the SAME
   * signature ([[Dedup.bandedSignatures]]), the bucket cap + pair stage is
   * the SAME code over the merged old∪batch membership
-  * ([[Dedup.candidatePairsFromBanded]]), and verification uses the SAME
-  * shingle representation ([[Dedup.distinctShingleSets]]) — so
-  * `probe(store, batch)` emits exactly the batch-touching subset of what
-  * the batch path `jaccardVerify(lshCandidatePairs(old ∪ batch))` emits,
+  * ([[Dedup.candidatePairsFromBanded]]), and verification is the SAME
+  * [[Dedup.jaccardVerifyOnShingles]] over hashed shingle sets
+  * ([[Dedup.distinctShingleHashSets]]) — so `probe(store, batch)` emits
+  * the batch-touching subset of what the raw-string batch path
+  * `jaccardVerify(lshCandidatePairs(old ∪ batch))` emits, exactly up to
+  * the pairwise hash-collision bound of [[Dedup.hashShingles]],
   * including on degenerate buckets where the cap bites (spec-asserted on
-  * planted fixtures).
+  * planted fixtures). Its candidate stage is its own by design: it runs
+  * over the merged old ∪ batch bucket membership, not one corpus.
   *
   * Monotone-ingest contract (ENFORCED): batch doc_ids must be strictly
   * larger than every id already in the store. Keep-min-representative

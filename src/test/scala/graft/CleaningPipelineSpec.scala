@@ -6,15 +6,19 @@ import org.apache.spark.sql.functions._
 import graft.ops.{CleaningPipeline, SignatureStore}
 
 /** The composed cleaning chain: stage semantics on a planted fixture,
-  * the store-append tail, and the one-text-pass guarantee (filesystem
-  * read statistics — the staged artifacts live in the block manager, so
-  * file-scheme bytes are exactly the parquet scans). */
+  * the store-append tail, resume after a kill, and the one-text-pass
+  * guarantee (corpus file opens through a counting filesystem — the
+  * staged artifacts live under a plain stage dir, so only corpus reads
+  * are counted). */
 class CleaningPipelineSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
   private def words(p: String, n: Int = 30) =
     (1 to n).map(t => s"${p}_$t").mkString(" ")
+
+  private def freshStage() =
+    java.nio.file.Files.createTempDirectory("graft_clean_stage").toString
 
   test("composed chain: contaminated, exact-dup, and near-dup docs drop; store gets survivors") {
     import spark.implicits._
@@ -39,17 +43,18 @@ class CleaningPipelineSpec extends AnyFunSuite {
       Seq((0L, words("seed"))).toDF("doc_id", "text"), store,
       nPrefixes = 8, k = 32, bands = 16, shingleN = 3)
 
-    val kept = CleaningPipeline.cleanedMeta(docs, bench,
-      keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
-      maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
+    val kept = CleaningPipeline.cleanedMetaResumable(docs, bench,
+      freshStage(), keepCols = Seq("lang"), k = 32, bands = 16,
+      shingleN = 3, maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
       storePath = Some(store))
     assert(kept.columns.toSeq == Seq("doc_id", "lang"))
     val keptIds = kept.collect().map(_.getLong(0)).toSet
     assert(keptIds == Set(3L, 6L))
 
     // the full-row transform agrees
-    val full = CleaningPipeline.clean(docs, bench, k = 32, bands = 16,
-      shingleN = 3, maxBucket = 64, minJaccard = 0.8, minOverlap = 5)
+    val full = CleaningPipeline.cleanResumable(docs, bench, freshStage(),
+      k = 32, bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
+      minOverlap = 5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(full == Set(3L, 6L))
 
@@ -73,13 +78,14 @@ class CleaningPipelineSpec extends AnyFunSuite {
     // (misnumbered-source protection), and succeeds idempotently as a
     // declared replay — survivors unchanged, the store still answers
     intercept[IllegalArgumentException] {
-      CleaningPipeline.cleanedMeta(docs, bench, keepCols = Seq("lang"),
-        k = 32, bands = 16, shingleN = 3, maxBucket = 64,
-        minJaccard = 0.8, minOverlap = 5, storePath = Some(store)).count()
+      CleaningPipeline.cleanedMetaResumable(docs, bench, freshStage(),
+        keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
+        maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
+        storePath = Some(store)).count()
     }
-    val rerun = CleaningPipeline.cleanedMeta(docs, bench,
-      keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
-      maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
+    val rerun = CleaningPipeline.cleanedMetaResumable(docs, bench,
+      freshStage(), keepCols = Seq("lang"), k = 32, bands = 16,
+      shingleN = 3, maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
       storePath = Some(store), allowStoreReplay = true)
       .collect().map(_.getLong(0)).toSet
     assert(rerun == keptIds)
@@ -97,8 +103,8 @@ class CleaningPipelineSpec extends AnyFunSuite {
     val docs = Seq((1L, words("a"))).toDF("doc_id", "text")
     val bench = Seq((900L, words("bb"))).toDF("bench_id", "text")
     val e = intercept[IllegalArgumentException] {
-      CleaningPipeline.cleanedMeta(docs, bench, Nil, k = 32, bands = 16,
-        shingleN = 3, storePath = Some(store))
+      CleaningPipeline.cleanedMetaResumable(docs, bench, freshStage(), Nil,
+        k = 32, bands = 16, shingleN = 3, storePath = Some(store))
     }
     assert(e.getMessage.contains("bands"))
   }
@@ -145,9 +151,9 @@ class CleaningPipelineSpec extends AnyFunSuite {
       val (maxBucket, minOverlap) =
         (if (rnd.nextBoolean()) 2 else 64, 1 + rnd.nextInt(4))
 
-      val composed = CleaningPipeline.cleanedMeta(docs, bench, Nil,
-        k = 32, bands = 16, shingleN = 3, maxBucket = maxBucket,
-        minJaccard = 0.8, minOverlap = minOverlap)
+      val composed = CleaningPipeline.cleanedMetaResumable(docs, bench,
+        freshStage(), Nil, k = 32, bands = 16, shingleN = 3,
+        maxBucket = maxBucket, minJaccard = 0.8, minOverlap = minOverlap)
         .collect().map(_.getLong(0)).toSet
       val independent = graft.ops.Dedup.nearDupDedup(
         graft.ops.Dedup.exactDedup(
@@ -206,10 +212,6 @@ class CleaningPipelineSpec extends AnyFunSuite {
       storePath = Some(store))
     assert(kept.columns.toSeq == Seq("doc_id", "lang"))
     assert(kept.collect().map(_.getLong(0)).toSet == Set(3L, 6L))
-    // ...and it matches the one-job localCheckpoint path exactly
-    assert(CleaningPipeline.cleanedMeta(docs, bench, Nil, k = 32,
-      bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
-      minOverlap = 5).collect().map(_.getLong(0)).toSet == Set(3L, 6L))
     // per-stage lineage is queryable
     assert(CleaningPipeline.manifest(spark, stage)
       .select("stage").collect().map(_.getInt(0)).toSet == Set(0, 1, 2, 3, 4))
@@ -246,7 +248,7 @@ class CleaningPipelineSpec extends AnyFunSuite {
       k = 32, bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
       minOverlap = 5, storePath = Some(store2)).count()
     assert(spark.read.parquet(s"$store2/shingles").count() == 2L)
-    // the appended store answers probes like the non-resumable path's
+    // the appended store answers probes like an uninterrupted run's
     val probe6 = Seq((100L, words("u") + " tail")).toDF("doc_id", "text")
     assert(SignatureStore.probe(spark, store2, probe6).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((6L, 100L)))
@@ -337,10 +339,10 @@ class CleaningPipelineSpec extends AnyFunSuite {
     assert(oneScanOpens >= 8, s"calibration degenerate: $oneScanOpens")
 
     graft.tools.CountingLocalFs.reset()
-    val n = CleaningPipeline.cleanedMeta(
+    val n = CleaningPipeline.cleanedMetaResumable(
       spark.read.parquet(s"cntfs:$dir/docs"),
       spark.read.parquet(s"$dir/bench"), // bench on plain file:// —
-      Nil,                               // only corpus opens are counted
+      freshStage(), Nil,                 // only corpus opens are counted
       k = 32, bands = 16, shingleN = 3, maxBucket = 64).count()
     val composedOpens = graft.tools.CountingLocalFs.parquetOpens()
     assert(n > 2000 && n < 3000, s"fixture sanity: $n survivors")

@@ -42,13 +42,17 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(r.getDouble(2) - 14.0 / 15.0) < 1e-12)
   }
 
-  test("reduced jaccard verify ≡ unreduced, both broadcast settings, seeded random corpora") {
+  test("near-dup core ≡ raw-string verify; reduction is a no-op, seeded corpora") {
     import spark.implicits._
-    // the semi-join reduction must be a semantic no-op: the verify joins
-    // are INNER on ids drawn from the pair set, so restricting the
-    // shingle table to pair-participating docs changes nothing. Checked
-    // on mutation-heavy random corpora where candidates are plentiful,
-    // with the broadcast hint both on and off.
+    // nearDupPairsStaged (one text pass, hashed shingle sets, the
+    // reduced + checkpointed core) must emit exactly the pairs AND
+    // jaccards of the raw-string composition jaccardVerify ∘
+    // lshCandidatePairs, on both sides of the threshold and with a bucket
+    // cap that sometimes bites. The semi-join reduction alone must be a
+    // semantic no-op too: the verify joins are INNER on ids drawn from
+    // the pair set, so restricting the shingle table to pair-participating
+    // docs changes nothing — checked with the broadcast hint on and off.
+    var capBit = false
     (1 to 3).foreach { seed =>
       val rnd = new scala.util.Random(700 + seed)
       val vocab = (0 until 25).map(i => s"v$i")
@@ -66,19 +70,29 @@ class OpsSpec extends AnyFunSuite {
       }
       val d = (0 until 30 + rnd.nextInt(30)).map(i => (i.toLong, nextText()))
         .toDF("doc_id", "text")
+      val maxBucket = if (rnd.nextBoolean()) 2 else 64
       val sets = d.select(col("doc_id"),
         Dedup.hashShingles(Dedup.distinctShingles(col("text"), 3)).as("sh"))
       val pairs = Dedup.lshCandidatePairs(d, k = 32, bands = 16,
-        shingleN = 3, maxBucket = if (rnd.nextBoolean()) 2 else 64)
+        shingleN = 3, maxBucket = maxBucket)
+      capBit ||= pairs.count() < Dedup.lshCandidatePairs(d, k = 32,
+        bands = 16, shingleN = 3, maxBucket = 1000).count()
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      Seq(0.5, 0.8).foreach { t =>
+        val raw = rows(Dedup.jaccardVerify(d, pairs, 3, t))
+        assert(raw.nonEmpty, s"seed=$seed t=$t generated no verified pairs")
+        assert(rows(Dedup.nearDupPairsStaged(d, 32, 16, 3, maxBucket, t)) ==
+          raw, s"seed=$seed t=$t maxBucket=$maxBucket staged core")
+      }
       val unreduced = rows(Dedup.jaccardVerifyOnShingles(sets, pairs, 0.8))
-      assert(unreduced.nonEmpty, s"seed=$seed generated no verified pairs")
-      assert(rows(Dedup.jaccardVerifyOnShinglesReduced(
-        sets, pairs, 0.8, broadcastIds = true)) == unreduced, s"seed=$seed bcast")
-      assert(rows(Dedup.jaccardVerifyOnShinglesReduced(
-        sets, pairs, 0.8, broadcastIds = false)) == unreduced, s"seed=$seed plain")
+      Seq(true, false).foreach { bc =>
+        assert(rows(Dedup.jaccardVerifyOnShingles(
+          Dedup.reduceShingleSetsToPairs(sets, pairs, broadcastIds = bc),
+          pairs, 0.8)) == unreduced, s"seed=$seed broadcastIds=$bc")
+      }
     }
+    assert(capBit, "no seed made the bucket cap bite")
   }
 
   test("minhash LSH: a degenerate bucket is capped pre-aggregation, pairs bounded") {

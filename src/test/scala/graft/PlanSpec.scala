@@ -142,7 +142,7 @@ class PlanSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(dir)
     val docs = spark.read.parquet(dir)
-    // THE text pass of CleaningPipeline.cleanedMeta: hash + shingles +
+    // THE text pass of the cleaning chain (stage 0): hash + shingles +
     // signature in one projection — it must stay inside WholeStageCodegen
     // (the two native expressions codegen) and column-prune the scan
     val staged = docs.select(col("doc_id"),

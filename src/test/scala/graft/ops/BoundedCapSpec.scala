@@ -40,7 +40,7 @@ class BoundedCapSpec extends AnyFunSuite {
       .groupBy(col("band"), col("bh"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .where(size(col("ids")) >= 2)
-    Dedup.pairsFromCappedBuckets(buckets)
+    Dedup.pairsFromBuckets(buckets)
   }
 
   test("BoundedMinHeap keeps the k smallest values, duplicates preserved") {
