@@ -201,54 +201,27 @@ object ConnectedComponents {
     * per-call observability for capacity math (the loop's shuffle count is
     * rounds × per-round stages) that is safe under concurrent runs.
     *
-    * @param onRound per-round observer `(round, changedLabels, seconds)`,
-    *                called after each round's convergence count — the hook
-    *                CcBench's `rounds` diagnostic mode uses to attribute
-    *                convergence-tail cost (BENCH.md round 7: rounds 17-21
-    *                of the 20M ladder slowed 19→121 s while rounds 1-15
-    *                held ~17 s). Default no-op; must not touch the loop's
-    *                DataFrames.
-    * @param hops    label-indirection hops per round: hop k replaces each
-    *                node's pointer with the label table read through it
-    *                (`component := label^k(component)`). Each extra hop
-    *                costs one label-sized join in the same round job
-    *                (lookup side exchange-free against the
-    *                node-partitioned checkpoint) and pays off only if it
-    *                cuts the ROUND count. Output is hop-invariant (every
-    *                hop is a monotone step toward the same min-label
-    *                fixpoint, and `changed` compares against the
-    *                pre-round labels either way). MEASURED NEGATIVE at
-    *                the default (BENCH.md round 7, 20M/32c): hops=2
-    *                finished the planted chains 3 rounds sooner but the
-    *                TOTAL round count stayed 21 — on random-id graphs
-    *                the supercritical component's tail is bounded by the
-    *                min-id node's eccentricity (label propagation moves
-    *                one edge-hop per round; compression only shortcuts
-    *                pointer chains that happen to align with geometry,
-    *                which random ids don't) — so the extra join was pure
-    *                cost (455.8 vs 333.5 s). Chains compress in
-    *                O(log d) precisely because their ids are monotone
-    *                along the path. Leave at 1 unless the graph's ids
-    *                correlate with its geometry.
-    */
-  /** @param smallSolve force (Some(true)) or suppress (Some(false)) the
+    * @param smallSolve force (Some(true)) or suppress (Some(false)) the
     *                single-task union-find fast path; None (default)
     *                auto-gates on the symmetrized table's materialized
     *                partition count ([[SmallSolveMaxPartitions]]) — and
     *                only when `maxIter` is at least the default 30, so a
     *                caller asking for BOUNDED-round (possibly
-    *                unconverged) labels always gets the loop. At ≤64 MB
-    *                of sym rows the graph's diameter is ≤4M, where
-    *                pointer doubling converges in ≤ ~23 < 30 rounds, so
-    *                the fast path's fully-converged output equals the
-    *                loop's exactly (spec-asserted on chain/star/planted
-    *                shapes). */
+    *                unconverged) labels always gets the loop. The fast
+    *                path returns FULLY CONVERGED min labels and reports
+    *                one round; they equal the loop's labels only when the
+    *                loop converges within `maxIter`. Pointer doubling
+    *                converges in O(log d) rounds where ids run monotone
+    *                along paths, but where ids do not follow the graph's
+    *                geometry propagation advances one edge-hop per round,
+    *                so a long path can leave the loop unconverged at 30
+    *                rounds while the fast path is converged (equality is
+    *                spec-asserted on chain/star/planted shapes that
+    *                converge).
+    */
   def runCounted(edges: DataFrame, maxIter: Int = 30,
-      onRound: (Int, Long, Double) => Unit = (_, _, _) => (),
-      hops: Int = 1,
       smallSolve: Option[Boolean] = None)
       : (DataFrame, Int) = {
-    require(hops >= 1, s"hops must be >= 1, got $hops")
     // ALL loop checkpoints use the LEAN wrapper (no originStats/
     // originConstraints): the default wrapper carries the pre-checkpoint
     // plan's size estimate, which the size-only visitor MULTIPLIES
@@ -257,8 +230,9 @@ object ConnectedComponents {
     // arithmetic in every stats visit. Measured on the 20M CcBench:
     // rounds 17-21 slowed 19→121 s with 97 s of the last round in
     // SizeInBytesOnlyStatsPlanVisitor on the DRIVER, data-independently
-    // (same blow-up on 1k rows — tools/CcPlanProbe; regression-specced
-    // structurally in EvalGraphSpec via carriedSizeInBytes).
+    // (the same blow-up reproduces on 1k rows; regression-specced
+    // structurally by EvalGraphSpec's "CC loop checkpoints carry no
+    // compounding size estimate" via carriedSizeInBytes).
     import org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointLeanStats
     val sym = symmetrized(edges)
 
@@ -273,7 +247,6 @@ object ConnectedComponents {
           .checkpointNumPartitions(sym)
           .exists(_ <= SmallSolveMaxPartitions))
     if (useSmall) {
-      val t0 = System.nanoTime()
       val spark = edges.sparkSession
       import spark.implicits._
       val solved = sym.select(col("a"), col("b")).as[(Long, Long)]
@@ -285,7 +258,6 @@ object ConnectedComponents {
       labels.count()
       org.apache.spark.sql.graftbridge.CheckpointBridge
         .unpersistLocalCheckpoint(sym)
-      onRound(1, 0L, (System.nanoTime() - t0) / 1e9)
       return (labels, 1)
     }
 
@@ -313,22 +285,13 @@ object ConnectedComponents {
     // round's predecessor (it used to survive the whole session).
     var prevState: Option[DataFrame] = Some(labels)
     while (iter < maxIter && !converged) {
-      val roundT0 = System.nanoTime()
       // pointer doubling FIRST, against the checkpointed label table (both
       // branches of the self-join read materialized data, so no extra
-      // materialization pass is needed): component := label(component),
-      // then `hops - 1` further reads through the same table — each a
-      // label-sized join whose lookup side is exchange-free (the rename
-      // keeps the node-partitioned checkpoint's layout)
-      var compressed = labels
+      // materialization pass is needed): component := label(component)
+      val compressed = labels
         .join(labels.select(col("node").as("component"),
           col("component").as("_cc2")), Seq("component"), "left")
         .select(col("node"), col("component").as("_old"),
-          coalesce(col("_cc2"), col("component")).as("component"))
-      for (_ <- 2 to hops) compressed = compressed
-        .join(labels.select(col("node").as("component"),
-          col("component").as("_cc2")), Seq("component"), "left")
-        .select(col("node"), col("_old"),
           coalesce(col("_cc2"), col("component")).as("component"))
       // each node's best incoming proposal: min label among its neighbors
       val proposals = sym
@@ -354,7 +317,6 @@ object ConnectedComponents {
       labels = wide.select(col("node"), col("component"))
       converged = changed == 0
       iter += 1
-      onRound(iter, changed, (System.nanoTime() - roundT0) / 1e9)
     }
     // the loop has run its last propagation join — `sym` has no future
     // reader (the terminal compaction below reads only the last wide)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.KgPipeline
+
 /** The composed corpus-cleaning pipeline a training-data user actually
   * runs — `decontaminate → exact dedup → near-dup dedup → (optionally)
   * SignatureStore.append(survivors)` — as ONE chain over a single staged
@@ -257,17 +259,10 @@ object CleaningPipeline {
     val manifestDir = s"$stageDir/_manifest"
 
     var t0 = System.nanoTime()
-    // r8 (guide §1.4/§5): the manifest row count is OBSERVED on the
-    // stage's own write job (`Dataset.observe` — metrics accumulate
-    // during the write) instead of re-reading the freshly written
-    // parquet. The former read-back count was one extra job per stage —
-    // and for stage 0 a full scan of the corpus-sized staged artifact
-    // just to count its rows.
-    def observed(stage: Int, df: DataFrame): (DataFrame, () => Long) = {
-      val obs = org.apache.spark.sql.Observation(s"stage$stage rows")
-      (df.observe(obs, count(lit(1)).as("rows")),
-        () => obs.get("rows").asInstanceOf[Long])
-    }
+    // each manifest row count is OBSERVED on the stage's own write job
+    // (`KgPipeline.observedRows`), never read back: a read-back count is
+    // one extra job per stage — and for stage 0 a full scan of the
+    // corpus-sized staged artifact just to count its rows.
     def record(stage: Int, rows: Long): Unit = {
       import spark.implicits._
       Seq((stage, rows, (System.nanoTime() - t0) / 1000000L))
@@ -280,13 +275,14 @@ object CleaningPipeline {
     // count as its own tiny column so stage 3's sub-shingle gate never
     // has to decode the heavy `sh` array just to take its size.
     if (!hasSuccess(stagedDir)) {
-      val (df0, rows0) = observed(0, docs.select(
+      val (df0, rows0) = KgPipeline.observedRows(docs.select(
           Seq(col("doc_id")) ++ stagedKeep.map(col) ++ Seq(
             md5(col("text").cast("binary")).as("_h"),
             Dedup.hashShingles(
               Dedup.distinctShingles(col("text"), shingleN)).as("sh"),
             Dedup.minhashSignature(col("text"), k, shingleN).as("sig")): _*)
-        .withColumn("nsh", size(col("sh"))))
+        .withColumn("nsh", size(col("sh"))),
+        "stage0 rows")
       df0
         // the staged table's codec is DELIBERATELY not pinned: an
         // un-optioned parquet write follows the session's standard
@@ -324,11 +320,12 @@ object CleaningPipeline {
     // stage 1 — decontamination flags over the staged shingle sets
     t0 = System.nanoTime()
     if (!hasSuccess(flaggedDir)) {
-      val (df1, rows1) = observed(1,
+      val (df1, rows1) = KgPipeline.observedRows(
         Decontaminate.contaminationReportOnShingles(
             staged.select(col("doc_id"), col("sh")), bench, shingleN,
             minOverlap, minRatio, broadcastBench)
-          .select(col("doc_id")).distinct())
+          .select(col("doc_id")).distinct(),
+        "stage1 rows")
       df1.write.mode(SaveMode.Overwrite).parquet(flaggedDir)
       record(1, rows1())
     }
@@ -338,13 +335,14 @@ object CleaningPipeline {
     // stage 2 — exact-duplicate drops (digest-keyed window, hash+id only)
     t0 = System.nanoTime()
     if (!hasSuccess(exactDir)) {
-      val (df2, rows2) = observed(2,
+      val (df2, rows2) = KgPipeline.observedRows(
         staged.select(col("doc_id"), col("_h"))
           .join(flagged, Seq("doc_id"), "left_anti")
           .withColumn("_rn", row_number().over(
             Window.partitionBy(col("_h")).orderBy(col("doc_id"))))
           .where(col("_rn") > 1)
-          .select(col("doc_id")))
+          .select(col("doc_id")),
+        "stage2 rows")
       df2.write.mode(SaveMode.Overwrite).parquet(exactDir)
       record(2, rows2())
     }
@@ -367,7 +365,8 @@ object CleaningPipeline {
       val pairs = Dedup.verifiedPairs(sigs,
         staged.select(col("doc_id"), col("sh")), k, bands, maxBucket,
         minJaccard)
-      val (df3, rows3) = observed(3, Dedup.nearDupDropIds(pairs))
+      val (df3, rows3) =
+        KgPipeline.observedRows(Dedup.nearDupDropIds(pairs), "stage3 rows")
       df3.write.mode(SaveMode.Overwrite).parquet(nearDir)
       record(3, rows3())
     }

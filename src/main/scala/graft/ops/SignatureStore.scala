@@ -249,8 +249,9 @@ object SignatureStore {
   /** As [[probe]], additionally returning the batch's checkpointed band
     * keys and shingle sets — callers that go on to [[appendSignatures]]
     * (the streaming loop) reuse them instead of paying the signature
-    * expression a second time over the survivors. */
-  /** `allowReplay` relaxes the monotone-id refusal for an AT-LEAST-ONCE
+    * expression a second time over the survivors.
+    *
+    * `allowReplay` relaxes the monotone-id refusal for an AT-LEAST-ONCE
     * replay of a batch already folded into the store (the streaming
     * loop's crash-retry path). The relaxation is a WINDOW, not an
     * off-switch: it accepts the batch only when its ids sit ENTIRELY at
@@ -403,13 +404,15 @@ object SignatureStore {
     * included — stays untouched and probeable; a journal records the
     * commit plan; then the commit window (metadata delete → renames →
     * metadata rewrite) is pure fast file moves, replayable by
-    * [[recover]] after a crash. */
-  /** `advanceWatermarkTo`: a caller appending a FILTERED slice of a batch
+    * [[recover]] after a crash.
+    *
+    * `advanceWatermarkTo`: a caller appending a FILTERED slice of a batch
     * (the streaming loop appends survivors only) passes the FULL batch's
     * max id here, so a crash-replay of that batch — whose max may exceed
     * the max surviving id — still falls entirely at or below the
-    * watermark and is recognized as a replay rather than refused. */
-  /** `commitTag`: optional caller-chosen id persisted into the store
+    * watermark and is recognized as a replay rather than refused.
+    *
+    * `commitTag`: optional caller-chosen id persisted into the store
     * metadata WITH the commit (see [[metaJson]]) — readable back via
     * `readMeta(...).lastCommitTag` as positive proof that this specific
     * append's commit completed. */

@@ -118,18 +118,15 @@ object KgPipeline {
     // the authoritative bucket count is what the data says, not the
     // caller's argument: resuming with a smaller `buckets` than the run
     // that staged/started would silently never process the tail buckets
-    val effectiveBuckets = {
-      val staged = bucketed.select(max(col("_bucket"))).head()
-      val maxSeen = if (staged.isNullAt(0)) -1 else staged.getInt(0)
-      require(maxSeen < buckets,
-        s"input carries buckets up to $maxSeen but runResumable was called " +
-          s"with buckets=$buckets — those buckets would silently never be " +
-          "processed; resume with the original bucket count")
-      buckets
-    }
+    val staged = bucketed.select(max(col("_bucket"))).head()
+    val maxSeen = if (staged.isNullAt(0)) -1 else staged.getInt(0)
+    require(maxSeen < buckets,
+      s"input carries buckets up to $maxSeen but runResumable was called " +
+        s"with buckets=$buckets — those buckets would silently never be " +
+        "processed; resume with the original bucket count")
 
     val mentionSchema = Encoders.product[Mention].schema
-    (0 until effectiveBuckets).filterNot(done).map { b =>
+    (0 until buckets).filterNot(done).map { b =>
       val t0 = System.nanoTime()
       val mentionsDir = s"$outDir/mentions/bucket=$b"
       val (ms, articlesIn) = bucketMentions(bucketed, b, scorer)
@@ -167,8 +164,9 @@ object KgPipeline {
   }
 
   /** `df` with a row count observed on whatever job runs it; the returned
-    * function reads the count after that job (0 for an empty input). */
-  private def observedRows(df: DataFrame, name: String): (DataFrame, () => Long) = {
+    * function reads the count after that job (0 for an empty input).
+    * Shared with [[graft.ops.CleaningPipeline]]'s per-stage manifest. */
+  private[graft] def observedRows(df: DataFrame, name: String): (DataFrame, () => Long) = {
     val obs = Observation(name)
     (df.observe(obs, count(lit(1)).as("rows")),
       () => obs.get("rows").asInstanceOf[Long])

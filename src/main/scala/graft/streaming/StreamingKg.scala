@@ -141,8 +141,9 @@ object StreamingKg {
     * ENFORCES this against its persisted max-ingested-id watermark and
     * fails the batch loudly on violation, because a smaller batch id
     * would silently make a stored near-dup the non-representative and
-    * retain both documents. */
-  /** `compactEvery`: run a threshold-gated store compaction
+    * retain both documents.
+    *
+    * `compactEvery`: run a threshold-gated store compaction
     * ([[graft.ops.SignatureStore.compact]] with `maxFilesPerPartition`)
     * every that-many micro-batches — the maintenance cadence that keeps
     * the store's file count bounded over an unbounded append loop (each

@@ -39,11 +39,11 @@ import graft.ops.CleaningPipeline
   * so the reported throughput is a slight underestimate — the honest
   * price of counting.)
   *
-  * `ladder` mode runs the chain PAIRED at two parallelism levels
-  * (default local[8] vs local[32]; fresh child JVM per measurement with
-  * a same-shape warm-up inside, lo/hi back-to-back per round — the
-  * ScalingBench protocol verbatim) for the cleaning chain's own
-  * two-cluster-size scaling evidence. All results append to BENCH.md.
+  * `resume` mode kills the chain at the stage-2/3 boundary and resumes it
+  * in a second JVM (see [[resumeMain]]). Both modes append to BENCH.md.
+  *
+  * `sbt -batch "runMain graft.tools.CleaningBench [nDocs]"` or
+  * `"runMain graft.tools.CleaningBench resume [nDocs] [cores]"`
   */
 object CleaningBench {
 
@@ -91,7 +91,9 @@ object CleaningBench {
     spark.range(0, n, 1, 128).map(i => (i, textOf(Seed, i)))
   }
 
-  private def corpusDir(n: Long) = s"/tmp/graft_cleaning_corpus_$n"
+  private def corpusDir(n: Long) =
+    Paths.get(System.getProperty("java.io.tmpdir"), s"graft_cleaning_corpus_$n")
+      .toString
 
   /** Corpus + bench tables at rest ONCE (untimed) — the chain's input is
     * a table. */
@@ -118,13 +120,10 @@ object CleaningBench {
     * chain's widest shuffle is the banding/candidate exchange
     * (`bands` × nDocs ≈ 16·nDocs rows, ~25 B each), and a ~100 MB/
     * reducer target keeps per-task sort runs inside execution memory
-    * at EITHER core count under the fixed 8 GB heap (measured at 20M/
-    * 32 cores: stage 3 234.8 s at 64 partitions → 188.8 s at 128 —
-    * the 32-thread run has 4× less execution memory per task than the
-    * 8-thread run, so under-partitioning punishes exactly the hi
-    * ladder level). Same value at both ladder levels — partition count
-    * is a property of the data, as on a real cluster; AQE coalesces
-    * any excess. GRAFT_SHUFFLE_PARTITIONS overrides for probes. */
+    * under the fixed 8 GB heap (measured at 20M/32 cores: stage 3
+    * 234.8 s at 64 partitions → 188.8 s at 128). Partition count is a
+    * property of the data, as on a real cluster; AQE coalesces any
+    * excess. GRAFT_SHUFFLE_PARTITIONS overrides for probes. */
   private def shufflePartitionsFor(cores: Int, nDocs: Long): Int =
     sys.env.get("GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(
       math.max(math.max(cores * 2, 16),
@@ -163,7 +162,7 @@ object CleaningBench {
   }
 
   /** Recursive delete for the corpus-scale staged temp dirs — leaking
-    * one per timed chain exhausts /tmp across a ladder. */
+    * one per timed chain exhausts /tmp across repeated runs. */
   private def deleteRecursively(dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val root = Paths.get(dir)
@@ -174,22 +173,11 @@ object CleaningBench {
 
   /** One timed chain over the at-rest corpus; returns (wall s, survivors,
     * stage dir — the CALLER deletes it after reading the manifest).
-    * `scheme` "cntfs:" counts corpus opens, "" reads plain. `stageRoot`
-    * picks where the chain's parquet staging lands (None = /tmp, i.e.
-    * the single virtual disk; Some("/dev/shm/...") = memory-backed —
-    * the stand-in for a real cluster's distributed staging store whose
-    * bandwidth scales with executor count). */
+    * `scheme` "cntfs:" counts corpus opens, "" reads plain. */
   private def timedChain(spark: SparkSession, nDocs: Long,
-      scheme: String, stageRoot: Option[String] = None): (Double, Long, String) = {
+      scheme: String): (Double, Long, String) = {
     val dir = corpusDir(nDocs)
-    val stage = stageRoot match {
-      case Some(root) =>
-        val r = Paths.get(root)
-        Files.createDirectories(r)
-        Files.createTempDirectory(r, "graft_cleaning_bench").toString
-      case None =>
-        Files.createTempDirectory("graft_cleaning_bench").toString
-    }
+    val stage = Files.createTempDirectory("graft_cleaning_bench").toString
     val t0 = System.nanoTime()
     val survivors = CleaningPipeline.cleanedMetaResumable(
       spark.read.parquet(s"$scheme$dir/docs"),
@@ -199,18 +187,7 @@ object CleaningBench {
     ((System.nanoTime() - t0) / 1e9, survivors, stage)
   }
 
-  private def parseStageRoot(s: String): Option[String] = s match {
-    case "shm" => Some("/dev/shm/graft-stage")
-    case "tmp" | "" => None
-    case other => Some(other)
-  }
-
   def main(args: Array[String]): Unit = {
-    if (args.length >= 3 && args(0) == "single") {
-      val root = if (args.length >= 4) parseStageRoot(args(3)) else None
-      singleMain(args(1).toInt, args(2).toLong, root)
-      return
-    }
     if (args.length >= 5 && args(0) == "resumechild") {
       resumeChildMain(args(1).toInt, args(2).toLong, args(3).toInt, args(4))
       return
@@ -219,15 +196,6 @@ object CleaningBench {
       val nDocs = if (args.length >= 2) args(1).toLong else 20000000L
       val cores = if (args.length >= 3) args(2).toInt else 32
       resumeMain(nDocs, cores)
-      return
-    }
-    if (args.nonEmpty && args(0) == "ladder") {
-      val nDocs = if (args.length >= 2) args(1).toLong else 2000000L
-      val (lo, hi) =
-        if (args.length >= 4) (args(2).toInt, args(3).toInt) else (8, 32)
-      val rounds = if (args.length >= 5) args(4).toInt else 3
-      val root = if (args.length >= 6) parseStageRoot(args(5)) else None
-      ladderMain(nDocs, lo, hi, rounds, root)
       return
     }
     fullMain(if (args.nonEmpty) args(0).toLong else 20000000L)
@@ -313,97 +281,6 @@ object CleaningBench {
     } finally spark.stop()
   }
 
-  /** Saturating CPU calibration: 32 threads × fixed splitmix work. On an
-    * idle host this wall is a constant; ambient contention (the shared
-    * virtualized box's neighbors) inflates it, so reporting it beside
-    * each measurement makes contended windows VISIBLE in the record
-    * instead of silently biasing the scaling ratio (a neighbor stealing
-    * cores barely touches a local[8] run with 24 idle vCPUs of slack but
-    * directly slows local[32] — ambient theft biases efficiency DOWN).
-    * Shared with graft.Bench via [[HostCalibration.cpuCalibrationWall]]
-    * (round-6 verdict #2) so the scalar is artifact-comparable. */
-  private def cpuCalibration(): Double =
-    HostCalibration.cpuCalibrationWall()
-
-  /** Disk calibration beside the CPU one: a 512 MB fsync'd sequential
-    * write at the staging root. The round-6 ladders showed the staging
-    * disk's ambient contention swings stage walls ±25% while the CPU
-    * calibration reads idle — this makes DISK contention visible per
-    * measurement too, so a stretched stage-0/1 sample can be attributed
-    * to the substrate instead of the code under test. (Read-back is not
-    * measured: it would hit the page cache, not the disk.) Shared with
-    * graft.Bench via [[HostCalibration.diskCalibrationWall]]. */
-  private def diskCalibration(stageRoot: Option[String]): Double =
-    HostCalibration.diskCalibrationWall(stageRoot.getOrElse("/tmp"))
-
-  /** One measurement in THIS JVM: same-shape warm-up (one-tenth corpus,
-    * untimed) then the timed chain on the plain scheme. */
-  private def singleMain(cores: Int, nDocs: Long,
-      stageRoot: Option[String]): Unit = {
-    val spark = session(cores, nDocs)
-    try {
-      val (_, _, warmStage) = timedChain(spark, nDocs / 10, "", stageRoot)
-      deleteRecursively(warmStage)
-      System.err.println(f"CALIB $cores ${cpuCalibration()}%.2f s")
-      System.err.println(
-        f"DISKCAL $cores ${diskCalibration(stageRoot)}%.2f s")
-      val (wall, survivors, stage) = timedChain(spark, nDocs, "", stageRoot)
-      // per-stage breakdown for variance diagnosis (stderr — the parent
-      // parses only the SINGLE line on stdout)
-      val stages = CleaningPipeline.manifest(spark, stage)
-        .orderBy("stage").collect()
-        .map(r => s"stage${r.getInt(0)}=${r.getLong(2)}ms")
-      System.err.println(s"STAGES $cores ${stages.mkString(" ")}")
-      deleteRecursively(stage)
-      println(s"SINGLE $cores $nDocs $wall $survivors")
-    } finally spark.stop()
-  }
-
-  /** Fresh child JVM per measurement (run-to-run JIT/heap state in a
-    * shared JVM dominates the signal otherwise — the ScalingBench
-    * finding, applied verbatim). The child INHERITS the parent's heap,
-    * so both ladder levels run the same `-Xmx` (8 GB).
-    *
-    * Measured NEGATIVE result (2026-08-17, idle calibrations): scaling
-    * the heap per core — the faithful analogy to an N- vs 4N-executor
-    * cluster whose aggregate memory grows with executor count — is
-    * catastrophically wrong on THIS substrate. The identical 2M chain at
-    * 32 cores walled 39.3 s at 8 GB, 65.5 s at 31 GB (compressed oops
-    * still on), 98.6 s at 33 GB, 316.6 s at 48 GB — monotone in heap
-    * size, no full GCs in the GC log, THP off, so the penalty is
-    * host-level (shared virtualized box; a large committed heap is
-    * apparently backed by slower host memory). Equal-heap is therefore
-    * the protocol, with the honest caveat that the hi level gets 4× less
-    * heap per core than a real 4N cluster would — measured efficiency is
-    * a LOWER bound on fair-cluster efficiency. */
-  private def runInChildJvm(cores: Int, nDocs: Long,
-      stageRoot: Option[String]): (Double, Long) = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments
-    val cmd = new java.util.ArrayList[String]()
-    cmd.add(javaBin)
-    jvmArgs.forEach(a => if (!a.startsWith("-agentlib")) cmd.add(a))
-    cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-    cmd.add("graft.tools.CleaningBench"); cmd.add("single")
-    cmd.add(cores.toString); cmd.add(nDocs.toString)
-    cmd.add(stageRoot.getOrElse("tmp"))
-    val p = new ProcessBuilder(cmd).redirectErrorStream(true).start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream)
-      .getLines().toList
-    val rc = p.waitFor()
-    // relay the child's per-stage breakdown + CPU calibration for
-    // variance diagnosis
-    out.filter(l => l.startsWith("STAGES ") || l.startsWith("CALIB ") ||
-        l.startsWith("DISKCAL "))
-      .foreach(println)
-    val line = out.find(_.startsWith("SINGLE ")).getOrElse(
-      sys.error(s"child JVM failed (rc=$rc):\n" +
-        out.takeRight(30).mkString("\n")))
-    val Array(_, _, _, wall, surv) = line.split(" ")
-    (wall.toDouble, surv.toLong)
-  }
-
   /** One phase of the kill/resume measurement, in a fresh JVM (so the
     * "kill" between stages is a REAL process exit, and the resume is a
     * genuinely cross-JVM cold start — the crash a 100-TB multi-hour run
@@ -418,11 +295,14 @@ object CleaningBench {
       stage: String): Unit = {
     val spark = session(cores, nDocs)
     try {
-      // same-shape warm-up as singleMain (one-tenth corpus, own dir)
+      // same-shape warm-up (one-tenth corpus, own dir), then the host
+      // calibrations printed beside the phase's wall
       val (_, _, warmStage) = timedChain(spark, nDocs / 10, "")
       deleteRecursively(warmStage)
-      System.err.println(f"CALIB $cores ${cpuCalibration()}%.2f s")
-      System.err.println(f"DISKCAL $cores ${diskCalibration(None)}%.2f s")
+      System.err.println(
+        f"CALIB $cores ${HostCalibration.cpuCalibrationWall()}%.2f s")
+      System.err.println(
+        f"DISKCAL $cores ${HostCalibration.diskCalibrationWall("/tmp")}%.2f s")
       val dir = corpusDir(nDocs)
       // phase A also measures the one-plain-scan open calibration the
       // read-once assertion compares against. Frame construction happens
@@ -564,76 +444,5 @@ object CleaningBench {
       Files.write(Paths.get("BENCH.md"), row.getBytes("UTF-8"),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     } finally deleteRecursively(stage)
-  }
-
-  /** Paired two-parallelism ladder for the cleaning chain (the north
-    * rule's two-cluster-size criterion applied to the dedup path). */
-  private def ladderMain(nDocs: Long, lo: Int, hi: Int,
-      rounds: Int, stageRoot: Option[String]): Unit = {
-    require(nDocs % 100000 == 0,
-      "ladder nDocs must be a multiple of 100000 (warm-up is nDocs/10)")
-    val gen = session(32, nDocs)
-    try {
-      materialize(gen, nDocs)
-      materialize(gen, nDocs / 10)
-    } finally gen.stop()
-
-    val expect = expectedSurvivors(nDocs)
-    val los = Seq.newBuilder[Double]
-    val his = Seq.newBuilder[Double]
-    (1 to rounds).foreach { _ =>
-      val (wl, sl) = runInChildJvm(lo, nDocs, stageRoot)
-      val (wh, sh) = runInChildJvm(hi, nDocs, stageRoot)
-      require(sl == expect && sh == expect,
-        s"survivors drifted: lo=$sl hi=$sh expected=$expect")
-      los += wl; his += wh
-    }
-    val l = los.result(); val h = his.result()
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    val coreRatio = hi.toDouble / lo
-    val effs = l.zip(h).map { case (wl, wh) => (wl / wh) / coreRatio }
-    val effMed = median(effs)
-    val wallLo = l.min; val wallHi = h.min
-    val effBest = (wallLo / wallHi) / coreRatio
-    val rootLabel = stageRoot.map(r => s"$r (memory-backed)")
-      .getOrElse("/tmp (single virtual disk)")
-    val json =
-      f"""{"chain":"cleaning","n_docs":$nDocs,"survivors":$expect,""" +
-        s""""stage_root":"${stageRoot.getOrElse("/tmp")}",""" +
-        f""""local$lo":{"wall_sec":$wallLo%.2f,"wall_sec_median":${median(l)}%.2f},""" +
-        f""""local$hi":{"wall_sec":$wallHi%.2f,"wall_sec_median":${median(h)}%.2f},""" +
-        s""""paired_efficiencies":[${effs.map(e => f"$e%.3f").mkString(",")}],""" +
-        f""""scaling_efficiency_median_paired":$effMed%.3f,"scaling_efficiency_best":$effBest%.3f}"""
-    println(json)
-    val row =
-      f"""
-         |## CleaningBench scaling ladder (${java.time.Instant.now()})
-         |
-         |The composed cleaning chain (parquet-staged resumable form) at
-         |local[$lo] vs local[$hi], $nDocs planted docs, ScalingBench's
-         |paired protocol ($rounds rounds, lo/hi back-to-back per round,
-         |fresh child JVM per measurement, one-tenth-corpus warm-up
-         |inside, equal heap at both levels — see runInChildJvm's
-         |measured negative result on per-core heap). Parquet staging
-         |root: $rootLabel. Survivors identical
-         |at both levels ($expect) — partitioning-invariant.
-         |
-         || metric | local[$lo] | local[$hi] | ratio |
-         || --- | --- | --- | --- |
-         || wall best (s) | $wallLo%.2f | $wallHi%.2f | ${wallLo / wallHi}%.2f× |
-         || wall median (s) | ${median(l)}%.2f | ${median(h)}%.2f | ${median(l) / median(h)}%.2f× |
-         |
-         |Per-pair efficiencies: ${effs.map(e => f"$e%.3f").mkString(" / ")}
-         |Scaling efficiency — median over pairs: **$effMed%.3f**; best-of: $effBest%.3f
-         |```json
-         |$json
-         |```
-         |""".stripMargin
-    Files.write(Paths.get("BENCH.md"), row.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 }

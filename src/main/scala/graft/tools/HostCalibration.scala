@@ -1,27 +1,17 @@
 package graft.tools
 
-import java.util.concurrent.{Executors, TimeUnit}
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-/** Reproduces the hardware-ceiling calibration quoted in BENCH.md: how far
-  * 8 → 32 parallel units scale on this VM for (a) pure ALU work and
-  * (b) warm parquet text-column decode. The scaling-efficiency criterion
-  * binds against these ceilings — no JVM job on a shared-socket VM can
-  * scale past them, while real N → 4N executor clusters add memory
-  * controllers with the executors.
-  *
-  * `sbt -batch "runMain graft.tools.HostCalibration [corpusDir]"`
+/** Host-state calibrations recorded beside a measurement: fixed CPU and
+  * disk work whose wall is constant on an idle host, so contention from
+  * neighbours shows in the record instead of silently stretching the
+  * timed numbers. graft.Bench brackets its passes with both; CcBench and
+  * CleaningBench's `resume` mode record them beside their runs.
   */
 object HostCalibration {
 
-  /** Saturating CPU calibration: 32 threads × fixed splitmix work — the
-    * per-measurement host-state scalar of the round-6 ladder protocol
-    * (~0.8–1.0 s on this box when idle per BENCH.md; ambient neighbor
-    * load inflates it). Shared by CleaningBench's per-measurement
-    * calibration and graft.Bench's bench_out.json `calib` record so the
-    * scalar is comparable across every artifact. */
+  /** Saturating CPU calibration: 32 threads × fixed splitmix work
+    * (~0.8–1.0 s idle on the 32-core host of BENCH.md; ~7 s on 4 cores;
+    * ambient neighbour load inflates it). One scalar shared by every
+    * bench artifact so it is comparable across them. */
   def cpuCalibrationWall(): Double = {
     val t0 = System.nanoTime()
     val threads = (0 until 32).map { t =>
@@ -40,11 +30,11 @@ object HostCalibration {
   }
 
   /** Disk calibration beside the CPU one: a 512 MB fsync'd sequential
-    * write under `dirPath` (~0.9–1.1 s idle per BENCH.md). The round-6
-    * ladders showed the staging disk's ambient contention swings stage
-    * walls ±25% while the CPU calibration reads idle — this makes DISK
-    * contention visible per measurement. (Read-back is deliberately not
-    * measured: it would hit the page cache, not the disk.) */
+    * write under `dirPath` (~0.9–1.1 s idle per BENCH.md). Staging-disk
+    * contention swings stage walls ±25% while the CPU calibration reads
+    * idle (BENCH.md round 6) — this makes DISK contention visible per
+    * measurement. (Read-back is deliberately not measured: it would hit
+    * the page cache, not the disk.) */
   def diskCalibrationWall(dirPath: String): Double = {
     val dir = java.nio.file.Paths.get(dirPath)
     java.nio.file.Files.createDirectories(dir)
@@ -62,62 +52,5 @@ object HostCalibration {
       } finally ch.close()
       (System.nanoTime() - t0) / 1e9
     } finally java.nio.file.Files.deleteIfExists(f)
-  }
-
-  private def alu(iters: Long): Long = {
-    var x = 0L
-    var i = 0L
-    while (i < iters) { x += i * i + (x >>> 7); i += 1 }
-    x
-  }
-
-  /** Wall seconds to run `threads` ALU units of fixed size concurrently. */
-  private def aluWall(threads: Int): Double = {
-    val pool = Executors.newFixedThreadPool(threads)
-    val t0 = System.nanoTime()
-    (1 to threads * 2).foreach { _ =>
-      pool.submit(new Runnable { def run(): Unit = alu(400000000L) })
-    }
-    pool.shutdown()
-    pool.awaitTermination(10, TimeUnit.MINUTES)
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  def main(args: Array[String]): Unit = {
-    // thread/core pair under calibration (defaults match the main ladder)
-    val lo = if (args.length >= 2) args(1).toInt else 8
-    val hi = if (args.length >= 3) args(2).toInt else 32
-    val ratio = hi.toDouble / lo
-    // (a) pure ALU: per-unit throughput at lo vs hi threads
-    aluWall(4) // warm
-    val wLo = aluWall(lo)
-    val wHi = aluWall(hi)
-    // units/s = threads*2 / wall; efficiency of the step:
-    val aluEff = ((hi * 2 / wHi) / (lo * 2 / wLo)) / ratio
-    println(f"CALIB alu: ${lo}thr ${lo * 2 / wLo}%.2f units/s, ${hi}thr ${hi * 2 / wHi}%.2f units/s, $lo->$hi efficiency ${aluEff}%.3f")
-
-    // (b) parquet text decode at 8 vs 32 cores (warm floors, 3 reps each)
-    val dir = if (args.nonEmpty) args(0) else "/tmp/graft_scaling_corpus_20000000"
-    if (!new java.io.File(dir).isDirectory) {
-      println(s"CALIB parquet: corpus $dir missing — run ScalingBench first")
-      return
-    }
-    def decodeFloor(cores: Int): Double = {
-      val spark = SparkSession.builder().master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions", cores)
-        .config("spark.ui.enabled", "false")
-        .appName(s"calib-$cores").getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
-        (1 to 4).map { _ =>
-          val t0 = System.nanoTime()
-          spark.read.parquet(dir).select(sum(length(col("text")))).collect()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-      } finally spark.stop()
-    }
-    val dLo = decodeFloor(lo)
-    val dHi = decodeFloor(hi)
-    println(f"CALIB parquet decode: ${lo}c ${dLo}%.2f s, ${hi}c ${dHi}%.2f s, $lo->$hi efficiency ${(dLo / dHi) / ratio}%.3f")
   }
 }

@@ -12,10 +12,10 @@ import graft.SparkEntry
   * `SPARK_GRAFT_PLAN_DIR` (default `plans/r08`) as `<query>_<tag>.txt`
   * with `SPARK_GRAFT_PLAN_TAG` (default `before`).
   *
-  * Measurement harness only — never on a query path. Bench.scala is
-  * frozen, so plan capture lives in its own main (guide §1: capture the
-  * plan shape — Exchange count, join strategy, PushedFilters — for every
-  * query before and after a change).
+  * Measurement harness only — never on a query path, and kept out of
+  * graft.Bench so plan capture never perturbs the timed passes (guide
+  * §1: capture the plan shape — Exchange count, join strategy,
+  * PushedFilters — for every query before and after a change).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -44,7 +44,9 @@ object CheckpointBridge {
     * the 121 s final round on the DRIVER (stack-sampled:
     * `SizeInBytesOnlyStatsPlanVisitor`, samples ×2.85/round ≈ the
     * Karatsuba cost of doubling digits), data-independently — the same
-    * blow-up reproduces on 1k rows once enough rounds run (CcPlanProbe).
+    * blow-up reproduces on 1k rows once enough rounds run (EvalGraphSpec's
+    * `carriedSizeInBytes` regression spec, "CC loop checkpoints carry no
+    * compounding size estimate").
     *
     * Rebuilding the wrapper without `originStats`/`originConstraints`
     * resets every round's leaf estimate to the conf default, so within-
