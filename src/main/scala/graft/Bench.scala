@@ -44,9 +44,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen warm-up: exercise the parquet reader, aggregation,
-    // the typed mapPartitions path AND the iterative CC loop shape once
-    // before timing anything (warm-up must match the timed job shapes —
-    // a cold first CC loop pays ~0.8s/round of codegen)
+    // the typed mapPartitions path AND the CC small solve (which the
+    // 3-edge graph takes) once before timing anything — warm-up must
+    // match the timed job shapes
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count().count()

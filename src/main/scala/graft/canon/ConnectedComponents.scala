@@ -2,6 +2,8 @@ package graft.canon
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge.{
+  localCheckpointLeanStats, unpersistLocalCheckpoint}
 import org.apache.spark.storage.StorageLevel
 
 /** Catalyst-only connected components (SURVEY L5, §4.2 item 4).
@@ -50,15 +52,20 @@ import org.apache.spark.storage.StorageLevel
   *    which a long-lived driver calling CC repeatedly (streaming
   *    compaction cadence, per-year metrics) cannot afford;
   *  - the edge table is materialized once (symmetric, deduped) and reused
-  *    every round — and at data scale (auto-gated on its own materialized
-  *    volume, [[symmetrized]]) it is checkpointed pre-partitioned on the
+  *    every round, and its row count — counted once, on the checkpoint
+  *    itself — is the ONLY input that picks a path: at most
+  *    [[SmallSolveMaxRows]] rows take the single-task union-find, at least
+  *    [[RelayoutMinRows]] rows are checkpointed pre-partitioned on the
   *    join side `b` and pre-sorted within partitions, so the per-round
   *    propagation join reads it exchange-free and sort-free (the
   *    checkpoint wrapper preserves `outputPartitioning`/`outputOrdering`):
   *    the rounds × edge-table exchange+sort that dominated the loop's
   *    shuffle bytes is paid ONCE at setup. Only the label side
-  *    (node-count rows, 2 longs) moves per round. Small analytic graphs
-  *    skip the relayout and keep AQE's coalesced 1-task round stages.
+  *    (node-count rows, 2 longs) moves per round. No partition count or
+  *    session conf enters either gate: AQE's coalesced partition count
+  *    overstates volume under its parallelism-first default, collapses to
+  *    1 under `shuffle.partitions=1`, and stays at the full shuffle count
+  *    with coalescing off.
   *
   * Input: edges with two long columns `src`, `dst`. Output: (`node`,
   * `component`) with `component` = min node id of the component.
@@ -105,56 +112,35 @@ object ConnectedComponents {
       .select(col("name"), col("component"))
   }
 
-  /** Maximum post-AQE partition count of the symmetrized table at which
-    * [[runCounted]] solves the components in ONE single-task union-find
-    * job instead of the iterative loop. The same free data-volume signal
-    * as [[RelayoutMinPartitions]] (AQE coalesces the dedup exchange
-    * toward its ~64 MB advisory size, so ≤1 materialized partition ≈
-    * ≤64 MB of compressed edge pairs ≈ ≤4M sym rows): below it the loop's
-    * cost is ~rounds × fixed per-job latency — every round schedules a
-    * whole job to move a few thousand rows — while a path-halving
-    * union-find over one partition's rows finishes in milliseconds of
-    * executor CPU. Above it the iterative loop (pointer doubling,
-    * exchange-free edge side) remains the only shape that scales. Guide
-    * §1.2: choose the distributed algorithm by data volume, not a
-    * constant — the gate derives from measured bytes, never core count. */
-  private[graft] val SmallSolveMaxPartitions = 1
+  /** Maximum symmetrized row count at which [[runCounted]] solves the
+    * components in ONE single-task union-find job instead of the
+    * iterative loop: ≈64 MB of id pairs, the size [[LocalUnionFind]] is
+    * built for. Below it the loop's cost is ~rounds × fixed per-job
+    * latency — every round schedules a whole job to move a few thousand
+    * rows — while a path-halving union-find over the rows finishes in
+    * milliseconds of executor CPU. Above it the iterative loop (pointer
+    * doubling, exchange-free edge side) remains the only shape that
+    * scales. */
+  private[graft] val SmallSolveMaxRows = 4000000L
 
-  /** Minimum post-AQE partition count of the raw symmetrized table at
-    * which [[symmetrized]] re-lays it out for the propagation join. AQE
-    * coalesces the dedup exchange toward its ~64 MB advisory size, so the
-    * materialized partition count IS a free data-volume signal: ≥4
-    * coalesced partitions ≈ ≥0.25 GB of compressed edge pairs ≈ ≥8M sym
-    * rows — from there, ~log₂(diameter) rounds each exchanging+sorting
-    * the table dwarf the relayout's one extra pass (20M edges: relayout
-    * cut the 32-core loop 435→314 s). Below it, the relayout's fixed
-    * partition count would instead DEFEAT AQE's coalescing — every
-    * round's stages on a toy graph would run at
-    * `spark.sql.shuffle.partitions` tasks where AQE ran ~1 — measured as
-    * kg10/kg21 (many small per-year CC runs) doubling at sf0.1. */
-  private[graft] val RelayoutMinPartitions = 4
+  /** Minimum symmetrized row count (≈0.25 GB of id pairs) at which
+    * [[symmetrized]] re-lays the table out for the propagation join: from
+    * there, ~log₂(diameter) rounds each exchanging+sorting the table dwarf
+    * the relayout's one extra pass (20M edges: relayout cut the 32-core
+    * loop 435→314 s). Below it, the relayout's fixed partition count
+    * would instead DEFEAT AQE's coalescing — every round's stages on a toy
+    * graph would run at `spark.sql.shuffle.partitions` tasks where AQE ran
+    * ~1 — measured as kg10/kg21 (many small per-year CC runs) doubling at
+    * sf0.1. */
+  private[graft] val RelayoutMinRows = 8000000L
 
-  /** The partition-count-as-volume signal is only meaningful when AQE's
-    * advisory-size coalescing actually ran (ADVICE r7): with
-    * `spark.sql.adaptive.enabled` or `…coalescePartitions.enabled` off,
-    * a toy graph's dedup exchange materializes at the full
-    * `spark.sql.shuffle.partitions` — the relayout gate would always
-    * fire (reintroducing the measured kg10/kg21 small-graph doubling)
-    * and the small-solve gate would never. Both gates therefore require
-    * the coalescing confs before trusting the count; without them the
-    * loop runs in its ungated shape — correct, just unoptimized. */
-  private def aqeCoalesceOn(df: DataFrame): Boolean = {
-    val conf = df.sparkSession.sessionState.conf
-    conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled
-  }
-
-  /** The loop's symmetrized, deduped edge table, checkpointed — and, at
-    * data scale (auto-gated; see [[RelayoutMinPartitions]]), PHYSICALLY
-    * LAID OUT for the per-round propagation join: hash-partitioned on the
-    * join column `b` (explicit partition count, so AQE cannot coalesce it
-    * away from what the captured partitioning advertises) and sorted
-    * within partitions by `b`. The checkpoint captures the physical
-    * plan's partitioning and ordering into the
+  /** The loop's symmetrized, deduped edge table, checkpointed, with its
+    * row count — and, at `relayoutMinRows` rows or more, PHYSICALLY LAID
+    * OUT for the per-round propagation join: hash-partitioned on the join
+    * column `b` (explicit partition count, so AQE cannot coalesce it away
+    * from what the captured partitioning advertises) and sorted within
+    * partitions by `b`. The checkpoint captures the physical plan's
+    * partitioning and ordering into the
     * `org.apache.spark.sql.execution.LogicalRDD` wrapper
     * (CheckpointBridge recovers them under AQE), so every round's
     * sort-merge join reads this side exchange-free AND sort-free: the
@@ -163,13 +149,15 @@ object ConnectedComponents {
     * ~log₂(diameter) rounds. Only the label side (2 longs/node) moves
     * per round.
     *
+    * The count materializes the checkpoint (the job that would otherwise
+    * have materialized it is the next reader), so the gates cost one
+    * small job and read a measured size, never an estimate.
+    *
     * `private[graft]` so EvalGraphSpec can assert the captured layout,
     * the exchange-free propagation join, and both sides of the gate
     * structurally. */
-  private[graft] def symmetrized(edges: DataFrame,
-      relayout: Option[Boolean] = None): DataFrame = {
-    import org.apache.spark.sql.graftbridge.CheckpointBridge
-    import CheckpointBridge.localCheckpointLeanStats
+  private[graft] def symmetrized(edges: DataFrame, relayoutMinRows: Long)
+      : (DataFrame, Long) = {
     val raw = localCheckpointLeanStats(edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src") =!= col("dst"))
@@ -178,11 +166,8 @@ object ConnectedComponents {
         edges.select(col("dst").cast("long").as("a"),
           col("src").cast("long").as("b")))
       .distinct(), StorageLevel.MEMORY_AND_DISK_SER)
-    val doLayout = relayout.getOrElse(
-      aqeCoalesceOn(edges) &&
-        CheckpointBridge.checkpointNumPartitions(raw)
-          .exists(_ >= RelayoutMinPartitions))
-    if (!doLayout) raw
+    val rows = raw.count()
+    if (rows < relayoutMinRows) (raw, rows)
     else {
       val np = edges.sparkSession.sessionState.conf.numShufflePartitions
       val laid = localCheckpointLeanStats(raw
@@ -192,8 +177,8 @@ object ConnectedComponents {
       // input) can be freed immediately — the two copies coexist only
       // for this one pass
       laid.count()
-      CheckpointBridge.unpersistLocalCheckpoint(raw)
-      laid
+      unpersistLocalCheckpoint(raw)
+      (laid, rows)
     }
   }
 
@@ -201,27 +186,27 @@ object ConnectedComponents {
     * per-call observability for capacity math (the loop's shuffle count is
     * rounds × per-round stages) that is safe under concurrent runs.
     *
-    * @param smallSolve force (Some(true)) or suppress (Some(false)) the
-    *                single-task union-find fast path; None (default)
-    *                auto-gates on the symmetrized table's materialized
-    *                partition count ([[SmallSolveMaxPartitions]]) — and
-    *                only when `maxIter` is at least the default 30, so a
-    *                caller asking for BOUNDED-round (possibly
-    *                unconverged) labels always gets the loop. The fast
-    *                path returns FULLY CONVERGED min labels and reports
-    *                one round; they equal the loop's labels only when the
-    *                loop converges within `maxIter`. Pointer doubling
-    *                converges in O(log d) rounds where ids run monotone
-    *                along paths, but where ids do not follow the graph's
-    *                geometry propagation advances one edge-hop per round,
-    *                so a long path can leave the loop unconverged at 30
-    *                rounds while the fast path is converged (equality is
-    *                spec-asserted on chain/star/planted shapes that
-    *                converge).
+    * The symmetrized table's row count picks the path
+    * ([[SmallSolveMaxRows]], [[RelayoutMinRows]]). The single-task
+    * union-find runs only when `maxIter` is at least the default 30, so a
+    * caller asking for BOUNDED-round (possibly unconverged) labels always
+    * gets the loop. The union-find returns FULLY CONVERGED min labels and
+    * reports one round; they equal the loop's labels only when the loop
+    * converges within `maxIter`. Pointer doubling converges in O(log d)
+    * rounds where ids run monotone along paths, but where ids do not
+    * follow the graph's geometry propagation advances one edge-hop per
+    * round, so a long path can leave the loop unconverged at 30 rounds
+    * while the union-find is converged (equality is spec-asserted on
+    * chain/star/planted shapes that converge).
     */
-  def runCounted(edges: DataFrame, maxIter: Int = 30,
-      smallSolve: Option[Boolean] = None)
-      : (DataFrame, Int) = {
+  def runCounted(edges: DataFrame, maxIter: Int = 30): (DataFrame, Int) =
+    runCounted(edges, maxIter, SmallSolveMaxRows, RelayoutMinRows)
+
+  /** [[runCounted]] with the two row limits as arguments — the seam that
+    * lets specs and the CC bench place a graph on either side of each
+    * gate. */
+  private[graft] def runCounted(edges: DataFrame, maxIter: Int,
+      unionFindMaxRows: Long, relayoutMinRows: Long): (DataFrame, Int) = {
     // ALL loop checkpoints use the LEAN wrapper (no originStats/
     // originConstraints): the default wrapper carries the pre-checkpoint
     // plan's size estimate, which the size-only visitor MULTIPLIES
@@ -233,20 +218,14 @@ object ConnectedComponents {
     // (the same blow-up reproduces on 1k rows; regression-specced
     // structurally by EvalGraphSpec's "CC loop checkpoints carry no
     // compounding size estimate" via carriedSizeInBytes).
-    import org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointLeanStats
-    val sym = symmetrized(edges)
+    val (sym, symRows) = symmetrized(edges, relayoutMinRows)
 
     // small-graph fast path: one single-task union-find job over the
     // checkpointed sym rows replaces the whole round loop (the loop's
     // per-round fixed job latency dominates completely at this size —
     // measured r8: kg10/kg21/kg15/kg20/kg05 all spend most of their wall
     // in loop-round scheduling at sf0.1)
-    val useSmall = smallSolve.getOrElse(
-      maxIter >= 30 && aqeCoalesceOn(edges) &&
-        org.apache.spark.sql.graftbridge.CheckpointBridge
-          .checkpointNumPartitions(sym)
-          .exists(_ <= SmallSolveMaxPartitions))
-    if (useSmall) {
+    if (maxIter >= 30 && symRows <= unionFindMaxRows) {
       val spark = edges.sparkSession
       import spark.implicits._
       val solved = sym.select(col("a"), col("b")).as[(Long, Long)]
@@ -256,15 +235,14 @@ object ConnectedComponents {
       val labels = localCheckpointLeanStats(solved,
         StorageLevel.MEMORY_AND_DISK_SER)
       labels.count()
-      org.apache.spark.sql.graftbridge.CheckpointBridge
-        .unpersistLocalCheckpoint(sym)
+      unpersistLocalCheckpoint(sym)
       return (labels, 1)
     }
 
-    // lazy like `sym`: round 1's convergence count materializes both in
-    // its own job (persisted blocks cache on first compute, so the
-    // self-join branches below still read ONE materialization) — eager
-    // checkpoints here would spend two extra jobs for the same state
+    // lazy: round 1's convergence count materializes it in its own job
+    // (persisted blocks cache on first compute, so the self-join branches
+    // below still read ONE materialization) — an eager checkpoint here
+    // would spend an extra job for the same state
     var labels = localCheckpointLeanStats(sym.select(col("a").as("node"))
       .distinct()
       .withColumn("component", col("node")), StorageLevel.MEMORY_AND_DISK_SER)
@@ -310,9 +288,7 @@ object ConnectedComponents {
       val changed = wide.where(col("component") =!= col("_old")).count()
       // the count just materialized THIS round from the previous round's
       // blocks — the previous frame has no future reader, free it now
-      prevState.foreach(
-        org.apache.spark.sql.graftbridge.CheckpointBridge
-          .unpersistLocalCheckpoint(_))
+      prevState.foreach(unpersistLocalCheckpoint(_))
       prevState = Some(wide)
       labels = wide.select(col("node"), col("component"))
       converged = changed == 0
@@ -320,8 +296,7 @@ object ConnectedComponents {
     }
     // the loop has run its last propagation join — `sym` has no future
     // reader (the terminal compaction below reads only the last wide)
-    org.apache.spark.sql.graftbridge.CheckpointBridge
-      .unpersistLocalCheckpoint(sym)
+    unpersistLocalCheckpoint(sym)
     // terminal compaction: persist the 2-column result in its own
     // checkpoint (one pass over the last wide's blocks), then free the
     // last state frame — callers see fully materialized (node,
@@ -331,9 +306,7 @@ object ConnectedComponents {
     labels = localCheckpointLeanStats(labels,
       StorageLevel.MEMORY_AND_DISK_SER)
     labels.count()
-    prevState.foreach(
-      org.apache.spark.sql.graftbridge.CheckpointBridge
-        .unpersistLocalCheckpoint(_))
+    prevState.foreach(unpersistLocalCheckpoint(_))
     (labels, iter)
   }
 }

@@ -1,14 +1,15 @@
 package graft.canon
 
-/** Single-task min-label union-find — the small-graph solve behind
-  * [[ConnectedComponents.runCounted]]'s volume gate. Union-by-min (the
-  * root of a merged set is always its smallest node id) with path
-  * halving, so `find` returns the component's min id directly — the same
-  * fixpoint the iterative min-label-propagation loop converges to, with
-  * zero shuffles and zero rounds.
+/** Single-task min-label union-find — the small-graph solve that
+  * [[ConnectedComponents.runCounted]] takes when the symmetrized table
+  * has at most [[ConnectedComponents.SmallSolveMaxRows]] rows.
+  * Union-by-min (the root of a merged set is always its smallest node id)
+  * with path halving, so `find` returns the component's min id directly
+  * — the same fixpoint the iterative min-label-propagation loop converges
+  * to, with zero shuffles and zero rounds.
   *
   * Primitive-array open addressing (no boxed maps): at the gate's ceiling
-  * (~4M symmetrized rows ≈ ~64 MB) the id dictionary and parent array
+  * (4M symmetrized rows ≈ ~64 MB) the id dictionary and parent array
   * together stay under ~100 MB in one task and the solve is linear-ish
   * (inverse-Ackermann) in the edge count.
   */

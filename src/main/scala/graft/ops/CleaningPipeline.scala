@@ -68,10 +68,12 @@ object CleaningPipeline {
     * `_SUCCESS` marker — a write that died mid-stage is rewritten, never
     * trusted):
     *
-    *  - `_params`       — the run's parameters; a resume with DIFFERENT
-    *                      parameters refuses loudly (staged signatures
-    *                      computed under k/bands/shingleN are not valid
-    *                      under others).
+    *  - `_params`       — the run's parameters and the shingle sets'
+    *                      representation (`shRepr`); a resume with
+    *                      DIFFERENT parameters, or into a dir whose
+    *                      `_params` lacks `shRepr`, refuses loudly (staged
+    *                      signatures computed under k/bands/shingleN are
+    *                      not valid under others).
     *  - `staged/`       — THE text pass: hash + shingles + signature.
     *  - `stage1_flagged/`, `stage2_exact_drops/`, `stage3_near_drops/`
     *                    — per-stage dropped-id sets.
@@ -184,15 +186,16 @@ object CleaningPipeline {
       // the staged shingle sets' at-rest representation must match what
       // THIS engine computes (ADVICE r6): were the hash function/seed
       // ever to change, a resumed dir's overlap joins would silently
-      // match nothing. Absent on legacy dirs — there the element-type
-      // schema fallback (`shForStore`) is the only guard available.
-      lines.find(_.startsWith("shRepr=")).map(_.stripPrefix("shRepr="))
-        .foreach(storedRepr =>
-          require(storedRepr == SignatureStore.ShRepr,
-            s"resume into $stageDir staged shingle sets under " +
-              s"representation '$storedRepr' but this engine computes " +
-              s"'${SignatureStore.ShRepr}' — overlap joins across " +
-              "representations match nothing; use a new stageDir"))
+      // match nothing. A dir without the line predates hashed shingle
+      // sets, the `nsh` column and tagged store-attempt markers, and is
+      // refused the same way.
+      val storedRepr = lines.find(_.startsWith("shRepr="))
+        .map(_.stripPrefix("shRepr=")).getOrElse("<none>")
+      require(storedRepr == SignatureStore.ShRepr,
+        s"resume into $stageDir staged shingle sets under " +
+          s"representation '$storedRepr' but this engine computes " +
+          s"'${SignatureStore.ShRepr}' — overlap joins across " +
+          "representations match nothing; use a new stageDir")
       storedKeep
     } else {
       Files.createDirectories(p.getParent)
@@ -300,21 +303,6 @@ object CleaningPipeline {
       record(0, rows0())
     }
     def staged = spark.read.parquet(stagedDir)
-    // stage dirs staged before the nsh column existed resume fine — the
-    // gate falls back to sizing the array
-    def shCount =
-      if (spark.read.parquet(stagedDir).columns.contains("nsh")) col("nsh")
-      else size(col("sh"))
-    // stage dirs staged before shingle sets were hashed at rest resume
-    // fine too: decontamination adapts its bench side to the staged
-    // element type, Jaccard is representation-agnostic, and only the
-    // store append — whose contract IS hashed — re-hashes on the way out
-    def shForStore =
-      staged.schema("sh").dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, _) => col("sh")
-        case _ => Dedup.hashShingles(col("sh")).as("sh")
-      }
     if (upTo < 1) return None
 
     // stage 1 — decontamination flags over the staged shingle sets
@@ -359,7 +347,7 @@ object CleaningPipeline {
     t0 = System.nanoTime()
     if (!hasSuccess(nearDir)) {
       val sigs = staged
-        .where(shCount > 0).select(col("doc_id"), col("sig"))
+        .where(col("nsh") > 0).select(col("doc_id"), col("sig"))
         .join(flagged, Seq("doc_id"), "left_anti")
         .join(exactDrops, Seq("doc_id"), "left_anti")
       val pairs = Dedup.verifiedPairs(sigs,
@@ -385,17 +373,22 @@ object CleaningPipeline {
       val attempt = Paths.get(s"$stageDir/stage4_store_attempt")
       if (!Files.exists(done)) {
         t0 = System.nanoTime()
-        val attempted = Files.exists(attempt)
         // the attempt marker carries this run's commit tag, so a resumed
         // attempt asks the STORE whether this exact append committed —
-        // a POSITIVE record (ADVICE r6) instead of the old watermark
-        // inference, which wrongly skipped the append when the watermark
-        // already covered the batch ids for another reason (an
-        // allowStoreReplay re-run, or a store advanced by a later batch)
-        // after a crash BEFORE the commit.
-        val tag =
-          if (attempted)
+        // a POSITIVE record (ADVICE r6) instead of a watermark inference,
+        // which wrongly skips the append when the watermark already
+        // covers the batch ids for another reason (an allowStoreReplay
+        // re-run, or a store advanced by a later batch) after a crash
+        // BEFORE the commit. An EMPTY marker can only come from a crash
+        // inside its own write, before recover and the append: not
+        // attempted, so it gets a fresh tag.
+        val priorTag =
+          if (Files.exists(attempt))
             new String(Files.readAllBytes(attempt), "UTF-8").trim
+          else ""
+        val attempted = priorTag.nonEmpty
+        val tag =
+          if (attempted) priorTag
           else {
             val t = java.util.UUID.randomUUID().toString
             Files.write(attempt, t.getBytes("UTF-8"))
@@ -406,34 +399,19 @@ object CleaningPipeline {
         // fully committed (metadata then carries its tag) or never
         // touched the live store
         SignatureStore.recover(spark, sp)
-        val surv = survivorIds(Seq("doc_id", "sh", "sig"))
-        val alreadyIn =
-          if (attempted && tag.nonEmpty)
-            SignatureStore.readMeta(spark, sp).lastCommitTag == tag
-          else if (attempted) {
-            // legacy attempt marker without a tag: the old watermark
-            // inference, but REFUSED under allowStoreReplay where it is
-            // exactly ambiguous (a redundant replayed append is
-            // at-least-once-safe; a wrongly skipped one silently loses
-            // the batch's signatures)
-            val mxRow = surv.agg(max(col("doc_id").cast("long"))).head()
-            !allowStoreReplay && !mxRow.isNullAt(0) &&
-              SignatureStore.readMeta(spark, sp).maxDocId >= mxRow.getLong(0)
-          } else false
-        if (!alreadyIn) {
+        if (!attempted ||
+          SignatureStore.readMeta(spark, sp).lastCommitTag != tag) {
+          val surv = survivorIds(Seq("doc_id", "nsh", "sh", "sig"))
           SignatureStore.appendSignatures(spark, sp,
             Dedup.bandRowsFromSigs(
-              surv.where(size(col("sh")) > 0)
+              surv.where(col("nsh") > 0)
                 .select(col("doc_id"), col("sig")), k, bands),
-            surv.select(col("doc_id"), shForStore),
+            surv.select(col("doc_id"), col("sh")),
             allowReplay = allowStoreReplay || attempted,
             commitTag = Some(tag))
         }
         Files.createFile(done)
-        import spark.implicits._
-        Seq((4, 0L, (System.nanoTime() - t0) / 1000000L))
-          .toDF("stage", "rows", "wall_ms")
-          .write.mode(SaveMode.Append).parquet(manifestDir)
+        record(4, 0L)
       }
     }
 

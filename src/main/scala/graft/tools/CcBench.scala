@@ -32,10 +32,12 @@ import graft.canon.ConnectedComponents
   *    runs and code versions.
   *
   * The edge table is materialized to parquet ONCE (untimed; CC's real
-  * input is a table — a verified-pairs output), then a same-shape
-  * warm-up on a 10× smaller graph runs before the timed call. Prints
-  * one JSON line naming the path that ran: the 20M-edge default takes
-  * the loop, not the small solve.
+  * input is a table — a verified-pairs output), then a warm-up of the
+  * loop on a 10× smaller graph runs before the timed call. Prints one
+  * JSON line naming the path that ran, which the symmetrized table's row
+  * count picks ([[ConnectedComponents.SmallSolveMaxRows]]): the 20M-edge
+  * default (~40M sym rows) and anything above ~2M edges take the loop,
+  * smaller graphs the single-task small solve.
   *
   * `sbt -batch "runMain graft.tools.CcBench [nEdges] [cores]"`
   */
@@ -104,13 +106,11 @@ object CcBench {
       if (args.length >= 2) args(1).toInt
       else Runtime.getRuntime.availableProcessors()
     val calib = HostCalibration.cpuCalibrationWall()
-    val shufflePartitions =
-      sys.env.get("GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(
-        math.max(cores * 2, math.min(1024L, nEdges / 300000L).toInt))
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-cc-bench-$cores")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.shuffle.partitions",
+        math.max(cores * 2, math.min(1024L, nEdges / 300000L).toInt))
       .config("spark.local.dir", "/dev/shm/graft-spark-local")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
@@ -118,11 +118,13 @@ object CcBench {
     spark.sparkContext.setLogLevel("WARN")
     try {
       materialize(spark, nEdges)
-      // same-shape warm-up (JIT + codegen for every round's operators);
-      // its result blocks are freed so the measured run starts with an
-      // empty block manager
-      val warm = ConnectedComponents.run(spark.read.parquet(dir(nEdges / 10)))
-      warm.count()
+      // loop warm-up (JIT + codegen for every round's operators): a
+      // small-solve limit of 0 keeps it on the loop, which at the 20M
+      // default the timed run takes too; its result blocks are freed so
+      // the measured run starts with an empty block manager
+      val (warm, _) = ConnectedComponents.runCounted(
+        spark.read.parquet(dir(nEdges / 10)), 30, unionFindMaxRows = 0L,
+        relayoutMinRows = ConnectedComponents.RelayoutMinRows)
       org.apache.spark.sql.graftbridge.CheckpointBridge
         .unpersistLocalCheckpoint(warm)
       val e = spark.read.parquet(dir(nEdges))

@@ -123,11 +123,9 @@ object CleaningBench {
     * under the fixed 8 GB heap (measured at 20M/32 cores: stage 3
     * 234.8 s at 64 partitions → 188.8 s at 128). Partition count is a
     * property of the data, as on a real cluster; AQE coalesces any
-    * excess. GRAFT_SHUFFLE_PARTITIONS overrides for probes. */
+    * excess. */
   private def shufflePartitionsFor(cores: Int, nDocs: Long): Int =
-    sys.env.get("GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(
-      math.max(math.max(cores * 2, 16),
-        math.min(1024L, nDocs / 160000L).toInt))
+    math.max(math.max(cores * 2, 16), math.min(1024L, nDocs / 160000L).toInt)
 
   private def session(cores: Int, nDocs: Long): SparkSession = {
     val spark = SparkSession.builder()
@@ -135,22 +133,6 @@ object CleaningBench {
       .appName(s"graft-cleaning-bench-$cores")
       .config("spark.sql.shuffle.partitions",
         shufflePartitionsFor(cores, nDocs))
-      // probe knob: shuffle/spill codec (default lz4). zstd moves fewer
-      // bytes through the memory controller per shuffled row — the
-      // binding resource at 32 threads on one socket (see the round-5
-      // text-encoding study) — at more decompression CPU.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("GRAFT_SHUFFLE_CODEC", "lz4"))
-      // probe knob: the chain's parquet staging codec (the un-optioned
-      // staged write follows this standard conf; default snappy)
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("GRAFT_STAGE_CODEC", "snappy"))
-      // probe knob: ObjectHashAggregate's sort-fallback threshold (the
-      // bounded-min candidate cap is a TypedImperativeAggregate; at the
-      // 128-entry default every high-cardinality bucket agg degenerates
-      // to a full sort of the banded rows)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OBJ_AGG_FALLBACK", "128"))
       .config("spark.local.dir", "/dev/shm/graft-spark-local")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")

@@ -118,18 +118,6 @@ object CheckpointBridge {
     (part, ord)
   }
 
-  /** The actual partition count of a checkpointed Dataset's underlying
-    * RDD (None when not a checkpoint wrapper) — fixed once AQE has
-    * finalized the checkpointed plan, so reading it costs nothing. After
-    * AQE's advisory-size coalescing this doubles as a free data-volume
-    * signal (≈ bytes / 64 MB), which the CC loop uses to gate its
-    * edge-table relayout. */
-  def checkpointNumPartitions(df: Dataset[_]): Option[Int] =
-    df.queryExecution.analyzed match {
-      case lr: LogicalRDD => Some(lr.rdd.getNumPartitions)
-      case _ => None
-    }
-
   /** The origin `sizeInBytes` a checkpointed Dataset's wrapper carries
     * (None when lean / not a checkpoint wrapper) — lets specs assert the
     * non-compounding property structurally instead of by timing. */

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ops.{CleaningPipeline, SignatureStore}
+import graft.tools.TempDirs
 
 /** The composed cleaning chain: stage semantics on a planted fixture,
   * the store-append tail, resume after a kill, and the one-text-pass
@@ -17,8 +18,7 @@ class CleaningPipelineSpec extends AnyFunSuite {
   private def words(p: String, n: Int = 30) =
     (1 to n).map(t => s"${p}_$t").mkString(" ")
 
-  private def freshStage() =
-    java.nio.file.Files.createTempDirectory("graft_clean_stage").toString
+  private def freshStage() = TempDirs.scoped("graft_clean_stage")
 
   test("composed chain: contaminated, exact-dup, and near-dup docs drop; store gets survivors") {
     import spark.implicits._
@@ -37,8 +37,7 @@ class CleaningPipelineSpec extends AnyFunSuite {
 
     // store pre-seeded with one retained doc (id 0) so the append path
     // and the monotone watermark are both exercised
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_clean_store").toString
+    val store = TempDirs.scoped("graft_clean_store")
     SignatureStore.write(
       Seq((0L, words("seed"))).toDF("doc_id", "text"), store,
       nPrefixes = 8, k = 32, bands = 16, shingleN = 3)
@@ -95,8 +94,7 @@ class CleaningPipelineSpec extends AnyFunSuite {
 
   test("pipeline refuses a store with different banding parameters") {
     import spark.implicits._
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_clean_badstore").toString
+    val store = TempDirs.scoped("graft_clean_badstore")
     SignatureStore.write(
       Seq((0L, words("seed"))).toDF("doc_id", "text"), store,
       nPrefixes = 8, k = 32, bands = 8, shingleN = 3) // 8 bands, not 16
@@ -179,12 +177,10 @@ class CleaningPipelineSpec extends AnyFunSuite {
       (1L, doc1), (2L, doc1 + " z1"), (3L, doc3), (4L, doc3),
       (5L, words("m") + " x9"), (6L, words("u")))
       .toDF("doc_id", "text").withColumn("lang", lit("de"))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_resume_store").toString
+    val store = TempDirs.scoped("graft_resume_store")
     SignatureStore.init(spark, store, nPrefixes = 8, k = 32, bands = 16,
       shingleN = 3)
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_resume_stage").toString
+    val stage = TempDirs.scoped("graft_resume_stage")
 
     def run(upTo: Int) = CleaningPipeline.runStages(docs, bench, stage,
       Seq("lang"), k = 32, bands = 16, shingleN = 3, maxBucket = 64,
@@ -232,12 +228,10 @@ class CleaningPipelineSpec extends AnyFunSuite {
 
     // crash BEFORE the append ever staged (attempt marker only): the
     // resume runs the append — exercised on a fresh store + stage dir
-    val store2 = java.nio.file.Files
-      .createTempDirectory("graft_resume_store2").toString
+    val store2 = TempDirs.scoped("graft_resume_store2")
     SignatureStore.init(spark, store2, nPrefixes = 8, k = 32, bands = 16,
       shingleN = 3)
-    val stage2 = java.nio.file.Files
-      .createTempDirectory("graft_resume_stage2").toString
+    val stage2 = TempDirs.scoped("graft_resume_stage2")
     CleaningPipeline.runStages(docs, bench, stage2, Nil, k = 32,
       bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
       minOverlap = 5, minRatio = 0.0, broadcastBench = true,
@@ -274,12 +268,10 @@ class CleaningPipelineSpec extends AnyFunSuite {
       .toDF("bench_id", "text")
     val docs = Seq((1L, words("a")), (2L, words("c")))
       .toDF("doc_id", "text")
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_tag_store").toString
+    val store = TempDirs.scoped("graft_tag_store")
     SignatureStore.init(spark, store, nPrefixes = 8, k = 32, bands = 16,
       shingleN = 3)
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_tag_stage").toString
+    val stage = TempDirs.scoped("graft_tag_stage")
     CleaningPipeline.runStages(docs, bench, stage, Nil, k = 32,
       bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
       minOverlap = 5, minRatio = 0.0, broadcastBench = true,
@@ -309,6 +301,37 @@ class CleaningPipelineSpec extends AnyFunSuite {
       metaJson)
   }
 
+  test("stage 4 resume: an empty attempt marker counts as not attempted and gets a fresh tag") {
+    import spark.implicits._
+    // the only way to leave an empty marker is a crash inside its own
+    // write, before recover and the append: the resume appends under a
+    // new tag, with strict (non-replay) monotone checking
+    val bench = Seq((900L, (1 to 12).map(i => s"b$i").mkString(" ")))
+      .toDF("bench_id", "text")
+    val docs = Seq((1L, words("a")), (2L, words("c")))
+      .toDF("doc_id", "text")
+    val store = TempDirs.scoped("graft_empty_tag_store")
+    SignatureStore.init(spark, store, nPrefixes = 8, k = 32, bands = 16,
+      shingleN = 3)
+    val stage = TempDirs.scoped("graft_empty_tag_stage")
+    def chain(upTo: Int) = CleaningPipeline.runStages(docs, bench, stage,
+      Nil, k = 32, bands = 16, shingleN = 3, maxBucket = 64,
+      minJaccard = 0.8, minOverlap = 5, minRatio = 0.0,
+      broadcastBench = true, storePath = Some(store),
+      allowStoreReplay = false, upTo = upTo)
+    chain(upTo = 3)
+    val marker = java.nio.file.Paths.get(s"$stage/stage4_store_attempt")
+    java.nio.file.Files.write(marker, Array.emptyByteArray)
+    chain(upTo = 4).get.count()
+    val tag = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
+    assert(tag.nonEmpty, "the empty marker was not re-tagged")
+    val metaJson = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$store/_store_meta.json")), "UTF-8")
+    assert(metaJson.contains(s""""lastCommitTag":"$tag""""), metaJson)
+    assert(spark.read.parquet(s"$store/shingles").select("doc_id").collect()
+      .map(_.getLong(0)).toSet == Set(1L, 2L))
+  }
+
   test("corpus text is read exactly once across the whole chain") {
     import spark.implicits._
     // byte-level FS statistics can't see Spark 4's local-parquet fast
@@ -319,8 +342,7 @@ class CleaningPipelineSpec extends AnyFunSuite {
     // the same table does. The independent-stages chain opens ~3× that.
     spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl",
       classOf[graft.tools.CountingLocalFs].getName)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_clean_once").toString
+    val dir = TempDirs.scoped("graft_clean_once")
     val rows = (0L until 3000L).map { i =>
       val base = words(s"d$i", 60)
       val t = if (i % 10 == 0) words(s"d${i - 1}", 60) + " extra" else base
@@ -356,8 +378,7 @@ class CleaningPipelineSpec extends AnyFunSuite {
     // the corpus exactly once (stage 0), and the resumed remainder —
     // driven entirely off the parquet-staged projection — opens corpus
     // files ZERO times
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_clean_once_stage").toString
+    val stage = TempDirs.scoped("graft_clean_once_stage")
     // killed run: reader constructed INSIDE the window, exactly like the
     // calibration scan, so any schema-inference opens cancel out
     graft.tools.CountingLocalFs.reset()
@@ -387,54 +408,40 @@ class CleaningPipelineSpec extends AnyFunSuite {
         "resume must run entirely off the staged projection")
   }
 
-  test("resume compatibility: a stage dir staged with raw-string shingle sets") {
+  test("resume refuses a stage dir whose _params has no shRepr line; the store is untouched") {
     import spark.implicits._
-    // a stage dir written by the pre-hashed engine: sh is array<string>,
-    // no nsh column. The resumed chain must (a) compute the same drops
-    // (decontamination adapts its bench side, Jaccard is representation-
-    // agnostic), (b) NOT rewrite the staged table, and (c) hash on the
-    // way into the store so the store contract holds.
-    val benchToks = (1 to 12).map(i => s"b$i").mkString(" ")
-    val bench = Seq((900L, benchToks)).toDF("bench_id", "text")
-    val doc3 = words("m")
-    val docs = Seq(
-      (1L, "x1 x2 " + benchToks + " y1 y2"), // contaminated
-      (3L, doc3), (4L, doc3),                // exact-dup pair: keep 3
-      (5L, words("m") + " x9"),              // near-dup of 3: drop
-      (6L, words("u")))                      // clean survivor
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // a stage dir from an engine that predates the shRepr line (and with
+    // it hashed shingle sets, the nsh column and tagged store-attempt
+    // markers): staged through stage 3 here, then its _params rewritten
+    // without the line. The resume must refuse before touching the store
+    // — no recover, no append.
+    val bench = Seq((900L, (1 to 12).map(i => s"b$i").mkString(" ")))
+      .toDF("bench_id", "text")
+    val docs = Seq((1L, words("a")), (2L, words("c")))
       .toDF("doc_id", "text")
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_legacy_stage").toString
-    docs.select(col("doc_id"),
-        md5(col("text").cast("binary")).as("_h"),
-        graft.ops.Dedup.distinctShingles(col("text"), 3).as("sh"),
-        graft.ops.Dedup.minhashSignature(col("text"), 32, 3).as("sig"))
-      .write.parquet(s"$stage/staged")
-    assert(spark.read.parquet(s"$stage/staged").schema("sh").dataType ==
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, true))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_legacy_store").toString
+    val store = TempDirs.scoped("graft_legacy_store")
     SignatureStore.init(spark, store, nPrefixes = 8, k = 32, bands = 16,
       shingleN = 3)
-    val kept = CleaningPipeline.cleanedMetaResumable(docs, bench, stage,
+    val stage = TempDirs.scoped("graft_legacy_stage")
+    def chain(upTo: Int) = CleaningPipeline.runStages(docs, bench, stage,
       Nil, k = 32, bands = 16, shingleN = 3, maxBucket = 64,
-      minJaccard = 0.8, minOverlap = 5, storePath = Some(store))
-      .collect().map(_.getLong(0)).toSet
-    assert(kept == Set(3L, 6L))
-    // staged table untouched (still raw strings), store hashed
-    assert(spark.read.parquet(s"$stage/staged").schema("sh").dataType ==
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, true))
-    assert(spark.read.parquet(s"$store/shingles").schema("sh").dataType
-      match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, _) => true
-        case _ => false
-      })
-    // the hashed store answers probes like a natively-hashed one
-    val probe6 = Seq((100L, words("u") + " tail")).toDF("doc_id", "text")
-    assert(SignatureStore.probe(spark, store, probe6).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((6L, 100L)))
+      minJaccard = 0.8, minOverlap = 5, minRatio = 0.0,
+      broadcastBench = true, storePath = Some(store),
+      allowStoreReplay = false, upTo = upTo)
+    chain(upTo = 3)
+    val params = Paths.get(s"$stage/_params")
+    Files.write(params, Files.readAllLines(params).asScala
+      .filterNot(_.startsWith("shRepr=")).mkString("\n").getBytes("UTF-8"))
+    def storeFiles(): Map[String, Seq[Byte]] =
+      Files.walk(Paths.get(store)).iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .map(f => f.toString -> Files.readAllBytes(f).toSeq).toMap
+    val before = storeFiles()
+    val err = intercept[IllegalArgumentException](chain(upTo = 4))
+    assert(err.getMessage.contains("use a new stageDir"), err.getMessage)
+    assert(storeFiles() == before, "the refused resume changed the store")
+    assert(!Files.exists(Paths.get(s"$stage/stage4_store_attempt")))
   }
 }

@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.graph.GraphMaterialize
 import graft.sources.JsonlArticles
+import graft.tools.TempDirs
 
 /** Remaining SURVEY §2 operator coverage: compressed JSONL round-trip
   * (S1/K1), selective id fetch (S4), semicolon CSV (S6), accent-folded
@@ -19,7 +18,7 @@ class CoverageSpec extends AnyFunSuite {
 
   test("S1/K1: jsonl.bz2 write + glob read round-trip") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("bz2rt").toString
+    val dir = TempDirs.scoped("bz2rt")
     val rows = Seq(
       """{"id":"GDL-1936-05-02-a-i0001","tp":"ar","ft":"Selon Reuters hier.","lg_comp":"fr","ts":"2019-10-17T11:49:50Z"}""",
       """{"id":"GDL-1936-05-03-a-i0002","tp":"ad","ft":"pub","lg_comp":"fr","ts":"2019-10-17T11:49:50Z"}""")
@@ -36,7 +35,7 @@ class CoverageSpec extends AnyFunSuite {
 
   test("S4: selective fetch by id set (broadcast semi-join and isin)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sel").toString
+    val dir = TempDirs.scoped("sel")
     graft.synth.Synth.articles(spark, 200, 42L, 4)
       .write.mode("overwrite").parquet(dir)
     val all = spark.read.parquet(dir)
@@ -50,7 +49,7 @@ class CoverageSpec extends AnyFunSuite {
 
   test("S6: semicolon-separated CSV with explicit schema") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("csv").toString
+    val dir = TempDirs.scoped("csv")
     Seq("uid;size;newspaper", "a-1;120;GDL", "a-2;45;JDG")
       .toDF("value").coalesce(1).write.mode("overwrite").text(s"$dir/in")
     val df = spark.read

@@ -6,11 +6,34 @@ import org.apache.spark.sql.functions._
 import graft.eval.SpanEval
 import graft.graph.GraphMaterialize
 import graft.canon.ConnectedComponents
+import org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistLocalCheckpoint
 
 class EvalGraphSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
   import org.apache.spark.sql.DataFrame
+
+  /** CC pinned to the iterative loop: a small-solve limit of 0 rows. */
+  private def loopCC(edges: DataFrame): (DataFrame, Int) =
+    ConnectedComponents.runCounted(edges, 30, unionFindMaxRows = 0L,
+      relayoutMinRows = ConnectedComponents.RelayoutMinRows)
+
+  /** Whether a checkpointed sym table carries the propagation-join
+    * layout: sorted on `b` within partitions and, across more than one
+    * partition, hash-partitioned on `b` (one partition plans as
+    * `SinglePartition`). */
+  private def laidOutOnB(sym: DataFrame): Boolean =
+    sym.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        val onB = lr.outputPartitioning match {
+          case hp: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            hp.expressions.map(_.toString).mkString.startsWith("b#")
+          case p => p.numPartitions == 1
+        }
+        onB && lr.outputOrdering.headOption
+          .exists(_.child.toString.startsWith("b#"))
+      case _ => false
+    }
 
   private def spans(rows: (String, String, Int, Int)*): DataFrame = {
     import spark.implicits._
@@ -286,10 +309,9 @@ class EvalGraphSpec extends AnyFunSuite {
 
     val beforeIds = sc.getRDDStorageInfo.map(_.id).toSet
     // pin the ITERATIVE loop (this spec asserts the loop's per-round
-    // payload discipline; the auto gate would take the small-graph
+    // payload discipline; the row gate would take the small-graph
     // union-find here and trivialize it)
-    val (labels, rounds) =
-      ConnectedComponents.runCounted(edges, smallSolve = Some(false))
+    val (labels, rounds) = loopCC(edges)
     // the loop frees checkpoints with unpersist(blocking = false) — POLL
     // until the residual drops under the bound (or a generous timeout on
     // a loaded host) instead of a fixed sleep: a slow async unpersist
@@ -367,8 +389,7 @@ class EvalGraphSpec extends AnyFunSuite {
     // after the chain's ~6 rounds)
     import spark.implicits._
     val chain = (0L until 64L).sliding(2).map(s => (s(0), s(1))).toSeq
-    val (labels, rounds) = ConnectedComponents.runCounted(
-      chain.toDF("src", "dst"), smallSolve = Some(false))
+    val (labels, rounds) = loopCC(chain.toDF("src", "dst"))
     assert(rounds >= 4, s"fixture too shallow: $rounds")
     val carried = CheckpointBridge.carriedSizeInBytes(labels)
       .getOrElse(fail("terminal state not checkpoint-wrapped"))
@@ -389,29 +410,18 @@ class EvalGraphSpec extends AnyFunSuite {
     // one sort — both on the LABEL side.
     val edges = spark.range(0, 500, 1, 7)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
-    // the relayout is GATED on data volume: a toy graph coalesces to a
-    // handful of partitions and must keep AQE's small-stage plans (the
-    // ungated form doubled kg10/kg21 at sf0.1 — every round ran
-    // shuffle-partitions-many tasks on ~1k-row frames), while a
-    // data-dominated run must take the layout. Pin the auto gate's small
-    // side, then force the layout for the structural assertions below.
-    val auto = ConnectedComponents.symmetrized(edges)
-    import org.apache.spark.sql.graftbridge.CheckpointBridge
-    assert(CheckpointBridge.checkpointNumPartitions(auto)
-      .exists(_ < ConnectedComponents.RelayoutMinPartitions),
-      "fixture unexpectedly large — auto-gate small side not exercised")
-    auto.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        assert(!lr.outputPartitioning.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] ||
-          !lr.outputPartitioning.asInstanceOf[
-            org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
-            .expressions.map(_.toString).mkString.startsWith("b#"),
-          "small graph took the relayout — the gate is broken")
-      case _ => ()
-    }
-    CheckpointBridge.unpersistLocalCheckpoint(auto)
-    val sym = ConnectedComponents.symmetrized(edges, relayout = Some(true))
+    // the relayout is GATED on the measured row count: a toy graph must
+    // keep AQE's small-stage plans (the ungated form doubled kg10/kg21 at
+    // sf0.1 — every round ran shuffle-partitions-many tasks on ~1k-row
+    // frames), while a data-dominated run must take the layout. Pin the
+    // real gate's small side, then drop the limit to 0 for the
+    // structural assertions below.
+    val (auto, autoRows) = ConnectedComponents.symmetrized(edges,
+      ConnectedComponents.RelayoutMinRows)
+    assert(autoRows == 1000L)
+    assert(!laidOutOnB(auto), "small graph took the relayout — the gate is broken")
+    unpersistLocalCheckpoint(auto)
+    val (sym, _) = ConnectedComponents.symmetrized(edges, relayoutMinRows = 0L)
     sym.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         lr.outputPartitioning match {
@@ -477,21 +487,20 @@ class EvalGraphSpec extends AnyFunSuite {
     import spark.implicits._
     // deep chain (pointer compression territory) + star + triangle with a
     // redundant edge + isolated pair + duplicate/reversed input edges —
-    // the shapes the analytic queries produce. The auto gate takes the
-    // single-task union-find here (the graph coalesces to 1 partition);
-    // the forced loop is the reference.
+    // the shapes the analytic queries produce. The row gate takes the
+    // single-task union-find here (~90 sym rows); the loop, pinned by a
+    // small-solve limit of 0, is the reference.
     val edges = ((0L until 33L).sliding(2).map(s => (s(0), s(1))).toSeq ++
       Seq((100L, 101L), (100L, 102L), (100L, 103L),
         (200L, 201L), (201L, 202L), (200L, 202L), (202L, 200L),
         (300L, 301L), (301L, 300L))).toDF("src", "dst")
     val (fast, fastRounds) = ConnectedComponents.runCounted(edges)
-    val (loop, loopRounds) =
-      ConnectedComponents.runCounted(edges, smallSolve = Some(false))
+    val (loop, loopRounds) = loopCC(edges)
     val f = fast.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val l = loop.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(f == l, s"fast path diverged from the loop")
     // evidence each side actually ran: the gate fired (one "round"), the
-    // forced loop iterated the 33-chain
+    // pinned loop iterated the 33-chain
     assert(fastRounds == 1, s"auto gate did not take the fast path: $fastRounds")
     assert(loopRounds > 1, s"forced loop did not iterate: $loopRounds")
   }
@@ -509,36 +518,72 @@ class EvalGraphSpec extends AnyFunSuite {
     assert(bounded.where(col("component") =!= 0L).count() > 0)
   }
 
-  test("CC gates distrust partition counts when AQE coalescing is off") {
+  // --- gate matrix: the measured sym row count alone picks the path ---
+
+  private def chainDf(nodes: Long): DataFrame = {
     import spark.implicits._
-    // with coalescing off, the checkpoint materializes at the full
-    // shuffle-partition count, so partition count is NOT a volume signal
-    // (ADVICE r7): the small-solve gate must fall back to the loop, and
-    // the relayout gate must not fire on a toy graph
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val chain = (0L until 16L).sliding(2).map(s => (s(0), s(1))).toSeq
-        .toDF("src", "dst")
-      val (labels, rounds) = ConnectedComponents.runCounted(chain)
-      assert(rounds > 1, "small-solve gate fired without AQE coalescing")
-      assert(labels.collect().forall(_.getLong(1) == 0L))
-      val sym = ConnectedComponents.symmetrized(chain)
-      sym.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.outputPartitioning match {
-            case hp: org.apache.spark.sql.catalyst.plans.physical
-                .HashPartitioning =>
-              assert(!hp.expressions.map(_.toString).mkString
-                .startsWith("b#"),
-                "relayout gate fired without AQE coalescing")
-            case _ => ()
-          }
-        case _ => ()
+    (0L until nodes).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("src", "dst")
+  }
+
+  /** Runs `f` with the session confs set, restoring the previous values. */
+  private def withConfs[T](confs: Seq[(String, String)])(f: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Cells cross every session knob the old partition-count gates read
+    * with a chain on either side of a spec-set row limit: the path that
+    * runs must follow the row count alone. Chains of 16 and 48 nodes
+    * symmetrize to 30 and 94 rows. */
+  private val MatrixLimit = 60L
+  for {
+    aqe <- Seq(true, false)
+    partitions <- Seq(1, 8)
+    advisory <- Seq("default", "1g")
+    nodes <- Seq(16L, 48L)
+  } {
+    val symRows = 2 * (nodes - 1)
+    val above = symRows > MatrixLimit
+    test(s"CC gate matrix: AQE ${if (aqe) "on" else "off"}, $partitions " +
+      s"shuffle partitions, advisory size $advisory, graph " +
+      s"${if (above) "above" else "below"} the row limit") {
+      val confs = Seq("spark.sql.adaptive.enabled" -> aqe.toString,
+        "spark.sql.shuffle.partitions" -> partitions.toString) ++
+        Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory)
+          .filter(_._2 != "default")
+      withConfs(confs) {
+        val edges = chainDf(nodes)
+        // relayout side: laid out exactly when the count reaches the limit
+        val (sym, rows) = ConnectedComponents.symmetrized(edges, MatrixLimit + 1)
+        assert(rows == symRows)
+        assert(laidOutOnB(sym) == above, s"relayout gate at $rows rows")
+        unpersistLocalCheckpoint(sym)
+        // small-solve side: one round at or below the limit, the loop above
+        val (labels, rounds) = ConnectedComponents.runCounted(edges, 30,
+          unionFindMaxRows = MatrixLimit, relayoutMinRows = MatrixLimit + 1)
+        if (above) assert(rounds > 1, s"small solve ran at $rows rows")
+        else assert(rounds == 1, s"loop ran ($rounds rounds) at $rows rows")
+        val expected = graft.canon.LocalUnionFind.solve(edges.collect()
+          .iterator.map(r => (r.getLong(0), r.getLong(1)))).toSet
+        assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+          expected)
       }
-      org.apache.spark.sql.graftbridge.CheckpointBridge
-        .unpersistLocalCheckpoint(sym)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+  }
+
+  test("CC gate at the real constants: AQE off, 1 shuffle partition, a 16-node chain takes the small solve") {
+    withConfs(Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "1")) {
+      val (labels, rounds) = ConnectedComponents.runCounted(chainDf(16))
+      assert(rounds == 1, s"loop ran: $rounds rounds")
+      assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+        (0L until 16L).map(_ -> 0L).toSet)
+    }
   }
 
   test("LocalUnionFind: min-label components, rehash growth, determinism") {

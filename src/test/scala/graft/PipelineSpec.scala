@@ -17,6 +17,7 @@ import graft.graph.GraphMaterialize
 import graft.ner.{AliasTrieScorer, NerStage}
 import graft.pipeline.KgPipeline
 import graft.synth.Synth
+import graft.tools.TempDirs
 
 /** End-to-end pipeline specs, including THE acceptance gate:
   * engine mentions vs generator gold at P/R ≥ 0.95 (HIPE-fuzzy regime,
@@ -97,7 +98,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("resumable run: manifest skips finished buckets, output equals one-shot") {
-    val dir = Files.createTempDirectory("kg_resume").toString
+    val dir = TempDirs.scoped("kg_resume")
     val articles = Synth.articles(spark, 800, 42L, 8)
     val stats1 = KgPipeline.runResumable(articles, dir, buckets = 4)
     assert(stats1.map(_.bucket).sorted == Seq(0, 1, 2, 3))
@@ -124,7 +125,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("partial resume: wiping one bucket from the manifest recomputes only it") {
-    val dir = Files.createTempDirectory("kg_resume2").toString
+    val dir = TempDirs.scoped("kg_resume2")
     val articles = Synth.articles(spark, 400, 42L, 8)
     KgPipeline.runResumable(articles, dir, buckets = 4)
     // simulate a crash after 3 of 4 buckets: rewrite manifest without bucket 2
@@ -189,7 +190,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("bucket commit: at most 5 jobs per bucket, manifest counts equal the written rows") {
-    val dir = Files.createTempDirectory("kg_jobs").toString
+    val dir = TempDirs.scoped("kg_jobs")
     val n = 1200L
     val articles = Synth.articles(spark, n, 42L, 8)
     val (stats, jobs) = countingJobs(KgPipeline.runResumable(articles, dir, buckets = 8))
@@ -207,7 +208,7 @@ class PipelineSpec extends AnyFunSuite {
   test("empty buckets commit: 100 articles in 64 buckets run to completion") {
     // a bucket without a triple leaves no parquet file under triples/, and
     // one without an article none under _staging; both commit zeros
-    val dir = Files.createTempDirectory("kg_empty").toString
+    val dir = TempDirs.scoped("kg_empty")
     val articles = Synth.articles(spark, 100, 42L, 4)
     val stats = KgPipeline.runResumable(articles, dir, buckets = 64)
     assert(stats.map(_.bucket) == (0 until 64))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import graft.ner.{AliasTrieScorer, NerStage}
 import graft.synth.Synth
+import graft.tools.TempDirs
 
 /** Plan-quality regression tests: the physical plans the engine depends on
   * at 100 TB must not silently degrade — pushdown reaching the scan,
@@ -23,7 +24,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("NER gate predicates push down to the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("plan_corpus").toString
+    val dir = TempDirs.scoped("plan_corpus")
     Synth.articles(spark, 200, 42L, 2).write.mode("overwrite").parquet(dir)
     import spark.implicits._
     val gated = NerStage.gate(
@@ -43,7 +44,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("per-bucket KG plan reads only the NER columns of its one bucket") {
-    val dir = java.nio.file.Files.createTempDirectory("plan_bucketed").toString
+    val dir = TempDirs.scoped("plan_bucketed")
     Synth.articles(spark, 200, 42L, 2)
       .withColumn("_bucket", pmod(xxhash64(col("url")), lit(4)).cast("int"))
       .write.mode("overwrite").partitionBy("_bucket").parquet(dir)
@@ -83,7 +84,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join without an exchange (co-located big-big join)") {
-    val wh = java.nio.file.Files.createTempDirectory("wh").toString
+    val wh = TempDirs.scoped("wh")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1) // force SMJ path
     try {
       import spark.implicits._
@@ -114,8 +115,7 @@ class PlanSpec extends AnyFunSuite {
     val q = emb.where(col("vec_id") === 0)
       .select(col("embedding")).collect()(0).getSeq[Float](0)
     val (centers, assigned) = graft.ops.Ann.ivfIndex(emb, nlist = 8)
-    val path = java.nio.file.Files
-      .createTempDirectory("ivf_layout").toString
+    val path = TempDirs.scoped("ivf_layout")
     graft.ops.Ann.writeIvfLayout(assigned, path)
     // 8 list directories on disk, nprobe=2 search
     val dirs = new java.io.File(path).listFiles()
@@ -136,7 +136,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("cleaning pipeline: staged one-pass projection codegens off a pruned scan; bench probe broadcasts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("plan_clean").toString
+    val dir = TempDirs.scoped("plan_clean")
     (0L until 200L)
       .map(i => (i, "de", (1 to 20).map(t => s"w${i}_$t").mkString(" ")))
       .toDF("doc_id", "lang", "text")

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, SignatureStore}
+import graft.tools.TempDirs
 
 /** Incremental near-dup dedup against the persisted signature store:
   * (1) probe(store, batch) must emit exactly the batch-touching pairs the
@@ -37,8 +38,7 @@ class SignatureStoreSpec extends AnyFunSuite {
         (10006L, (1 to 20).map(t => s"g5_$t").mkString(" ") + " tail"))
     val batch = batchRows.toDF("doc_id", "text")
 
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore").toString
+    val path = TempDirs.scoped("graft_sigstore")
     SignatureStore.write(corpus, path, nPrefixes = 64, k = 32, bands = 16,
       shingleN = 3)
     val storeBytes = dirBytes(new java.io.File(path))
@@ -107,8 +107,7 @@ class SignatureStoreSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val batch = Seq((5000L, (1 to 20).map(t => s"x_$t").mkString(" ")))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore2").toString
+    val path = TempDirs.scoped("graft_sigstore2")
     SignatureStore.write(corpus, path, nPrefixes = 16)
     assert(SignatureStore.probe(spark, path, batch).count() == 0)
   }
@@ -118,8 +117,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     val corpus = (0L until 100L)
       .map(i => (i, (1 to 20).map(t => s"c${i}_$t").mkString(" ")))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore3").toString
+    val path = TempDirs.scoped("graft_sigstore3")
     SignatureStore.write(corpus, path, nPrefixes = 16, k = 32, bands = 16,
       shingleN = 3)
     // batch B: one fresh doc; appended after (an empty) probe
@@ -145,8 +143,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     val boiler = "b1 b2 b3 b4 b5 b6 b7 b8"
     val corpus = (0L until 100L).map(i => (i, boiler)).toDF("doc_id", "text")
     val batch = Seq((5000L, boiler)).toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore4").toString
+    val path = TempDirs.scoped("graft_sigstore4")
     SignatureStore.write(corpus, path, nPrefixes = 16, k = 32, bands = 16,
       shingleN = 3)
     assert(SignatureStore.probe(spark, path, batch, maxBucket = 50).count()
@@ -163,8 +160,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     val corpus = (0L until 10L)
       .map(i => (i, (1 to 20).map(t => s"c${i}_$t").mkString(" ")))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore5").toString
+    val path = TempDirs.scoped("graft_sigstore5")
     SignatureStore.write(corpus, path, nPrefixes = 8)
     // simulate a store from the historical char-level hash (version 1);
     // drop the Hadoop LocalFileSystem checksum sidecar the raw edit
@@ -188,8 +184,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     val corpus = (0L until 10L)
       .map(i => (i, (1 to 20).map(t => s"c${i}_$t").mkString(" ")))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_shrepr").toString
+    val path = TempDirs.scoped("graft_sigstore_shrepr")
     SignatureStore.write(corpus, path, nPrefixes = 8)
     // the at-rest representation is array<long> (Dedup.hashShingles)
     assert(spark.read.parquet(s"$path/shingles").schema("sh").dataType
@@ -235,8 +230,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     val corpus = (0L until 100L)
       .map(i => (i, (1 to 20).map(t => s"c${i}_$t").mkString(" ")))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_mono").toString
+    val path = TempDirs.scoped("graft_sigstore_mono")
     SignatureStore.write(corpus, path, nPrefixes = 16)
     // batch containing an id BELOW the stored max (99): a stored near-dup
     // would become the non-representative — the store must refuse
@@ -271,8 +265,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
     val corpus = (0L until 100L).map(i => (i, words(s"c$i")))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_crash").toString
+    val path = TempDirs.scoped("graft_sigstore_crash")
     SignatureStore.write(corpus, path, nPrefixes = 16, k = 32, bands = 16,
       shingleN = 3)
     assert(!SignatureStore.recover(spark, path)) // healthy: nothing to do
@@ -339,8 +332,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
     val corpus = (0L until 100L).map(i => (i, words(s"c$i")))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_compact").toString
+    val path = TempDirs.scoped("graft_sigstore_compact")
     SignatureStore.write(corpus, path, nPrefixes = 8, k = 32, bands = 16,
       shingleN = 3)
     // 5 micro-batch appends — the streaming loop's small-file shape
@@ -430,8 +422,7 @@ class SignatureStoreSpec extends AnyFunSuite {
       val batch = (0 until nBatch).map(i => (1000L + i, nextText()))
         .toDF("doc_id", "text")
       val maxBucket = if (rnd.nextBoolean()) 2 else 64
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft_sigstore_prop$seed").toString
+      val path = TempDirs.scoped(s"graft_sigstore_prop$seed")
       SignatureStore.write(old, path, nPrefixes = 8, k = 32, bands = 16,
         shingleN = 3)
       val got = SignatureStore
@@ -456,8 +447,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
     val corpus = (0L until 50L).map(i => (i, words(s"c$i")))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_replay").toString
+    val path = TempDirs.scoped("graft_sigstore_replay")
     SignatureStore.write(corpus, path, nPrefixes = 16, k = 32, bands = 16,
       shingleN = 3)
     // the batch: a near-dup of stored doc 7 + a fresh doc
@@ -506,8 +496,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     // init (no synthetic empty DataFrame, no data files at all), and the
     // first micro-batch must probe it without tripping parquet schema
     // inference
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_day0").toString
+    val path = TempDirs.scoped("graft_sigstore_day0")
     SignatureStore.init(spark, path, nPrefixes = 16, k = 32, bands = 16,
       shingleN = 3)
     // init is creation only — a second init on a live store refuses
@@ -543,8 +532,7 @@ class SignatureStoreSpec extends AnyFunSuite {
   test("threshold-gated compaction: only fragmented partitions move, probe parity, crash mid-swap recovers") {
     import spark.implicits._
     def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_partial").toString
+    val path = TempDirs.scoped("graft_sigstore_partial")
     val hconf = spark.sparkContext.hadoopConfiguration
     val f = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
     def partFiles(table: String, part: String): Set[String] = {
@@ -611,8 +599,7 @@ class SignatureStoreSpec extends AnyFunSuite {
 
   test("write on an empty corpus ≡ init: empty tables, MinValue watermark") {
     import spark.implicits._
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_emptyw").toString
+    val path = TempDirs.scoped("graft_sigstore_emptyw")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     SignatureStore.write(empty, path, nPrefixes = 16, k = 32, bands = 16,
       shingleN = 3)
@@ -635,8 +622,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     // scan of the same table — the historical 3-scan ingest opened ~3×.
     spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl",
       classOf[graft.tools.CountingLocalFs].getName)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sigstore_once").toString
+    val dir = TempDirs.scoped("graft_sigstore_once")
     (0L until 2000L)
       .map(i => (i, (1 to 30).map(t => s"c${i}_$t").mkString(" ")))
       .toDF("doc_id", "text").repartition(8)

@@ -1,20 +1,19 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ner.{AliasTrieScorer, NerStage}
 import graft.streaming.StreamingKg
 import graft.synth.Synth
+import graft.tools.TempDirs
 
 class StreamingSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
   test("streaming NER over a file source equals the batch result") {
-    val inDir = Files.createTempDirectory("stream_in").toString
-    val ckDir = Files.createTempDirectory("stream_ck").toString
+    val inDir = TempDirs.scoped("stream_in")
+    val ckDir = TempDirs.scoped("stream_ck")
     val articles = Synth.articles(spark, 500, 42L, 4)
     articles.write.mode("overwrite").parquet(inDir)
 
@@ -42,8 +41,8 @@ class StreamingSpec extends AnyFunSuite {
   test("windowed mention rates: event-time windows close as the watermark advances") {
     import spark.implicits._
     import graft.core.Mention
-    val inDir = Files.createTempDirectory("rates_in").toString
-    val ckDir = Files.createTempDirectory("rates_ck").toString
+    val inDir = TempDirs.scoped("rates_in")
+    val ckDir = TempDirs.scoped("rates_ck")
     def m(url: String, name: String) =
       Mention(url, "org.ent.pressagency." + name, name, name, "Q1", 0, 0, 5,
         0, 5, 1.0, "fr", url + ":0:5")
@@ -97,8 +96,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stateful streaming dedup: first-seen wins across micro-batches, state counts dups") {
     import spark.implicits._
-    val inDir = Files.createTempDirectory("dedup_in").toString
-    val ckDir = Files.createTempDirectory("dedup_ck").toString
+    val inDir = TempDirs.scoped("dedup_in")
+    val ckDir = TempDirs.scoped("dedup_ck")
     // batch 1: two distinct texts, one duplicated within the batch
     Seq((1L, "alpha beta"), (2L, "alpha beta"), (3L, "gamma delta"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(inDir)
@@ -132,10 +131,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming NEAR-dup dedup: store probe + survivor append across micro-batches") {
     import spark.implicits._
-    val inDir = Files.createTempDirectory("nd_in").toString
-    val ckDir = Files.createTempDirectory("nd_ck").toString
-    val outDir = Files.createTempDirectory("nd_out").toString + "/survivors"
-    val store = Files.createTempDirectory("nd_store").toString
+    val inDir = TempDirs.scoped("nd_in")
+    val ckDir = TempDirs.scoped("nd_ck")
+    val outDir = TempDirs.scoped("nd_out") + "/survivors"
+    val store = TempDirs.scoped("nd_store")
     def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
     // seed corpus in the store: docs 0..49
     val corpus = (0L until 50L).map(i => (i, words(s"c$i")))
@@ -184,9 +183,9 @@ class StreamingSpec extends AnyFunSuite {
     // threshold-gated compaction every 10 batches, the file count must
     // stay bounded by the cadence — and the LAST batch triggers a
     // compact, so every partition ends at or under the bound.
-    val ckDir = Files.createTempDirectory("soak_ck").toString
-    val outDir = Files.createTempDirectory("soak_out").toString + "/survivors"
-    val store = Files.createTempDirectory("soak_store").toString
+    val ckDir = TempDirs.scoped("soak_ck")
+    val outDir = TempDirs.scoped("soak_out") + "/survivors"
+    val store = TempDirs.scoped("soak_store")
     def words(p: String) = (1 to 15).map(t => s"${p}_$t").mkString(" ")
     graft.ops.SignatureStore.init(spark, store, nPrefixes = 8, k = 32,
       bands = 16, shingleN = 3)
