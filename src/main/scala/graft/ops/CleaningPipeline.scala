@@ -2,11 +2,11 @@ package graft.ops
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.KgPipeline
+import graft.pipeline.{KgPipeline, ManifestRecord}
 
 /** The composed corpus-cleaning pipeline a training-data user actually
   * runs — `decontaminate → exact dedup → near-dup dedup → (optionally)
@@ -81,7 +81,12 @@ object CleaningPipeline {
     *                      the (journaled, crash-recoverable) store
     *                      append, so a resume neither skips nor
     *                      double-runs it (see [[SignatureStore.recover]]).
-    *  - `_manifest/`    — per-stage lineage: `(stage, rows, wall_ms)`.
+    *  - `_manifest/`    — per-stage lineage: `(stage, rows, wall_ms)`, one
+    *                      one-row parquet file per completed stage, written
+    *                      on the driver with no Spark job and renamed into
+    *                      place ([[graft.pipeline.ManifestRecord]]); files
+    *                      an older engine appended with Spark read
+    *                      alongside.
     *
     * CONTRACT (same as KgPipeline staging): the run binds to the FIRST
     * input staged into `stageDir` — resuming with different/extra `docs`
@@ -89,9 +94,9 @@ object CleaningPipeline {
     * flagged set, not the new input; a new input needs a new `stageDir`.
     * Single writer per `stageDir`. `broadcastBench` is an execution
     * hint, not semantics, so it is not part of the parameter manifest.
-    * Stage-dir paths are driver-local by the sandbox contract (the
-    * KgPipeline note applies verbatim); a cluster deployment swaps the
-    * java.nio checks for the Hadoop FileSystem API. A crash between a
+    * The `_params` file and the stage-4 markers are read and written with
+    * java.nio, so they need a driver-local `stageDir`; the manifest rows
+    * go through the Hadoop FileSystem API. A crash between a
     * stage's parquet write and its manifest append loses that stage's
     * `_manifest` ROW only — the stage itself (gated on `_SUCCESS`, not
     * the manifest) resumes correctly.
@@ -123,9 +128,14 @@ object CleaningPipeline {
       maxBucket, minJaccard, minOverlap, minRatio, broadcastBench,
       storePath, allowStoreReplay, upTo = 4).get
 
+  /** One `_manifest` row: a completed stage, the rows its write
+    * produced, and its wall time. */
+  private[graft] final case class StageStat(stage: Int, rows: Long, wall_ms: Long)
+
   /** Per-stage lineage/metrics view over a resumable run's manifest. */
   def manifest(spark: SparkSession, stageDir: String): DataFrame =
-    spark.read.parquet(s"$stageDir/_manifest")
+    spark.read.schema(Encoders.product[StageStat].schema)
+      .parquet(s"$stageDir/_manifest")
 
   /** The cleaning chain as a full corpus TRANSFORM: input rows minus
     * contaminated documents, exact-duplicate non-representatives, and
@@ -265,13 +275,11 @@ object CleaningPipeline {
     // each manifest row count is OBSERVED on the stage's own write job
     // (`KgPipeline.observedRows`), never read back: a read-back count is
     // one extra job per stage — and for stage 0 a full scan of the
-    // corpus-sized staged artifact just to count its rows.
-    def record(stage: Int, rows: Long): Unit = {
-      import spark.implicits._
-      Seq((stage, rows, (System.nanoTime() - t0) / 1000000L))
-        .toDF("stage", "rows", "wall_ms")
-        .write.mode(SaveMode.Append).parquet(manifestDir)
-    }
+    // corpus-sized staged artifact just to count its rows. The row itself
+    // is written on the driver, with no job.
+    def record(stage: Int, rows: Long): Unit =
+      ManifestRecord.append(spark, manifestDir,
+        StageStat(stage, rows, (System.nanoTime() - t0) / 1000000L))
 
     // stage 0 — THE text pass, at rest (staging the BINDING run's keep
     // columns, a superset of this caller's). `nsh` carries the shingle

@@ -31,23 +31,6 @@ object Sampling {
       .where(col("_rn") <= nPerStratum)
       .drop("_rn")
 
-  /** P2: proportionate stratified sample — per-stratum quota
-    * `n_i = round(N_i / N * n)` (reference `stratified_sample`,
-    * `sampling.ipynb cell 44`), window-computed so the strata sizes never
-    * leave the cluster. */
-  def proportionateStratified(df: DataFrame, strata: Column, key: Column,
-      totalN: Long): DataFrame = {
-    val w = Window.partitionBy(strata)
-    df.withColumn("_stratumN", count(lit(1)).over(w))
-      .withColumn("_totalN", count(lit(1)).over(Window.partitionBy()))
-      .withColumn("_quota",
-        greatest(round(col("_stratumN") / col("_totalN") * totalN), lit(1)))
-      .withColumn("_rn",
-        row_number().over(Window.partitionBy(strata).orderBy(hashKey(key).asc)))
-      .where(col("_rn") <= col("_quota"))
-      .drop("_stratumN", "_totalN", "_quota", "_rn")
-  }
-
   /** P4: stratified train/dev/test split by hash bucket (80/10/10 style).
     * Returns df with a `split` column; per-stratum proportions hold in
     * expectation and the assignment is content-stable. */

@@ -54,19 +54,9 @@ object TextAnalysis {
         size(array_distinct(toks)).cast("double") / size(toks))
   }
 
-  /** Composite quality score in [0,1]: length in range, some stopwords,
-    * lexical diversity. Deterministic, monotone in its features. */
-  def qualityScore(docs: DataFrame, textCol: String = "text"): DataFrame =
-    qualityFeatures(docs, textCol)
-      .withColumn("quality",
-        round(
-          when(col("n_tokens") >= 10 && col("n_tokens") <= 10000, 0.4)
-            .otherwise(0.0) +
-            least(col("stopword_ratio") * 2, lit(0.3)) +
-            col("distinct_token_ratio") * 0.3,
-          6))
-
-  /** Exact-integer quality in micro-units — the oracle-hashable form.
+  /** Composite quality score in [0,1] — length in range, some stopwords,
+    * lexical diversity — in exact-integer micro-units, the oracle-hashable
+    * form.
     *
     * The score `q = 0.4·inRange + min(2·stop/n, 0.3) + 0.3·distinct/n` has
     * the exact integer representation `10n·q = 4n·inRange +

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.eval.SpanEval
 import graft.graph.GraphMaterialize
 import graft.canon.ConnectedComponents
+import graft.SparkTestSession.withConfs
 import org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistLocalCheckpoint
 
 class EvalGraphSpec extends AnyFunSuite {
@@ -523,17 +524,6 @@ class EvalGraphSpec extends AnyFunSuite {
   private def chainDf(nodes: Long): DataFrame = {
     import spark.implicits._
     (0L until nodes).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("src", "dst")
-  }
-
-  /** Runs `f` with the session confs set, restoring the previous values. */
-  private def withConfs[T](confs: Seq[(String, String)])(f: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   /** Cells cross every session knob the old partition-count gates read

@@ -13,7 +13,9 @@ import graft.sources.JsonlArticles
   *  - row 2 (JDG-1951) has text but no mention → empty;
   *  - row 3 (GDL-1987) is `tp:"ad"` → filtered, empty.
   */
-class GoldenParitySpec extends AnyFunSuite {
+class GoldenParitySpec extends AnyFunSuite with EvidenceFamily {
+
+  def evidence = "golden parity"
 
   private lazy val spark = SparkTestSession.spark
   private val fixture = "/root/reference/tests/na_tagger_in.jsonl"

@@ -14,7 +14,9 @@ import graft.sources.ConllTsvReader
   * its `ent_type` regime (type match + boundary overlap) — SURVEY §5.2
   * item 3.
   */
-class HipeParitySpec extends AnyFunSuite {
+class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
+
+  def evidence = "HIPE parity"
 
   private lazy val spark = SparkTestSession.spark
   private val base =

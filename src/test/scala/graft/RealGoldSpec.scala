@@ -20,7 +20,9 @@ import graft.text.PunctTokenizer
   * text and the reference's baseline doesn't either; this spec documents
   * the real-data numbers and pins them as a regression floor.
   */
-class RealGoldSpec extends AnyFunSuite {
+class RealGoldSpec extends AnyFunSuite with EvidenceFamily {
+
+  def evidence = "real gold"
 
   private lazy val spark = SparkTestSession.spark
 

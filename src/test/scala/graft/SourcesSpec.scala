@@ -6,7 +6,9 @@ import graft.sources.ConllTsvReader
 import graft.link.Linker
 import org.apache.spark.sql.functions._
 
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with EvidenceFamily {
+
+  def evidence = "CoNLL/XMI sources"
 
   private lazy val spark = SparkTestSession.spark
 
