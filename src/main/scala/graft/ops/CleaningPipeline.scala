@@ -1,7 +1,9 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.net.URI
+import java.util.UUID
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,16 +59,24 @@ object CleaningPipeline {
     *
     * The one-pass `(doc_id, keep…, _h, sh, sig)` projection is staged to
     * PARQUET under `stageDir`, and every stage persists its (id-only,
-    * tiny) output with a completion marker, so a crashed chain RESUMES
-    * from the last completed stage without re-scanning corpus text. At
-    * 100 TB the cleaning chain is a multi-hour job; any stage re-reads
-    * only the columns it needs (the text column does not exist in the
-    * staged table at all), the same manifest-resume discipline as
-    * [[graft.pipeline.KgPipeline.runResumable]].
+    * tiny) output and then commits a `_manifest` row, so a crashed chain
+    * RESUMES from the last committed stage without re-scanning corpus
+    * text. At 100 TB the cleaning chain is a multi-hour job; any stage
+    * re-reads only the columns it needs (the text column does not exist
+    * in the staged table at all).
     *
-    * Layout under `stageDir` (each stage gated on its own parquet
-    * `_SUCCESS` marker — a write that died mid-stage is rewritten, never
-    * trusted):
+    * Resume rule — the one of [[graft.pipeline.KgPipeline.runResumable]]:
+    * the committed stages are the longest prefix 0..j that has `_manifest`
+    * rows, read once at entry after the `_params` check (a fresh
+    * `stageDir` has no `_manifest`, so nothing is read). Every later stage
+    * runs: a write that died mid-stage, or a crash between a stage's write
+    * and its row, is rewritten, never trusted; rows past the first gap
+    * are deleted before their stages re-run, so each stage keeps one row.
+    *
+    * Layout under `stageDir` (every file the driver writes goes through
+    * [[graft.pipeline.ManifestRecord]]'s temp + rename writer on the
+    * Hadoop `FileSystem` of `stageDir`, so any Hadoop filesystem works and
+    * a crash never leaves a truncated file):
     *
     *  - `_params`       — the run's parameters and the shingle sets'
     *                      representation (`shRepr`); a resume with
@@ -77,16 +87,16 @@ object CleaningPipeline {
     *  - `staged/`       — THE text pass: hash + shingles + signature.
     *  - `stage1_flagged/`, `stage2_exact_drops/`, `stage3_near_drops/`
     *                    — per-stage dropped-id sets.
-    *  - `stage4_store_attempt` / `stage4_store_done` — markers around
-    *                      the (journaled, crash-recoverable) store
-    *                      append, so a resume neither skips nor
-    *                      double-runs it (see [[SignatureStore.recover]]).
-    *  - `_manifest/`    — per-stage lineage: `(stage, rows, wall_ms)`, one
-    *                      one-row parquet file per completed stage, written
-    *                      on the driver with no Spark job and renamed into
-    *                      place ([[graft.pipeline.ManifestRecord]]); files
-    *                      an older engine appended with Spark read
-    *                      alongside.
+    *  - `stage4_store_attempt` — the commit tag of the (journaled,
+    *                      crash-recoverable) store append, so a resume
+    *                      neither skips nor double-runs it (see
+    *                      [[SignatureStore.recover]]); stage 4's row
+    *                      commits it.
+    *  - `_manifest/`    — per-stage lineage and the commit record:
+    *                      `(stage, rows, wall_ms)`, one one-row parquet
+    *                      file per committed stage, written on the driver
+    *                      with no Spark job; files an older engine appended
+    *                      with Spark read alongside.
     *
     * CONTRACT (same as KgPipeline staging): the run binds to the FIRST
     * input staged into `stageDir` — resuming with different/extra `docs`
@@ -94,12 +104,6 @@ object CleaningPipeline {
     * flagged set, not the new input; a new input needs a new `stageDir`.
     * Single writer per `stageDir`. `broadcastBench` is an execution
     * hint, not semantics, so it is not part of the parameter manifest.
-    * The `_params` file and the stage-4 markers are read and written with
-    * java.nio, so they need a driver-local `stageDir`; the manifest rows
-    * go through the Hadoop FileSystem API. A crash between a
-    * stage's parquet write and its manifest append loses that stage's
-    * `_manifest` ROW only — the stage itself (gated on `_SUCCESS`, not
-    * the manifest) resumes correctly.
     *
     * `allowStoreReplay`: a RE-RUN of the same cleaning job after its
     * store append already committed re-appends the same survivors —
@@ -163,10 +167,7 @@ object CleaningPipeline {
         storePath, allowStoreReplay),
       Seq("doc_id"), "left_semi")
 
-  private def hasSuccess(dir: String): Boolean =
-    Files.exists(Paths.get(s"$dir/_SUCCESS"))
-
-  /** Atomic (temp + move) parameter-manifest write. On resume the
+  /** The parameter file, written through [[ManifestRecord]]. On resume the
     * banding/threshold parameters must equal the stored manifest EXACTLY
     * (staged signatures computed under one banding are not valid under
     * another); `keepCols` is compatibility-checked as a SUBSET instead —
@@ -175,11 +176,10 @@ object CleaningPipeline {
     * reads a strict subset of what is staged. Returns the effective
     * (binding-run) keep columns, which stage 0 must stage if it still
     * has to run. */
-  private def checkOrWriteParams(stageDir: String, core: String,
-      keepCols: Seq[String]): Seq[String] = {
-    val p = Paths.get(s"$stageDir/_params")
-    if (Files.exists(p)) {
-      val stored = new String(Files.readAllBytes(p), "UTF-8")
+  private def checkOrWriteParams(spark: SparkSession, stageDir: String,
+      core: String, keepCols: Seq[String]): Seq[String] = {
+    val p = new Path(s"$stageDir/_params")
+    ManifestRecord.readString(spark, p).map { stored =>
       val lines = stored.split("\n", -1).toSeq
       val storedCore = lines
         .filterNot(l => l.startsWith("keepCols=") ||
@@ -207,20 +207,17 @@ object CleaningPipeline {
           s"'${SignatureStore.ShRepr}' — overlap joins across " +
           "representations match nothing; use a new stageDir")
       storedKeep
-    } else {
-      Files.createDirectories(p.getParent)
-      val tmp = Paths.get(s"$stageDir/._params.tmp")
-      Files.write(tmp,
-        (s"$core\nshRepr=${SignatureStore.ShRepr}\n" +
-          s"keepCols=${keepCols.mkString(",")}\n").getBytes("UTF-8"))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+    }.getOrElse {
+      ManifestRecord.writeString(spark, p,
+        s"$core\nshRepr=${SignatureStore.ShRepr}\n" +
+          s"keepCols=${keepCols.mkString(",")}\n")
       keepCols
     }
   }
 
   /** Runs stages 0..`upTo` (0=staging text pass, 1=decontaminate,
-    * 2=exact drops, 3=near-dup drops, 4=store append), skipping stages
-    * whose output already carries a completion marker. Returns the
+    * 2=exact drops, 3=near-dup drops, 4=store append), skipping the
+    * committed ones (the resume rule of [[cleanedMetaResumable]]). Returns the
     * survivor frame once stage 3 is available and `upTo` ≥ 4.
     * Package-private so the spec can kill the chain between stages and
     * resume it. */
@@ -241,12 +238,14 @@ object CleaningPipeline {
     // resume mistakenly pointed at a DIFFERENT store refuses here —
     // before the recover() below could replay that store's pending
     // journal (which may belong to another in-flight writer's commit)
-    val stagedKeep = checkOrWriteParams(stageDir,
+    val stagedKeep = checkOrWriteParams(spark, stageDir,
       s"k=$k\nbands=$bands\nshingleN=$shingleN\nmaxBucket=$maxBucket\n" +
         s"minJaccard=$minJaccard\nminOverlap=$minOverlap\n" +
         s"minRatio=$minRatio\n" +
         s"storePath=${storePath.getOrElse("")}",
       keepCols)
+    val fs = new Path(stageDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val attempt = new Path(s"$stageDir/stage4_store_attempt")
     storePath.foreach { p =>
       // a prior attempt that crashed INSIDE the store's commit window
       // leaves the journal present and the metadata deleted — the plain
@@ -255,8 +254,7 @@ object CleaningPipeline {
       // interrupted commit is OURS (single-writer contract, and the
       // params check above proved this resume targets the same store),
       // so replay it before reading the metadata.
-      if (Files.exists(Paths.get(s"$stageDir/stage4_store_attempt")))
-        SignatureStore.recover(spark, p)
+      if (fs.exists(attempt)) SignatureStore.recover(spark, p)
       val m = SignatureStore.readMeta(spark, p)
       require(m.k == k && m.bands == bands && m.shingleN == shingleN,
         s"store $p has (k=${m.k}, bands=${m.bands}, shingleN=${m.shingleN})" +
@@ -270,6 +268,20 @@ object CleaningPipeline {
     val exactDir = s"$stageDir/stage2_exact_drops"
     val nearDir = s"$stageDir/stage3_near_drops"
     val manifestDir = s"$stageDir/_manifest"
+
+    // stage s is committed when s and every stage before it have a
+    // manifest row. Rows past the first gap are stale: their stages
+    // re-run and record again, so they are deleted first. A fresh
+    // stageDir has no manifest and reads none.
+    val rows =
+      if (!fs.exists(new Path(manifestDir))) Seq.empty[(Int, String)]
+      else manifest(spark, stageDir)
+        .select(col("stage"), col("_metadata.file_path")).collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSeq
+    val committed = Iterator.from(0).takeWhile(s => rows.exists(_._1 == s)).size
+    rows.filter(_._1 >= committed)
+      .foreach { case (_, file) => fs.delete(new Path(new URI(file)), false) }
+    def done(stage: Int) = stage < committed
 
     var t0 = System.nanoTime()
     // each manifest row count is OBSERVED on the stage's own write job
@@ -285,7 +297,7 @@ object CleaningPipeline {
     // columns, a superset of this caller's). `nsh` carries the shingle
     // count as its own tiny column so stage 3's sub-shingle gate never
     // has to decode the heavy `sh` array just to take its size.
-    if (!hasSuccess(stagedDir)) {
+    if (!done(0)) {
       val (df0, rows0) = KgPipeline.observedRows(docs.select(
           Seq(col("doc_id")) ++ stagedKeep.map(col) ++ Seq(
             md5(col("text").cast("binary")).as("_h"),
@@ -315,7 +327,7 @@ object CleaningPipeline {
 
     // stage 1 — decontamination flags over the staged shingle sets
     t0 = System.nanoTime()
-    if (!hasSuccess(flaggedDir)) {
+    if (!done(1)) {
       val (df1, rows1) = KgPipeline.observedRows(
         Decontaminate.contaminationReportOnShingles(
             staged.select(col("doc_id"), col("sh")), bench, shingleN,
@@ -330,7 +342,7 @@ object CleaningPipeline {
 
     // stage 2 — exact-duplicate drops (digest-keyed window, hash+id only)
     t0 = System.nanoTime()
-    if (!hasSuccess(exactDir)) {
+    if (!done(2)) {
       val (df2, rows2) = KgPipeline.observedRows(
         staged.select(col("doc_id"), col("_h"))
           .join(flagged, Seq("doc_id"), "left_anti")
@@ -353,7 +365,7 @@ object CleaningPipeline {
     // never ride through an anti-join exchange, and the core reduces
     // them to the candidate population before its two verify joins.
     t0 = System.nanoTime()
-    if (!hasSuccess(nearDir)) {
+    if (!done(3)) {
       val sigs = staged
         .where(col("nsh") > 0).select(col("doc_id"), col("sig"))
         .join(flagged, Seq("doc_id"), "left_anti")
@@ -376,51 +388,45 @@ object CleaningPipeline {
 
     // stage 4 — fold survivors into the incremental store (signatures
     // already at rest; the append itself is a journaled staged commit)
-    storePath.foreach { sp =>
-      val done = Paths.get(s"$stageDir/stage4_store_done")
-      val attempt = Paths.get(s"$stageDir/stage4_store_attempt")
-      if (!Files.exists(done)) {
-        t0 = System.nanoTime()
-        // the attempt marker carries this run's commit tag, so a resumed
-        // attempt asks the STORE whether this exact append committed —
-        // a POSITIVE record (ADVICE r6) instead of a watermark inference,
-        // which wrongly skips the append when the watermark already
-        // covers the batch ids for another reason (an allowStoreReplay
-        // re-run, or a store advanced by a later batch) after a crash
-        // BEFORE the commit. An EMPTY marker can only come from a crash
-        // inside its own write, before recover and the append: not
-        // attempted, so it gets a fresh tag.
-        val priorTag =
-          if (Files.exists(attempt))
-            new String(Files.readAllBytes(attempt), "UTF-8").trim
-          else ""
-        val attempted = priorTag.nonEmpty
-        val tag =
-          if (attempted) priorTag
-          else {
-            val t = java.util.UUID.randomUUID().toString
-            Files.write(attempt, t.getBytes("UTF-8"))
-            t
-          }
-        // finish any journaled commit a crashed attempt left behind —
-        // after this the store is consistent: the prior append either
-        // fully committed (metadata then carries its tag) or never
-        // touched the live store
-        SignatureStore.recover(spark, sp)
-        if (!attempted ||
-          SignatureStore.readMeta(spark, sp).lastCommitTag != tag) {
-          val surv = survivorIds(Seq("doc_id", "nsh", "sh", "sig"))
-          SignatureStore.appendSignatures(spark, sp,
-            Dedup.bandRowsFromSigs(
-              surv.where(col("nsh") > 0)
-                .select(col("doc_id"), col("sig")), k, bands),
-            surv.select(col("doc_id"), col("sh")),
-            allowReplay = allowStoreReplay || attempted,
-            commitTag = Some(tag))
+    if (!done(4)) storePath.foreach { sp =>
+      t0 = System.nanoTime()
+      // the attempt marker carries this run's commit tag, so a resumed
+      // attempt asks the STORE whether this exact append committed —
+      // a POSITIVE record instead of a watermark inference,
+      // which wrongly skips the append when the watermark already
+      // covers the batch ids for another reason (an allowStoreReplay
+      // re-run, or a store advanced by a later batch) after a crash
+      // BEFORE the commit. An EMPTY marker (left by an engine that
+      // wrote it in place) is not an attempt: it is deleted, and the
+      // fresh tag is renamed onto the absent path.
+      val priorTag =
+        ManifestRecord.readString(spark, attempt).map(_.trim).getOrElse("")
+      val attempted = priorTag.nonEmpty
+      val tag =
+        if (attempted) priorTag
+        else {
+          val t = UUID.randomUUID().toString
+          fs.delete(attempt, false)
+          ManifestRecord.writeString(spark, attempt, t)
+          t
         }
-        Files.createFile(done)
-        record(4, 0L)
+      // finish any journaled commit a crashed attempt left behind —
+      // after this the store is consistent: the prior append either
+      // fully committed (metadata then carries its tag) or never
+      // touched the live store
+      SignatureStore.recover(spark, sp)
+      if (!attempted ||
+        SignatureStore.readMeta(spark, sp).lastCommitTag != tag) {
+        val surv = survivorIds(Seq("doc_id", "nsh", "sh", "sig"))
+        SignatureStore.appendSignatures(spark, sp,
+          Dedup.bandRowsFromSigs(
+            surv.where(col("nsh") > 0)
+              .select(col("doc_id"), col("sig")), k, bands),
+          surv.select(col("doc_id"), col("sh")),
+          allowReplay = allowStoreReplay || attempted,
+          commitTag = Some(tag))
       }
+      record(4, 0L)
     }
 
     Some(survivorIds("doc_id" +: keepCols))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import graft.pipeline.ManifestRecord
+
 /** Incremental near-dup dedup against a PERSISTED signature store — the
   * IVF-physical-layout move ([[Ann.writeIvfLayout]]) applied to MinHash:
   * band keys and distinct shingle sets are written once at ingest with a
@@ -57,7 +59,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * [[recover]] replays the remaining renames idempotently and restores
   * the metadata — no corpus re-ingest. A crash BEFORE the journal leaves
   * the live store untouched. [[compact]] uses the same journaled
-  * discipline with whole-directory swaps.
+  * discipline with partition-directory swaps. The journal's op is
+  * `append` (staged files move into the live partitions) or
+  * `replace_parts` (staged partition directories replace live ones);
+  * any other op is refused before the live store is touched. The
+  * metadata and the journal are written through
+  * [[graft.pipeline.ManifestRecord]]'s temp + rename writer, so a crash
+  * never leaves either truncated.
   *
   * SINGLE-WRITER CONTRACT: at most one process appends/compacts a store
   * at a time (the streaming loop, a batch ingest, or an operator — never
@@ -499,7 +507,7 @@ object SignatureStore {
     // the good live metadata and brick the store the journal was supposed
     // to protect
     parseMeta(j.meta, s"journal ${journalPath(path)}")
-    require(j.op == "append" || j.op == "replace" || j.op == "replace_parts",
+    require(j.op == "append" || j.op == "replace_parts",
       s"unknown journal op '${j.op}' in $path")
     val staging = new Path(s"$path/$StagingPrefix${j.token}")
     deleteMeta(spark, path)
@@ -509,28 +517,10 @@ object SignatureStore {
           moveStagedFilesIn(f, new Path(staging, table),
             new Path(s"$path/$table"))
         }
-      case "replace" =>
-        val trash = new Path(s"$path/_trash_${j.token}")
-        f.mkdirs(trash)
-        Seq("bands", "shingles").foreach { table =>
-          val staged = new Path(staging, table)
-          val live = new Path(s"$path/$table")
-          // idempotent swap: if the staged dir still exists, `live` (if
-          // present) is the OLD table — move it aside and swap in; if the
-          // staged dir is gone, this table was already swapped
-          if (f.exists(staged)) {
-            if (f.exists(live))
-              require(f.rename(live, new Path(trash, table)),
-                s"rename $live -> $trash failed")
-            require(f.rename(staged, live), s"rename $staged -> $live failed")
-          }
-        }
-        f.delete(trash, true)
       case "replace_parts" =>
-        // the threshold-gated compaction: swap exactly the PARTITION
-        // directories staged under the staging root, same per-unit
-        // idempotent discipline as "replace" (staged dir present ⇒ not
-        // yet swapped; absent ⇒ already swapped on a previous replay)
+        // compaction: swap exactly the PARTITION directories staged under
+        // the staging root, each an idempotent unit (staged dir present ⇒
+        // not yet swapped; absent ⇒ already swapped on a previous replay)
         val trash = new Path(s"$path/_trash_${j.token}")
         Seq("bands", "shingles").foreach { table =>
           val stagedTable = new Path(staging, table)
@@ -580,9 +570,9 @@ object SignatureStore {
         val n = st.getPath.getName
         val orphanDir = st.isDirectory &&
           (n.startsWith(StagingPrefix) || n.startsWith("_trash_"))
-        // a crash between the tmp-journal write and its rename leaves
-        // the tmp file behind — same orphan class, swept the same way
-        val orphanTmp = !st.isDirectory && n == "._commit_journal.tmp"
+        // a crash inside a metadata, journal or marker write leaves its
+        // temp file behind — same orphan class, swept the same way
+        val orphanTmp = !st.isDirectory && ManifestRecord.isTemp(n)
         if (orphanDir || orphanTmp) f.delete(st.getPath, true)
       }
     }
@@ -595,12 +585,11 @@ object SignatureStore {
     * store stays valid, then swapped in renames replayable by
     * [[recover]]. Probe results are unchanged (spec-asserted).
     *
-    * `maxFilesPerPartition = 0` (default) rewrites BOTH tables wholesale
-    * into one file per prefix partition. A positive bound makes the
-    * compaction THRESHOLD-GATED: only partitions whose data-file count
-    * exceeds the bound are rewritten — untouched partitions keep their
-    * exact files (spec-asserted by file listing) and none of their bytes
-    * move. That is the shape a maintenance cadence wants at scale: an
+    * Only partitions whose data-file count exceeds `maxFilesPerPartition`
+    * are rewritten, each into one file; the others keep their exact files
+    * (spec-asserted by file listing) and none of their bytes move. The
+    * default 0 rewrites every partition that holds a file. A positive
+    * bound is the shape a maintenance cadence wants at scale: an
     * append loop touches a skewed subset of partitions per batch, and a
     * whole-store rewrite per compaction would read the full corpus'
     * shingle sets every K batches. */
@@ -619,65 +608,45 @@ object SignatureStore {
     val f = fs(spark, path)
     require(!f.exists(journalPath(path)),
       s"$path has an unfinished staged commit — run recover first")
-    val token = newToken()
-    val staging = s"$path/$StagingPrefix$token"
-    if (maxFilesPerPartition <= 0) {
-      spark.read.schema(BandsSchema).parquet(s"$path/bands")
-        .repartition(col("bh_pfx"))
-        .write.mode("overwrite").partitionBy("bh_pfx")
-        .parquet(s"$staging/bands")
-      spark.read.schema(ShinglesSchema).parquet(s"$path/shingles")
-        .repartition(col("doc_pfx"))
-        .write.mode("overwrite").partitionBy("doc_pfx")
-        .parquet(s"$staging/shingles")
-      writeJournal(spark, path, journalJson("replace", token,
-        metaJson(m.nPrefixes, m.k, m.bands, m.shingleN, m.maxDocId,
-          m.lastCommitTag)))
-      true
-    } else {
-      // partitions over the file-count bound, from one driver-side
-      // listing (≤ nPrefixes dirs per table — bounded by the layout
-      // fan-out, not by data size)
-      def fragmented(table: String): Seq[Path] = {
-        val t = new Path(s"$path/$table")
-        if (!f.exists(t)) Nil
-        else f.listStatus(t).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .filter { st =>
-            f.listStatus(st.getPath).count { fl =>
-              val n = fl.getPath.getName
-              !fl.isDirectory && !n.startsWith("_") && !n.startsWith(".")
-            } > maxFilesPerPartition
-          }
-          .map(_.getPath)
-      }
-      val fb = fragmented("bands")
-      val fsh = fragmented("shingles")
-      if (fb.isEmpty && fsh.isEmpty) return false // nothing over the bound
-      // stage ONLY the fragmented partitions (basePath keeps the
-      // partition column from the directory names); the staged partition
-      // listing IS the commit plan — commitStaged swaps exactly the
-      // partition directories present under the staging root, so the
-      // journal needs no partition list to mis-parse
-      if (fb.nonEmpty)
-        spark.read.schema(BandsSchema)
-          .option("basePath", s"$path/bands")
-          .parquet(fb.map(_.toString): _*)
-          .repartition(col("bh_pfx"))
-          .write.mode("overwrite").partitionBy("bh_pfx")
-          .parquet(s"$staging/bands")
-      if (fsh.nonEmpty)
-        spark.read.schema(ShinglesSchema)
-          .option("basePath", s"$path/shingles")
-          .parquet(fsh.map(_.toString): _*)
-          .repartition(col("doc_pfx"))
-          .write.mode("overwrite").partitionBy("doc_pfx")
-          .parquet(s"$staging/shingles")
-      writeJournal(spark, path, journalJson("replace_parts", token,
-        metaJson(m.nPrefixes, m.k, m.bands, m.shingleN, m.maxDocId,
-          m.lastCommitTag)))
-      true
+    // partitions over the file-count bound, from one driver-side listing
+    // per table (≤ nPrefixes dirs — bounded by the layout fan-out, not by
+    // data size)
+    def fragmented(table: String): Seq[Path] = {
+      val t = new Path(s"$path/$table")
+      if (!f.exists(t)) Nil
+      else f.listStatus(t).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+        .filter { st =>
+          f.listStatus(st.getPath).count { fl =>
+            val n = fl.getPath.getName
+            !fl.isDirectory && !n.startsWith("_") && !n.startsWith(".")
+          } > maxFilesPerPartition
+        }
+        .map(_.getPath)
     }
+    val tables = Seq(("bands", BandsSchema, "bh_pfx"),
+        ("shingles", ShinglesSchema, "doc_pfx"))
+      .map { case (table, schema, pfx) => (table, schema, pfx, fragmented(table)) }
+      .filter(_._4.nonEmpty)
+    if (tables.isEmpty) return false // nothing over the bound
+    // stage ONLY the fragmented partitions (basePath keeps the partition
+    // column from the directory names); the staged partition listing IS
+    // the commit plan — commitStaged swaps exactly the partition
+    // directories present under the staging root, so the journal needs
+    // no partition list to mis-parse
+    val token = newToken()
+    tables.foreach { case (table, schema, pfx, parts) =>
+      spark.read.schema(schema)
+        .option("basePath", s"$path/$table")
+        .parquet(parts.map(_.toString): _*)
+        .repartition(col(pfx))
+        .write.mode("overwrite").partitionBy(pfx)
+        .parquet(s"$path/$StagingPrefix$token/$table")
+    }
+    writeJournal(spark, path, journalJson("replace_parts", token,
+      metaJson(m.nPrefixes, m.k, m.bands, m.shingleN, m.maxDocId,
+        m.lastCommitTag)))
+    true
   }
 
   private val StagingPrefix = "_staging_"
@@ -730,27 +699,17 @@ object SignatureStore {
   private def deleteMeta(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(metaPath(path), false)
 
-  private def writeMeta(spark: SparkSession, path: String,
-      json: String): Unit = {
-    val out = fs(spark, path).create(metaPath(path), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Atomic journal write: a crash mid-write must leave either no
-    * journal (the append is simply lost — live store untouched) or a
-    * COMPLETE one, never a truncated plan for recover to misapply. Local
-    * and HDFS renames are atomic; object stores without atomic rename
-    * still get the validation backstop in [[commitStaged]]. */
-  private def writeJournal(spark: SparkSession, path: String,
-      json: String): Unit = {
-    val f = fs(spark, path)
-    val tmp = new Path(s"$path/._commit_journal.tmp")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    f.delete(journalPath(path), false)
-    require(f.rename(tmp, journalPath(path)),
-      s"rename $tmp -> ${journalPath(path)} failed")
-  }
+  /** Metadata and journal go through the shared temp + rename writer
+    * onto an absent file: every metadata writer deletes the old metadata
+    * first, and both journal writers require that no journal exists. A
+    * crash mid-write leaves no file or a COMPLETE one, never a truncated
+    * plan for recover to misapply. Local and HDFS renames are atomic;
+    * object stores without atomic rename still get the validation
+    * backstop in [[commitStaged]]. */
+  private def writeMeta(spark: SparkSession, path: String, json: String): Unit =
+    ManifestRecord.writeString(spark, metaPath(path), json)
+  private def writeJournal(spark: SparkSession, path: String, json: String): Unit =
+    ManifestRecord.writeString(spark, journalPath(path), json)
 
   /** The journal's pinned wire layout. The explicit `jv` field makes
     * format drift fail LOUDLY at read time instead of silently
@@ -762,10 +721,8 @@ object SignatureStore {
     s"""{"jv":$JournalVersion,"op":"$op","token":"$token","meta":$meta}"""
 
   private def readJournal(spark: SparkSession, path: String): Journal = {
-    val f = fs(spark, path)
-    val in = f.open(journalPath(path))
-    val json =
-      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+    val json = ManifestRecord.readString(spark, journalPath(path))
+      .getOrElse(sys.error(s"no commit journal in $path")).trim
     // version gate first: a journal written by a different layout must
     // refuse here, not be sliced by this version's anchors
     val jv = (""""jv"\s*:\s*(\d+)""").r.findFirstMatchIn(json)
@@ -798,17 +755,14 @@ object SignatureStore {
     * metadata (written by [[write]]) so probes/appends cannot silently
     * use different banding than ingest did. */
   private[ops] def readMeta(spark: SparkSession, path: String): Meta = {
-    val f = fs(spark, path)
     val p = metaPath(path)
-    require(f.exists(p),
+    val json = ManifestRecord.readString(spark, p)
+    require(json.isDefined,
       s"$path/_store_meta.json missing — was the store written with " +
         "SignatureStore.write? (an interrupted write deletes it first, " +
         "so a meta-less store is an incomplete one; an interrupted " +
         "staged append/compact is repairable with SignatureStore.recover)")
-    val in = f.open(p)
-    val json =
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    parseMeta(json, p.toString)
+    parseMeta(json.get, p.toString)
   }
 
   /** Parse + validate a metadata JSON payload — shared by [[readMeta]]

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.io.IOException
+import java.io.{FileNotFoundException, IOException}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
@@ -15,18 +15,24 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-/** The commit record of a resumable writer's `_manifest` table, written
-  * on the driver with no Spark job: one one-row parquet file per
-  * committed unit.
+/** The one driver-side file writer of the resumable writers, and the
+  * commit record of their `_manifest` tables.
   *
-  * The file is the one `Seq(rec).toDS().write.mode(Append).parquet(dir)`
-  * writes — same message name, column names, physical types and
-  * repetition, and the same Spark row-schema footer key — so
+  * Every file the driver writes — a manifest record, a parameter file, a
+  * marker, a store's metadata or commit journal — goes through [[commit]]:
+  * the bytes land in a dot-prefixed temp file beside the target (Spark's
+  * file listing skips it), then ONE Hadoop `FileSystem.rename` moves it
+  * onto the target, which must be absent (HDFS rename does not
+  * overwrite). A reader therefore sees a file whole or not at all, on any
+  * Hadoop filesystem; a crash leaves at most a temp file, which
+  * [[isTemp]] names so its owner can sweep it.
+  *
+  * A manifest record ([[append]]) is one one-row parquet file per
+  * committed unit, the file `Seq(rec).toDS().write.mode(Append)
+  * .parquet(dir)` writes — same message name, column names, physical
+  * types and repetition, and the same Spark row-schema footer key — so
   * `spark.read.parquet(dir)` reads records of either writer side by side.
-  * It is written under a dot-prefixed temp name, which Spark's file
-  * listing skips, and renamed into place through the Hadoop `FileSystem`
-  * API, so a reader sees a record whole or not at all. Records hold
-  * `Int` and `Long` fields only. */
+  * It runs no Spark job. Records hold `Int` and `Long` fields only. */
 private[graft] object ManifestRecord {
 
   /** The footer key Spark reads its own schema from (nullability
@@ -51,17 +57,43 @@ private[graft] object ManifestRecord {
       case (v, i) => throw new IllegalArgumentException(
         s"manifest field ${schema.fields(i).name} holds $v")
     }
+    commit(spark, new Path(dir, s"part-${UUID.randomUUID()}.parquet")) { tmp =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf)
+        .withType(msg)
+        .withExtraMetaData(Map(SparkRowMetadataKey -> schema.json).asJava)
+        .build()
+      try w.write(row) finally w.close()
+    }
+  }
 
-    val conf = spark.sparkContext.hadoopConfiguration
-    val name = s"part-${UUID.randomUUID()}.parquet"
-    val tmp = new Path(dir, s".$name.tmp")
-    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
-      .withConf(conf)
-      .withType(msg)
-      .withExtraMetaData(Map(SparkRowMetadataKey -> schema.json).asJava)
-      .build()
-    try w.write(row) finally w.close()
-    if (!tmp.getFileSystem(conf).rename(tmp, new Path(dir, name)))
-      throw new IOException(s"could not rename $tmp into $dir")
+  /** Writes `text` (UTF-8) to the absent file `target` through [[commit]]. */
+  def writeString(spark: SparkSession, target: Path, text: String): Unit =
+    commit(spark, target) { tmp =>
+      val out = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .create(tmp, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+
+  /** The UTF-8 content of `target`, or `None` when it does not exist. */
+  def readString(spark: SparkSession, target: Path): Option[String] =
+    try {
+      val in = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .open(target)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: FileNotFoundException => None }
+
+  /** True for a file name [[commit]] writes before its rename. */
+  def isTemp(name: String): Boolean = name.startsWith(".") && name.endsWith(".tmp")
+
+  /** `write` fills the temp file beside `target`; one rename then moves it
+    * onto `target`, which the caller has made sure is absent. A temp file
+    * an earlier crash left under the same name is overwritten. */
+  private def commit(spark: SparkSession, target: Path)(write: Path => Unit): Unit = {
+    val tmp = new Path(target.getParent, s".${target.getName}.tmp")
+    write(tmp)
+    if (!tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).rename(tmp, target))
+      throw new IOException(s"could not rename $tmp onto $target")
   }
 }

@@ -123,7 +123,9 @@ object StreamingKg {
     * would have to hold the whole signature store in executor state.
     *
     * Retry safety (foreachBatch is at-least-once): a `_batch_<id>_done`
-    * marker on the store's filesystem makes a replayed epoch a no-op;
+    * marker on the store's filesystem, written through
+    * [[graft.pipeline.ManifestRecord]]'s temp + rename writer, makes a
+    * replayed epoch a no-op;
     * survivors go to a PER-BATCH subdir in overwrite mode, so a retry
     * that died mid-loop rewrites instead of duplicating; the store
     * append is a journaled staged commit (the live store stays valid
@@ -217,8 +219,7 @@ object StreamingKg {
             bKeys.join(keep, Seq("doc_id"), "left_semi"),
             bSh.join(keep, Seq("doc_id"), "left_semi"),
             allowReplay = true, advanceWatermarkTo = fullMax)
-          val out = fs.create(marker, true)
-          try out.write(Array.empty[Byte]) finally out.close()
+          graft.pipeline.ManifestRecord.writeString(spark, marker, "")
           // marker lifecycle: epoch N can only replay until epoch N+1
           // starts (Structured Streaming commits N's offsets first), so
           // every marker below the current id is dead — sweep them or a

@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,7 +40,8 @@ import graft.ops.CleaningPipeline
   * price of counting.)
   *
   * `resume` mode kills the chain at the stage-2/3 boundary and resumes it
-  * in a second JVM (see [[resumeMain]]). Both modes append to BENCH.md.
+  * in a second JVM (see [[resumeMain]]). Both modes print one JSON line
+  * to standard output.
   *
   * `sbt -batch "runMain graft.tools.CleaningBench [nDocs]"` or
   * `"runMain graft.tools.CleaningBench resume [nDocs] [cores]"`
@@ -231,34 +232,6 @@ object CleaningBench {
           f""""wall_sec":$wall%.1f,"docs_per_sec":$dps%.0f,""" +
           f""""corpus_opens_chain":$chainOpens,"corpus_opens_one_scan":$oneScanOpens,$stageMs}"""
       println(json)
-
-      val row =
-        f"""
-           |## CleaningBench run (${java.time.Instant.now()})
-           |
-           |`CleaningPipeline.cleanedMetaResumable` (parquet-staged chain:
-           |decontaminate → exact dedup → near-dup dedup) over $nDocs
-           |planted docs at local[32], corpus read through the counting
-           |filesystem (defeats the local-parquet fast path — throughput
-           |slightly understated).
-           |
-           || metric | value |
-           || --- | --- |
-           || wall (s) | $wall%.1f |
-           || docs/s | $dps%.0f |
-           || survivors | $survivors (= planted arithmetic exactly) |
-           || flagged / exact drops / near drops | $contam / ${2L * groups} / $groups (all = planted) |
-           || corpus file opens: chain vs one scan | $chainOpens vs $oneScanOpens |
-           |
-           |Per-stage (rows, wall): ${stages.map { case (s0, r, ms) =>
-                f"stage$s0 ($r rows, ${ms / 1000.0}%.1f s)"
-              }.mkString("; ")}
-           |```json
-           |$json
-           |```
-           |""".stripMargin
-      Files.write(Paths.get("BENCH.md"), row.getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       deleteRecursively(stage)
     } finally spark.stop()
   }
@@ -402,29 +375,6 @@ object CleaningBench {
           s""""stage3_sec":${s3.map(v => f"$v%.2f").getOrElse("null")},""" +
           f""""survivors":$survB}"""
       println(json)
-      val row =
-        f"""
-           |## CleaningBench kill/resume at bench scale (${java.time.Instant.now()})
-           |
-           |The resumable chain killed at the stage-2/3 boundary (child
-           |JVM A runs stages 0–2 and exits; child JVM B resumes the same
-           |stage dir cold) over $nDocs planted docs at local[$cores],
-           |corpus read through the counting filesystem.
-           |
-           || metric | value |
-           || --- | --- |
-           || phase A wall, stages 0–2 (s) | $wallA%.1f |
-           || phase B wall, resume→done (s) | $wallB%.1f |
-           || stage 3 alone inside phase B (s) | ${s3.map(v => f"$v%.1f").getOrElse("-")} |
-           || corpus opens A vs one scan | $opensA vs $oneScan (read-once holds) |
-           || corpus opens during RESUME | $opensB (zero — no text re-scan) |
-           || survivors | $survB (= planted arithmetic) |
-           |```json
-           |$json
-           |```
-           |""".stripMargin
-      Files.write(Paths.get("BENCH.md"), row.getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     } finally deleteRecursively(stage)
   }
 }

@@ -1,10 +1,13 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ops.{CleaningPipeline, SignatureStore}
-import graft.tools.TempDirs
+import graft.tools.{CountingLocalFs, TempDirs}
 
 /** The composed cleaning chain: stage semantics on a planted fixture,
   * the store-append tail, resume after a kill, and the one-text-pass
@@ -19,6 +22,44 @@ class CleaningPipelineSpec extends AnyFunSuite {
     (1 to n).map(t => s"${p}_$t").mkString(" ")
 
   private def freshStage() = TempDirs.scoped("graft_clean_stage")
+
+  /** Deletes stage `s`'s `_manifest` record: the dir a crash between the
+    * stage's write and its record leaves behind. */
+  private def dropRecord(stageDir: String, s: Int): Unit = {
+    val files = spark.read.parquet(s"$stageDir/_manifest")
+      .where(col("stage") === s).select(col("_metadata.file_path"))
+      .collect().map(_.getString(0))
+    assert(files.length == 1, s"stage $s records: ${files.mkString(", ")}")
+    val p = new Path(new URI(files.head))
+    assert(p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false))
+  }
+
+  /** `(stage, rows)` of every `_manifest` row, sorted. */
+  private def manifestRows(stageDir: String): Seq[(Int, Long)] =
+    CleaningPipeline.manifest(spark, stageDir).collect()
+      .map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+
+  /** The resume specs' fixture: docs 1, 2 contaminated (2 also a near-dup
+    * of 1), 4 an exact dup of 3, 5 a near-dup of 3; survivors 3 and 6. */
+  private def resumeFixture() = {
+    import spark.implicits._
+    val benchToks = (1 to 12).map(i => s"b$i").mkString(" ")
+    val bench = Seq((900L, benchToks)).toDF("bench_id", "text")
+    val doc1 = "x1 x2 " + benchToks + " y1 y2"
+    val doc3 = words("m")
+    val docs = Seq(
+      (1L, doc1), (2L, doc1 + " z1"), (3L, doc3), (4L, doc3),
+      (5L, words("m") + " x9"), (6L, words("u")))
+      .toDF("doc_id", "text").withColumn("lang", lit("de"))
+    (docs, bench)
+  }
+
+  /** A day-0 store with the resume specs' banding. */
+  private def freshStore(path: String): String = {
+    SignatureStore.init(spark, path, nPrefixes = 8, k = 32, bands = 16,
+      shingleN = 3)
+    path
+  }
 
   test("composed chain: contaminated, exact-dup, and near-dup docs drop; store gets survivors") {
     import spark.implicits._
@@ -169,17 +210,8 @@ class CleaningPipelineSpec extends AnyFunSuite {
 
   test("resumable chain: killed between stages, it resumes to the same survivors; store appended exactly once") {
     import spark.implicits._
-    val benchToks = (1 to 12).map(i => s"b$i").mkString(" ")
-    val bench = Seq((900L, benchToks)).toDF("bench_id", "text")
-    val doc1 = "x1 x2 " + benchToks + " y1 y2"
-    val doc3 = words("m")
-    val docs = Seq(
-      (1L, doc1), (2L, doc1 + " z1"), (3L, doc3), (4L, doc3),
-      (5L, words("m") + " x9"), (6L, words("u")))
-      .toDF("doc_id", "text").withColumn("lang", lit("de"))
-    val store = TempDirs.scoped("graft_resume_store")
-    SignatureStore.init(spark, store, nPrefixes = 8, k = 32, bands = 16,
-      shingleN = 3)
+    val (docs, bench) = resumeFixture()
+    val store = freshStore(TempDirs.scoped("graft_resume_store"))
     val stage = TempDirs.scoped("graft_resume_stage")
 
     def run(upTo: Int) = CleaningPipeline.runStages(docs, bench, stage,
@@ -215,22 +247,21 @@ class CleaningPipelineSpec extends AnyFunSuite {
     val nShingleRows = spark.read.parquet(s"$store/shingles").count()
     assert(nShingleRows == 2L) // survivors 3 and 6
 
-    // crash AFTER the store commit but BEFORE the done marker: the resume
-    // recognizes the advanced watermark and does NOT double-append
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$stage/stage4_store_done"))
+    // crash AFTER the store commit but BEFORE stage 4's manifest record:
+    // the resume finds the attempt's tag committed in the store and does
+    // NOT double-append
+    dropRecord(stage, 4)
     val again = CleaningPipeline.cleanedMetaResumable(docs, bench, stage,
       keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
       maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
       storePath = Some(store)).collect().map(_.getLong(0)).toSet
     assert(again == Set(3L, 6L))
     assert(spark.read.parquet(s"$store/shingles").count() == nShingleRows)
+    assert(manifestRows(stage).map(_._1) == Seq(0, 1, 2, 3, 4))
 
     // crash BEFORE the append ever staged (attempt marker only): the
     // resume runs the append — exercised on a fresh store + stage dir
-    val store2 = TempDirs.scoped("graft_resume_store2")
-    SignatureStore.init(spark, store2, nPrefixes = 8, k = 32, bands = 16,
-      shingleN = 3)
+    val store2 = freshStore(TempDirs.scoped("graft_resume_store2"))
     val stage2 = TempDirs.scoped("graft_resume_stage2")
     CleaningPipeline.runStages(docs, bench, stage2, Nil, k = 32,
       bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
@@ -434,6 +465,7 @@ class CleaningPipelineSpec extends AnyFunSuite {
     val params = Paths.get(s"$stage/_params")
     Files.write(params, Files.readAllLines(params).asScala
       .filterNot(_.startsWith("shRepr=")).mkString("\n").getBytes("UTF-8"))
+    Files.deleteIfExists(Paths.get(s"$stage/._params.crc"))
     def storeFiles(): Map[String, Seq[Byte]] =
       Files.walk(Paths.get(store)).iterator().asScala
         .filter(Files.isRegularFile(_))
@@ -443,5 +475,78 @@ class CleaningPipelineSpec extends AnyFunSuite {
     assert(err.getMessage.contains("use a new stageDir"), err.getMessage)
     assert(storeFiles() == before, "the refused resume changed the store")
     assert(!Files.exists(Paths.get(s"$stage/stage4_store_attempt")))
+  }
+
+  test("resume re-runs a stage whose manifest record is missing: one row per stage, as in an uninterrupted run") {
+    val (docs, bench) = resumeFixture()
+    def run(stage: String, store: String, upTo: Int) =
+      CleaningPipeline.runStages(docs, bench, stage, Nil, k = 32,
+        bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
+        minOverlap = 5, minRatio = 0.0, broadcastBench = true,
+        storePath = Some(store), allowStoreReplay = false, upTo = upTo)
+    def survivors(stage: String, store: String) =
+      run(stage, store, 4).get.collect().map(_.getLong(0)).toSet
+
+    val whole = freshStage()
+    assert(survivors(whole, freshStore(TempDirs.scoped("graft_gap_store0")))
+      == Set(3L, 6L))
+    val expected = manifestRows(whole)
+    assert(expected.map(_._1) == Seq(0, 1, 2, 3, 4))
+
+    // killed after stage 1's write, before its record
+    val stage = freshStage()
+    val store = freshStore(TempDirs.scoped("graft_gap_store1"))
+    run(stage, store, 1)
+    dropRecord(stage, 1)
+    assert(survivors(stage, store) == Set(3L, 6L))
+    assert(manifestRows(stage) == expected)
+
+    // a gap below recorded stages (a dir an engine that gated stages on
+    // `_SUCCESS` left behind): every stage past the gap re-runs, and its
+    // stale row gives way to the new one
+    val gapped = freshStage()
+    val store2 = freshStore(TempDirs.scoped("graft_gap_store2"))
+    run(gapped, store2, 3)
+    dropRecord(gapped, 1)
+    assert(survivors(gapped, store2) == Set(3L, 6L))
+    assert(manifestRows(gapped) == expected)
+  }
+
+  test("kill/resume under a non-local Hadoop scheme: no committed stage re-runs and nothing is written to the working directory") {
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl",
+      classOf[CountingLocalFs].getName)
+    val (docs, bench) = resumeFixture()
+    val cwd = new java.io.File(".").getCanonicalFile
+    val cwdBefore = cwd.list().toSet
+    val stageLocal = TempDirs.scoped("graft_cntfs_stage")
+    val stage = s"cntfs:$stageLocal"
+    val store = freshStore(s"cntfs:${TempDirs.scoped("graft_cntfs_store")}")
+    def run(upTo: Int) = CleaningPipeline.runStages(docs, bench, stage,
+      Seq("lang"), k = 32, bands = 16, shingleN = 3, maxBucket = 64,
+      minJaccard = 0.8, minOverlap = 5, minRatio = 0.0,
+      broadcastBench = true, storePath = Some(store),
+      allowStoreReplay = false, upTo = upTo)
+    // every write job names its files anew, so a re-run stage shows as
+    // a changed file listing
+    def files(dir: String): Set[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        if (f.isFile) Seq(f.getPath)
+        else Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      walk(new java.io.File(s"$stageLocal/$dir")).toSet
+    }
+    val committed = Seq("staged", "stage1_flagged", "stage2_exact_drops")
+
+    assert(run(0).isEmpty)
+    val staged = files("staged")
+    assert(staged.exists(_.endsWith(".parquet")))
+    assert(run(2).isEmpty)
+    assert(files("staged") == staged, "the resume re-ran stage 0")
+    val before = committed.map(files)
+    assert(run(4).get.collect().map(_.getLong(0)).toSet == Set(3L, 6L))
+    assert(committed.map(files) == before, "the resume re-ran a committed stage")
+    assert(manifestRows(stage).map(_._1) == Seq(0, 1, 2, 3, 4))
+    assert(spark.read.parquet(s"$store/shingles").count() == 2L)
+    assert(cwd.list().toSet == cwdBefore,
+      s"written to the working directory: ${cwd.list().toSet -- cwdBefore}")
   }
 }

@@ -18,6 +18,12 @@ trait EvidenceFamily extends TestSuiteMixin { this: TestSuite =>
   /** The evidence this suite's tests provide, as the report names it. */
   def evidence: String
 
+  /** Cancels the running test unless every path exists, naming the first
+    * one missing, so the suite's report says what to install. */
+  protected def assumeData(paths: String*): Unit =
+    paths.find(p => !new java.io.File(p).exists())
+      .foreach(p => cancel(s"reference data not found: $p"))
+
   private val ran = new AtomicInteger
   private val canceled = new ConcurrentLinkedQueue[String]
 

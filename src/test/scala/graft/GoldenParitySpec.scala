@@ -21,7 +21,7 @@ class GoldenParitySpec extends AnyFunSuite with EvidenceFamily {
   private val fixture = "/root/reference/tests/na_tagger_in.jsonl"
 
   test("reference golden fixture: Havaas positive, empty negative, ad filtered") {
-    assume(new java.io.File(fixture).exists(), "reference fixture not present")
+    assumeData(fixture)
     val items = JsonlArticles.readContentItems(spark, fixture)
     assert(items.count() == 3)
     val articles = JsonlArticles.asArticles(items)

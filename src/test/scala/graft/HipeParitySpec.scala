@@ -98,25 +98,25 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
   }
 
   test("HIPE fixture ner-1 (coarse): strict + ent_type parity") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     check("ner-1", s"$base/unittest-ner-1-pred.tsv.ner-coarse-lit_ref_results.json",
       _.neCoarseLit)
   }
 
   test("HIPE fixture ner-2 (coarse): strict + ent_type parity") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     check("ner-2", s"$base/unittest-ner-2-pred.tsv.coarse-lit_ref_results.json",
       _.neCoarseLit)
   }
 
   test("HIPE fixture ner-2 (fine): strict + ent_type parity") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     check("ner-2", s"$base/unittest-ner-2-pred.tsv.fine-lit_ref_results.json",
       _.neFineLit)
   }
 
   test("HIPE fixture ner-2-IOBES (coarse): S-/E- tags normalize") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     check("ner-2-IOBES",
       s"$base/unittest-ner-2-IOBES-pred.tsv.coarse-lit_ref_results.json",
       _.neCoarseLit)
@@ -125,7 +125,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
   test("HIPE fixture ner-lit-coarse-3: ent_type DIFFERS from strict (3/0/0 vs 2/1/1)") {
     // the one fixture where the regimes disagree — proves the fuzzy
     // (boundary-overlap) path is genuinely exercised, not mirroring strict
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     check("ner-lit-coarse-3",
       s"$base/unittest-ner-lit-coarse-3-pred.tsv.ref_results.json",
       _.neCoarseLit)
@@ -174,28 +174,28 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
   }
 
   test("HIPE fixture ner-1: full report parity (per-type × 4 regimes)") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkFullReport("ner-1",
       s"$base/unittest-ner-1-pred.tsv.ner-coarse-lit_ref_results.json",
       _.neCoarseLit)
   }
 
   test("HIPE fixture ner-2 coarse: full report parity (per-type × 4 regimes)") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkFullReport("ner-2",
       s"$base/unittest-ner-2-pred.tsv.coarse-lit_ref_results.json",
       _.neCoarseLit)
   }
 
   test("HIPE fixture ner-2 fine: full report parity (per-type × 4 regimes)") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkFullReport("ner-2",
       s"$base/unittest-ner-2-pred.tsv.fine-lit_ref_results.json",
       _.neFineLit)
   }
 
   test("HIPE fixture ner-lit-coarse-3: full report parity (per-type × 4 regimes)") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkFullReport("ner-lit-coarse-3",
       s"$base/unittest-ner-lit-coarse-3-pred.tsv.ref_results.json",
       _.neCoarseLit)
@@ -236,9 +236,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
     val goldFile =
       s"/root/reference/data/annotated_data/$lang/newsagency-data-$split-$lang.tsv"
     val officialFile = s"$modelDir/newsagency-data-$split-${lang}_pred_$task.tsv"
-    assume(new java.io.File(predFile).isFile &&
-      new java.io.File(goldFile).isFile &&
-      new java.io.File(officialFile).isFile)
+    assumeData(predFile, goldFile, officialFile)
     // Reproduce the scorer's tag-set gate (`set_evaluation_tags`, tags =
     // gold tags; spurious pred tags are treated as O) INCLUDING its
     // dash-splitting quirk: `get_all_tags` keeps `label.split("-")[-1]`
@@ -387,28 +385,28 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
   }
 
   test("NEL fixture nel-1: QID/NIL links, original segmentation") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkNel(s"$base/unittest-nel-1-true.tsv", s"$base/unittest-nel-1-pred.tsv",
       s"$base/unittest-nel-1-pred.tsv.ref_results.json",
       Seq(_.nelLit), None, nBest = 1)
   }
 
   test("NEL fixture nel-2: consecutive NIL concatenated (2020 original mode)") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkNel(s"$base/unittest-nel-2-true.tsv", s"$base/unittest-nel-2-pred.tsv",
       s"$base/unittest-nel-2-pred.tsv.concatNIL_ref_results.json",
       Seq(_.nelLit), None, nBest = 1)
   }
 
   test("NEL fixture nel-2: consecutive NIL separated by NER boundaries (2022 mode)") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkNel(s"$base/unittest-nel-2-true.tsv", s"$base/unittest-nel-2-pred.tsv",
       s"$base/unittest-nel-2-pred.tsv.separatedNIL_ref_results.json",
       Seq(_.nelLit), Some(_.neCoarseLit), nBest = 1)
   }
 
   test("NEL bundle3: ranked |-list at n_best=3") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkNel(s"$base/unittest-true_bundle3_de_1.tsv",
       s"$base/unittest-pred_bundle3_de_1.tsv",
       s"$base/ref_results_nel_all.json",
@@ -416,7 +414,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
   }
 
   test("NEL bundle3: LIT∪METO union columns at n_best=1 (same expected JSON)") {
-    assume(new java.io.File(base).isDirectory)
+    assumeData(base)
     checkNel(s"$base/unittest-true_bundle3_de_1.tsv",
       s"$base/unittest-pred_bundle3_de_1.tsv",
       s"$base/ref_results_nel_all.json",
@@ -447,8 +445,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
     val predFile = s"$modelDir/newsagency-data-test-${lang}_pred.tsv"
     val goldFile =
       s"/root/reference/data/annotated_data/$lang/newsagency-data-test-$lang.tsv"
-    assume(new java.io.File(predFile).isFile &&
-      new java.io.File(goldFile).isFile)
+    assumeData(predFile, goldFile)
     val pred = nelTokensByOccurrence(predFile)
     val gold = nelTokensByOccurrence(goldFile)
     Seq(
@@ -493,7 +490,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
     // NIL/QID confusions, boundary shifts; expectations generated by the
     // reference scorer itself via tools/run_hipe_scorer.py)
     val dir = "src/test/resources/nel/fuzz"
-    assume(new java.io.File(dir).isDirectory)
+    assumeData(dir)
     (0 until 3).foreach { p =>
       Seq(
         (s"fuzz-$p-original_n1.json", None, 1),
@@ -582,7 +579,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
 
   test("slice fuzz: token-level TIME/LED NERC slicing matches the reference scorer") {
     val dir = "src/test/resources/nel/slicefuzz"
-    assume(new java.io.File(dir).isDirectory)
+    assumeData(dir)
     val (slices, sliceToTag) = sliceFuzzSlices
     (0 until 3).foreach { p =>
       val pred = nelTokens(s"$dir/sf-$p-pred.tsv")
@@ -599,7 +596,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
 
   test("slice fuzz: token-level TIME/LED NEL slicing matches the reference scorer (both modes)") {
     val dir = "src/test/resources/nel/slicefuzz"
-    assume(new java.io.File(dir).isDirectory)
+    assumeData(dir)
     val (slices, sliceToTag) = sliceFuzzSlices
     (0 until 3).foreach { p =>
       val pred = nelTokens(s"$dir/sf-$p-pred.tsv")
@@ -671,7 +668,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
 
   test("macro-doc differential: NERC doc-macro floats match the reference scorer (slice fuzz pairs)") {
     val dir = "src/test/resources/nel/slicefuzz"
-    assume(new java.io.File(dir).isDirectory)
+    assumeData(dir)
     (0 until 3).foreach { p =>
       val pred = gateSpans(spansDf(s"$dir/sf-$p-pred.tsv", _.neCoarseLit),
         s"$dir/sf-$p-true.tsv")
@@ -689,7 +686,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
 
   test("macro-doc differential: NEL doc-macro floats match the reference scorer (NEL fuzz pairs)") {
     val dir = "src/test/resources/nel/fuzz"
-    assume(new java.io.File(dir).isDirectory)
+    assumeData(dir)
     (0 until 3).foreach { p =>
       val pred = nelTokens(s"$dir/fuzz-$p-pred.tsv")
       val gold = nelTokens(s"$dir/fuzz-$p-true.tsv")
@@ -736,8 +733,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
     def close(a: Double, b: Double) = math.abs(a - b) < 1e-9
     val nelDir = "src/test/resources/nel/fuzz"
     val sliceDir = "src/test/resources/nel/slicefuzz"
-    assume(new java.io.File(nelDir).isDirectory &&
-      new java.io.File(sliceDir).isDirectory)
+    assumeData(nelDir, sliceDir)
     val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
       (0 until 3).map { p =>
         (s"$sliceDir/sf-$p-nerc_all.json", () => SpanEval.report(
@@ -768,7 +764,7 @@ class HipeParitySpec extends AnyFunSuite with EvidenceFamily {
     // token path's TIME-ALL equals SpanEval.report over collected spans
     // with the external gold-tag gate — locks them against silent drift
     val dir = "src/test/resources/nel/slicefuzz"
-    assume(new java.io.File(dir).isDirectory)
+    assumeData(dir)
     (0 until 3).foreach { p =>
       val predT = nelTokens(s"$dir/sf-$p-pred.tsv")
       val goldT = nelTokens(s"$dir/sf-$p-true.tsv")

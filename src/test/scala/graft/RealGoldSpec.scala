@@ -31,7 +31,7 @@ class RealGoldSpec extends AnyFunSuite with EvidenceFamily {
     "/root/reference/data/annotated_data/de/newsagency-data-dev-de.tsv")
 
   test("alias baseline scored on committed dev gold (token-index spans)") {
-    assume(devFiles.forall(f => new java.io.File(f).exists()))
+    assumeData(devFiles: _*)
     import spark.implicits._
     val tokens = ConllTsvReader.read(spark, devFiles: _*)
 

@@ -319,12 +319,20 @@ class SignatureStoreSpec extends AnyFunSuite {
       .forall(f => !f.getName.startsWith("_staging_") &&
         !f.getName.startsWith("_trash_")))
     // a crash BEFORE the journal write (staging written, live store
-    // untouched) leaves an orphan staging dir — recover sweeps it even
-    // though there is nothing to replay
+    // untouched) leaves an orphan staging dir, and a crash inside a
+    // metadata, journal or marker write leaves its temp file (the old
+    // journal temp name included) — recover sweeps them even though
+    // there is nothing to replay, and leaves the live metadata alone
     val orphan = new java.io.File(path, "_staging_000_orphan")
     assert(orphan.mkdirs())
+    val temps = Seq("._store_meta.json.tmp", "._commit_journal.json.tmp",
+      "._batch_7_done.tmp", "._commit_journal.tmp")
+      .map(new java.io.File(path, _))
+    temps.foreach(t => assert(t.createNewFile(), t))
     assert(!SignatureStore.recover(spark, path))
     assert(!orphan.exists())
+    assert(temps.forall(!_.exists()), temps.filter(_.exists()))
+    assert(SignatureStore.probe(spark, path, probeC).count() == 1)
   }
 
   test("compact bounds per-partition file counts and preserves probe results") {

@@ -45,7 +45,7 @@ class SourcesSpec extends AnyFunSuite with EvidenceFamily {
   test("CoNLL reader over the reference's committed gold TSV (dev, fr+de)") {
     val fr = "/root/reference/data/annotated_data/fr/newsagency-data-dev-fr.tsv"
     val de = "/root/reference/data/annotated_data/de/newsagency-data-dev-de.tsv"
-    assume(new java.io.File(fr).exists() && new java.io.File(de).exists())
+    assumeData(fr, de)
     val ds = ConllTsvReader.read(spark, fr, de)
     val n = ds.count()
     assert(n > 10000, s"expected >10k tokens, got $n")
@@ -98,7 +98,7 @@ class SourcesSpec extends AnyFunSuite with EvidenceFamily {
     "/root/reference/data/annotation/minireference_for_IA_agreement/IA_fr/xmi"
 
   test("XMI: real committed export parses — sofa text, segment counts") {
-    assume(new java.io.File(xmiDir).isDirectory)
+    assumeData(xmiDir)
     val f = s"$xmiDir/EXP-1991-07-02-a-i0038.xmi"
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))
     val (doc, ents) = graft.sources.XmiReader.parse("EXP-1991-07-02-a-i0038", bytes)
@@ -254,7 +254,7 @@ class SourcesSpec extends AnyFunSuite with EvidenceFamily {
   }
 
   private def roundTrip(tsvFile: String, docId: String, lang: String): Unit = {
-    assume(new java.io.File(tsvFile).isFile)
+    assumeData(tsvFile)
     val golden = committedBlock(tsvFile, docId)
     val (id, xmiBytes) = reconstructXmi(golden)
     assert(id == docId)
@@ -350,7 +350,7 @@ class SourcesSpec extends AnyFunSuite with EvidenceFamily {
   }
 
   test("XMI: Spark binaryFile reader over the committed export directory") {
-    assume(new java.io.File(xmiDir).isDirectory)
+    assumeData(xmiDir)
     val docs = graft.sources.XmiReader.readDocuments(spark, xmiDir)
     val n = docs.count()
     assert(n == 48, s"expected 48 xmi files, got $n")
