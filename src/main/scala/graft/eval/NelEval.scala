@@ -380,8 +380,9 @@ object NelEval {
     * `--time-period` CLI regimes applied to entity linking, the same shape
     * as [[SpanEval.reportSliced]]: each named predicate filters BOTH
     * tables, then the full report runs on the slice (use
-    * [[SpanEval.timeSlices]]/[[SpanEval.noiseSlices]] to build the
-    * predicates over year/LED columns carried on the link rows).
+    * [[SpanEval.timeSlices]] to build the predicates over a year column
+    * carried on the link rows; LED-noise bands are token-level, see
+    * [[SpanEval.noiseSliceToks]]).
     *
     * Scorer fidelity: the tag universe is computed ONCE over the
     * UNFILTERED tables — the reference's `set_evaluation_tags` runs before

@@ -565,13 +565,6 @@ object SpanEval {
       (s"TIME-$from-$to", yearCol.between(from, to))
     }
 
-  /** LED-noise slice predicates over a normalized-Levenshtein column
-    * (`--noise_level` CLI bands; LED-ALL = no filter). */
-  def noiseSlices(ledCol: Column, bands: Seq[(Double, Double)]): Seq[(String, Column)] =
-    ("LED-ALL", lit(true)) +: bands.map { case (lo, hi) =>
-      (s"LED-$lo-$hi", ledCol >= lo && ledCol < hi)
-    }
-
   // ---- typed Aggregator (seqeval-style, for per-group scoring) --------
 
   /** Buffer/result for the UDAF form: per-group (e.g. per doc, per type)

@@ -174,7 +174,7 @@ object Ann {
           .as(Seq("band", "key")))
     // skew guard: a degenerate bucket (e.g. the all-zeros region) would go
     // quadratic in the self-join — drop oversized buckets explicitly
-    // (inspect via bucketStats; not a silent cap). A count-over-window is
+    // (the stated `maxBucket` bound, not a silent cap). A count-over-window is
     // one shuffle on (band, key); the groupBy+join form was two plus a join.
     val bw = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("key"))
@@ -205,15 +205,6 @@ object Ann {
         cosine(col("e1"), col("e2")).as("cosine"))
       .where(col("cosine") >= minCosine)
   }
-
-  /** IVF-style coarse quantization: per-bucket centroid table (one
-    * aggregation), for inspection/repartition planning at scale. */
-  def bucketStats(embeddings: DataFrame, bits: Int, dim: Int,
-      seed: Long = 7L): DataFrame =
-    embeddings
-      .withColumn("bucket", lshBucket(col("embedding"), bits, dim, seed))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"))
 
   // ---- IVF (k-means coarse quantizer + nprobe search) ------------------
 

@@ -126,22 +126,6 @@ object Decontaminate {
         round(col("n_overlap") / col("_bench_n"), 6).as("overlap_ratio"))
   }
 
-  /** Flagged corpus ids: documents contaminated by ANY benchmark row.
-    * All of [[contaminationReport]]'s gates thread through — the
-    * containment-ratio threshold is usable in the transform path, not
-    * only the report. */
-  def contaminatedIds(
-      docs: DataFrame,
-      bench: DataFrame,
-      shingleN: Int = 3,
-      minOverlap: Int = 5,
-      minRatio: Double = 0.0,
-      broadcastBench: Boolean = true
-  ): DataFrame =
-    contaminationReport(docs, bench, shingleN, minOverlap, minRatio,
-      broadcastBench)
-      .select(col("doc_id")).distinct()
-
   /** Decontaminate as a corpus TRANSFORM: the input rows minus every
     * document flagged against the benchmark. */
   def decontaminate(
@@ -152,10 +136,9 @@ object Decontaminate {
       minRatio: Double = 0.0,
       broadcastBench: Boolean = true
   ): DataFrame =
-    // r8: anti-join directly on the report's ids — left_anti ignores
-    // duplicate right-side keys, so [[contaminatedIds]]' distinct (one
-    // whole exchange+aggregate) is pure overhead on this path; the
-    // distinct stays in contaminatedIds itself, whose contract IS a set
+    // anti-join directly on the report's ids: left_anti ignores
+    // duplicate right-side keys, so a distinct (one whole
+    // exchange+aggregate) would be pure overhead on this path
     docs.join(
       contaminationReport(docs, bench, shingleN, minOverlap, minRatio,
         broadcastBench).select(col("doc_id")),

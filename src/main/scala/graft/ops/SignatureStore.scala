@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.json4s.{JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 import graft.pipeline.ManifestRecord
 
@@ -65,7 +67,14 @@ import graft.pipeline.ManifestRecord
   * any other op is refused before the live store is touched. The
   * metadata and the journal are written through
   * [[graft.pipeline.ManifestRecord]]'s temp + rename writer, so a crash
-  * never leaves either truncated.
+  * never leaves either truncated, and go through one JSON codec
+  * ([[metaJson]] and [[parseMeta]]).
+  *
+  * Commit record: an append's optional `commitTag` is written into the
+  * metadata by the commit's own rename. It is the commit record of both
+  * incremental writers (the streaming loop and the cleaning chain's
+  * stage 4): after [[recover]], `lastCommitTag` says whether a given
+  * append committed, so a retried batch is skipped, never re-probed.
   *
   * SINGLE-WRITER CONTRACT: at most one process appends/compacts a store
   * at a time (the streaming loop, a batch ingest, or an operator — never
@@ -111,8 +120,7 @@ object SignatureStore {
         "directory or re-ingest with SignatureStore.write")
     f.mkdirs(new Path(s"$path/bands"))
     f.mkdirs(new Path(s"$path/shingles"))
-    writeMeta(spark, path,
-      metaJson(nPrefixes, k, bands, shingleN, Long.MinValue))
+    writeMeta(spark, path, Meta(nPrefixes, k, bands, shingleN, Long.MinValue))
   }
 
   /** Ingest-time write: band keys + shingle sets for `docs(doc_id, text)`,
@@ -180,7 +188,7 @@ object SignatureStore {
     // different signature implementation never collide with recomputed
     // batch hashes, so a version drift would silently admit every
     // near-duplicate; readMeta refuses loudly instead.
-    writeMeta(spark, path, metaJson(nPrefixes, k, bands, shingleN, maxDocId))
+    writeMeta(spark, path, Meta(nPrefixes, k, bands, shingleN, maxDocId))
     // the staged blocks are ingest-transient — free them now instead of
     // waiting for GC (Dataset.unpersist alone leaves localCheckpoint's
     // raw-row blocks alive)
@@ -214,21 +222,6 @@ object SignatureStore {
     * loudly — re-ingest with [[write]]. */
   val ShRepr: String = "xxhash64"
 
-  /** `commitTag`: an opaque caller-chosen id of the LAST committed
-    * append, persisted so a resumable caller (the cleaning chain's
-    * stage 4) can decide "did MY append commit?" POSITIVELY from the
-    * store itself instead of inferring it from the watermark — an
-    * inference that goes wrong when the watermark already covers the
-    * batch ids for another reason (allowReplay re-runs, a later batch).
-    * Empty for untagged commits; compaction preserves the current tag
-    * (it rewrites tables, not append history). */
-  private def metaJson(nPrefixes: Int, k: Int, bands: Int,
-      shingleN: Int, maxDocId: Long, commitTag: String = ""): String =
-    s"""{"nPrefixes":$nPrefixes,"k":$k,"bands":$bands,""" +
-      s""""shingleN":$shingleN,"sigVersion":$SigVersion,""" +
-      s""""shRepr":"$ShRepr","maxDocId":$maxDocId,""" +
-      s""""lastCommitTag":"$commitTag"}"""
-
   /** Incremental probe: verified near-dup pairs `(id1, id2, jaccard)`
     * between `batch(doc_id, text)` and the store, PLUS pairs within the
     * batch itself. Old↔old pairs are by design absent — the corpus was
@@ -241,42 +234,30 @@ object SignatureStore {
     * `maxBucket` caps collisions per (band, bh) bucket exactly like the
     * batch path (boilerplate guard). Batch doc_ids must be strictly
     * larger than all stored ones (checked against the store's ingest
-    * watermark — see the monotone-ingest contract above).
+    * watermark — see the monotone-ingest contract above). There is no
+    * replay window: a caller retrying a batch asks the store whether
+    * that batch's append committed (its `commitTag`, see
+    * [[appendSignatures]]) and skips the probe when it did.
     */
   def probe(
       spark: SparkSession,
       path: String,
       batch: DataFrame,
       maxBucket: Int = 64,
-      minJaccard: Double = 0.8,
-      allowReplay: Boolean = false
+      minJaccard: Double = 0.8
   ): DataFrame =
-    probeWithSignatures(spark, path, batch, maxBucket, minJaccard,
-      allowReplay)._1
+    probeWithSignatures(spark, path, batch, maxBucket, minJaccard)._1
 
   /** As [[probe]], additionally returning the batch's checkpointed band
     * keys and shingle sets — callers that go on to [[appendSignatures]]
     * (the streaming loop) reuse them instead of paying the signature
-    * expression a second time over the survivors.
-    *
-    * `allowReplay` relaxes the monotone-id refusal for an AT-LEAST-ONCE
-    * replay of a batch already folded into the store (the streaming
-    * loop's crash-retry path). The relaxation is a WINDOW, not an
-    * off-switch: it accepts the batch only when its ids sit ENTIRELY at
-    * or below the stored watermark — the signature of a true replay,
-    * provided the watermark was advanced to the full batch max at append
-    * time ([[appendSignatures]]' `advanceWatermarkTo`). A misnumbered
-    * source (ids straddling the watermark, or dipping below it on a
-    * batch that is not a replay of the last one) still refuses loudly.
-    * Replay pair semantics stay exact: the merged bucket membership
-    * deduplicates the batch's own stored rows. */
+    * expression a second time over the survivors. */
   def probeWithSignatures(
       spark: SparkSession,
       path: String,
       batch: DataFrame,
       maxBucket: Int = 64,
-      minJaccard: Double = 0.8,
-      allowReplay: Boolean = false
+      minJaccard: Double = 0.8
   ): (DataFrame, DataFrame, DataFrame) = {
     val m = readMeta(spark, path)
     val (k, bands, shingleN) = (m.k, m.bands, m.shingleN)
@@ -302,19 +283,12 @@ object SignatureStore {
     // breaks keep-min-representative semantics downstream
     val r = bSh.agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
       .collect()(0)
-    if (!r.isNullAt(0)) {
-      val (mn, mx) = (r.getLong(0), r.getLong(1))
-      val isNew = mn > m.maxDocId
-      val isReplay = allowReplay && mx <= m.maxDocId
-      require(isNew || isReplay,
-        s"batch doc_ids [$mn, $mx] vs the store's max ingested doc_id " +
-          s"${m.maxDocId} ($path) — incremental dedup requires strictly " +
-          "monotone ingest ids (keep-min representatives assume stored " +
-          "ids are smaller than batch ids). A true at-least-once replay " +
-          "sits entirely at or below the watermark and passes with " +
-          "allowReplay=true; anything else is a misnumbered source — " +
-          "re-number the batch or rebuild the store.")
-    }
+    require(r.isNullAt(0) || r.getLong(0) > m.maxDocId,
+      s"batch doc_ids [${r.get(0)}, ${r.get(1)}] vs the store's max " +
+        s"ingested doc_id ${m.maxDocId} ($path) — incremental dedup " +
+        "requires strictly monotone ingest ids (keep-min representatives " +
+        "assume stored ids are smaller than batch ids). A misnumbered " +
+        "source must be re-numbered, or the store rebuilt.")
 
     // 1. band partitions the batch can possibly collide into: ≤ nPrefixes
     //    literal values — a driver-side collect bounded by the partition
@@ -337,7 +311,7 @@ object SignatureStore {
     val members = oldBands.select(col("doc_id"), col("band"), col("bh"))
       .join(batchBuckets, Seq("band", "bh"), "left_semi")
       .unionByName(bKeys.select(col("doc_id"), col("band"), col("bh")))
-      // tolerate duplicate store rows (an at-least-once append retry can
+      // tolerate duplicate store rows (an allowReplay append can
       // re-append a batch): dedup the COLLIDING membership — bounded by
       // collisions + batch size, never corpus-scale — so duplicates
       // neither waste cap slots nor pair with themselves
@@ -414,16 +388,22 @@ object SignatureStore {
     * metadata rewrite) is pure fast file moves, replayable by
     * [[recover]] after a crash.
     *
-    * `advanceWatermarkTo`: a caller appending a FILTERED slice of a batch
-    * (the streaming loop appends survivors only) passes the FULL batch's
-    * max id here, so a crash-replay of that batch — whose max may exceed
-    * the max surviving id — still falls entirely at or below the
-    * watermark and is recognized as a replay rather than refused.
+    * `commitTag` is the commit record of both incremental writers (the
+    * streaming loop tags each epoch `<query id>#<batch id>`, the cleaning
+    * chain's stage 4 a per-attempt id): it is persisted into the store
+    * metadata in the same rename that commits the append, so
+    * `readMeta(...).lastCommitTag` after [[recover]] positively answers
+    * "did MY append commit?" — no second marker file, and no inference
+    * from the watermark.
     *
-    * `commitTag`: optional caller-chosen id persisted into the store
-    * metadata WITH the commit (see [[metaJson]]) — readable back via
-    * `readMeta(...).lastCommitTag` as positive proof that this specific
-    * append's commit completed. */
+    * `allowReplay` accepts a batch whose ids sit ENTIRELY at or below the
+    * stored watermark (a re-append of rows already folded in — the
+    * cleaning chain's `allowStoreReplay` resume); ids straddling the
+    * watermark still refuse as a misnumbered source. The re-appended
+    * duplicate rows are probe-tolerated and compactable.
+    * `advanceWatermarkTo` raises the new watermark to at least the given
+    * id, so a later batch must number above it even when the appended
+    * slice's own max is lower. */
   def appendSignatures(spark: SparkSession, path: String,
       banded: DataFrame, shingleSets: DataFrame,
       allowReplay: Boolean = false,
@@ -486,10 +466,11 @@ object SignatureStore {
       .repartition(col("doc_pfx"))
       .write.mode("overwrite").partitionBy("doc_pfx")
       .parquet(s"$staging/shingles")
-    val newMeta = metaJson(m.nPrefixes, m.k, m.bands, m.shingleN,
-      math.max(m.maxDocId, math.max(mx, advanceWatermarkTo.getOrElse(mx))),
-      commitTag.getOrElse(""))
-    writeJournal(spark, path, journalJson("append", token, newMeta))
+    val newMeta = m.copy(
+      maxDocId = math.max(m.maxDocId,
+        math.max(mx, advanceWatermarkTo.getOrElse(mx))),
+      lastCommitTag = commitTag.getOrElse(""))
+    writeJournal(spark, path, Journal("append", token, newMeta))
     true
   }
 
@@ -500,13 +481,13 @@ object SignatureStore {
     * ANY point past the journal write. */
   private[graft] def commitStaged(spark: SparkSession, path: String): Unit = {
     val f = fs(spark, path)
+    // validate the WHOLE commit plan before touching the live store:
+    // readJournal parses and checks the meta payload too. The journal
+    // write is atomic (temp + rename), but a corrupt journal must fail
+    // HERE — after deleteMeta a malformed meta payload would replace the
+    // good live metadata and brick the store the journal was supposed to
+    // protect
     val j = readJournal(spark, path)
-    // validate the WHOLE commit plan before touching the live store: the
-    // journal write is atomic (temp + rename), but a corrupt journal must
-    // fail HERE — after deleteMeta a malformed meta payload would replace
-    // the good live metadata and brick the store the journal was supposed
-    // to protect
-    parseMeta(j.meta, s"journal ${journalPath(path)}")
     require(j.op == "append" || j.op == "replace_parts",
       s"unknown journal op '${j.op}' in $path")
     val staging = new Path(s"$path/$StagingPrefix${j.token}")
@@ -570,7 +551,7 @@ object SignatureStore {
         val n = st.getPath.getName
         val orphanDir = st.isDirectory &&
           (n.startsWith(StagingPrefix) || n.startsWith("_trash_"))
-        // a crash inside a metadata, journal or marker write leaves its
+        // a crash inside a metadata or journal write leaves its
         // temp file behind — same orphan class, swept the same way
         val orphanTmp = !st.isDirectory && ManifestRecord.isTemp(n)
         if (orphanDir || orphanTmp) f.delete(st.getPath, true)
@@ -643,9 +624,7 @@ object SignatureStore {
         .write.mode("overwrite").partitionBy(pfx)
         .parquet(s"$path/$StagingPrefix$token/$table")
     }
-    writeJournal(spark, path, journalJson("replace_parts", token,
-      metaJson(m.nPrefixes, m.k, m.bands, m.shingleN, m.maxDocId,
-        m.lastCommitTag)))
+    writeJournal(spark, path, Journal("replace_parts", token, m))
     true
   }
 
@@ -681,10 +660,14 @@ object SignatureStore {
     }
   }
 
-  private[ops] final case class Meta(nPrefixes: Int, k: Int, bands: Int,
+  /** The store's metadata. `lastCommitTag` is the opaque caller-chosen
+    * id of the LAST committed append (see [[appendSignatures]]); empty
+    * for untagged commits. Compaction preserves it: it rewrites tables,
+    * not append history. */
+  private[graft] final case class Meta(nPrefixes: Int, k: Int, bands: Int,
       shingleN: Int, maxDocId: Long, lastCommitTag: String = "")
 
-  private final case class Journal(op: String, token: String, meta: String)
+  private final case class Journal(op: String, token: String, meta: Meta)
 
   // metadata goes through the Hadoop filesystem of the store path — the
   // same filesystem the parquet tables live on — so the store works on
@@ -706,55 +689,72 @@ object SignatureStore {
     * plan for recover to misapply. Local and HDFS renames are atomic;
     * object stores without atomic rename still get the validation
     * backstop in [[commitStaged]]. */
-  private def writeMeta(spark: SparkSession, path: String, json: String): Unit =
-    ManifestRecord.writeString(spark, metaPath(path), json)
-  private def writeJournal(spark: SparkSession, path: String, json: String): Unit =
-    ManifestRecord.writeString(spark, journalPath(path), json)
+  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit =
+    ManifestRecord.writeString(spark, metaPath(path),
+      JsonMethods.compact(metaJson(m)))
+  private def writeJournal(spark: SparkSession, path: String,
+      j: Journal): Unit =
+    ManifestRecord.writeString(spark, journalPath(path),
+      JsonMethods.compact(JObject("jv" -> JInt(JournalVersion),
+        "op" -> JString(j.op), "token" -> JString(j.token),
+        "meta" -> metaJson(j.meta))))
 
-  /** The journal's pinned wire layout. The explicit `jv` field makes
-    * format drift fail LOUDLY at read time instead of silently
-    * mis-slicing the meta payload; [[readJournal]] refuses any version it
-    * does not know. Bump [[JournalVersion]] whenever the field set or
-    * order changes. */
+  /** The metadata's one JSON form, keys in this fixed order. The JSON
+    * library escapes the strings, so any caller tag reads back exactly;
+    * [[parseMeta]] is its inverse. */
+  private def metaJson(m: Meta): JObject = JObject(
+    "nPrefixes" -> JInt(m.nPrefixes), "k" -> JInt(m.k),
+    "bands" -> JInt(m.bands), "shingleN" -> JInt(m.shingleN),
+    "sigVersion" -> JInt(SigVersion), "shRepr" -> JString(ShRepr),
+    "maxDocId" -> JInt(m.maxDocId),
+    "lastCommitTag" -> JString(m.lastCommitTag))
+
+  /** The journal's format version. The explicit `jv` field makes format
+    * drift fail LOUDLY at read time; [[readJournal]] refuses any version
+    * it does not know. Bump it whenever the field set changes. */
   private val JournalVersion = 1
-  private def journalJson(op: String, token: String, meta: String): String =
-    s"""{"jv":$JournalVersion,"op":"$op","token":"$token","meta":$meta}"""
+
+  private type Fields = Map[String, JValue]
+
+  /** The fields of a JSON object payload, refusing anything else. */
+  private def fields(json: String, where: String): Fields =
+    JsonMethods.parseOpt(json) match {
+      case Some(JObject(fs)) => fs.toMap
+      case _ => throw new IllegalArgumentException(
+        s"malformed $where (not a JSON object): $json")
+    }
+  private def num(f: Fields, name: String): Option[BigInt] =
+    f.get(name).collect { case JInt(v) => v }
+  private def str(f: Fields, name: String): Option[String] =
+    f.get(name).collect { case JString(v) => v }
 
   private def readJournal(spark: SparkSession, path: String): Journal = {
-    val json = ManifestRecord.readString(spark, journalPath(path))
-      .getOrElse(sys.error(s"no commit journal in $path")).trim
+    val p = journalPath(path)
+    val json = ManifestRecord.readString(spark, p)
+      .getOrElse(sys.error(s"no commit journal in $path"))
+    val f = fields(json, s"journal $p")
     // version gate first: a journal written by a different layout must
-    // refuse here, not be sliced by this version's anchors
-    val jv = (""""jv"\s*:\s*(\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-    require(jv.contains(JournalVersion),
-      s"journal ${journalPath(path)} has format version " +
+    // refuse here, not be read by this version's field names
+    val jv = num(f, "jv")
+    require(jv.contains(BigInt(JournalVersion)),
+      s"journal $p has format version " +
         s"${jv.map(_.toString).getOrElse("<missing>")}, this engine " +
         s"reads version $JournalVersion — the store needs recovery by " +
         "the engine version that wrote the journal (journals are " +
         "transient: none should outlive an upgrade)")
-    // meta is the LAST field by the pinned layout: anchor its extraction
-    // on that, and parse op/token ONLY from the prefix before it so a
-    // future meta payload containing "op"/"token"-shaped text can never
-    // shadow the real fields
-    val metaIdx = json.indexOf(""""meta":""")
-    require(metaIdx >= 0 && json.endsWith("}"),
-      s"malformed journal (no meta tail): $json")
-    val meta = json.substring(metaIdx + 7, json.length - 1)
-    require(meta.startsWith("{") && meta.endsWith("}"),
-      s"malformed journal meta payload: $meta")
-    val head = json.substring(0, metaIdx)
-    def str(name: String): String =
-      (s""""$name"\\s*:\\s*"([^"]+)"""").r.findFirstMatchIn(head)
-        .getOrElse(sys.error(s"malformed journal (missing $name): $json"))
-        .group(1)
-    Journal(str("op"), str("token"), meta)
+    def missing(name: String) = sys.error(
+      s"malformed journal (missing $name): $json")
+    val meta = f.get("meta").collect { case JObject(fs) => fs.toMap }
+      .getOrElse(missing("meta"))
+    Journal(str(f, "op").getOrElse(missing("op")),
+      str(f, "token").getOrElse(missing("token")),
+      parseMeta(meta, s"journal $p"))
   }
 
   /** The store's signature parameters, read from the layout's own
     * metadata (written by [[write]]) so probes/appends cannot silently
     * use different banding than ingest did. */
-  private[ops] def readMeta(spark: SparkSession, path: String): Meta = {
+  private[graft] def readMeta(spark: SparkSession, path: String): Meta = {
     val p = metaPath(path)
     val json = ManifestRecord.readString(spark, p)
     require(json.isDefined,
@@ -762,20 +762,19 @@ object SignatureStore {
         "SignatureStore.write? (an interrupted write deletes it first, " +
         "so a meta-less store is an incomplete one; an interrupted " +
         "staged append/compact is repairable with SignatureStore.recover)")
-    parseMeta(json.get, p.toString)
+    parseMeta(fields(json.get, p.toString), p.toString)
   }
 
-  /** Parse + validate a metadata JSON payload — shared by [[readMeta]]
-    * and [[commitStaged]]'s pre-commit journal validation. */
-  private def parseMeta(json: String, where: String): Meta = {
+  /** Validate the metadata's fields — shared by [[readMeta]] and
+    * [[readJournal]], so a journal's meta payload is validated before
+    * [[commitStaged]] opens the commit window. */
+  private def parseMeta(f: Fields, where: String): Meta = {
     def field(name: String): Int = {
-      val m = (s""""$name"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(json)
-      require(m.isDefined, s"malformed $where (missing $name): $json")
-      m.get.group(1).toInt
+      val v = num(f, name).filter(_.isValidInt)
+      require(v.isDefined, s"malformed $where (missing $name)")
+      v.get.toInt
     }
-    val version =
-      (""""sigVersion"\s*:\s*(\d+)""").r.findFirstMatchIn(json)
-        .map(_.group(1).toInt).getOrElse(1)
+    val version = num(f, "sigVersion").getOrElse(BigInt(1))
     require(version == SigVersion,
       s"$where was written with signature version $version, this engine " +
         s"computes version $SigVersion — band hashes from different " +
@@ -784,9 +783,7 @@ object SignatureStore {
     // stores written before shingle sets were hashed at rest carry no
     // shRepr — their raw-string sets never intersect recomputed hashed
     // batch sets, so verification would emit nothing; refuse loudly
-    val shRepr =
-      (""""shRepr"\s*:\s*"([^"]*)"""").r.findFirstMatchIn(json)
-        .map(_.group(1)).getOrElse("raw")
+    val shRepr = str(f, "shRepr").getOrElse("raw")
     require(shRepr == ShRepr,
       s"$where persists shingle sets in representation '$shRepr', this " +
         s"engine computes '$ShRepr' — verify joins across " +
@@ -794,16 +791,11 @@ object SignatureStore {
         "near-duplicate. Re-ingest the store with SignatureStore.write.")
     // stores written before the watermark existed carry no maxDocId —
     // treat them as empty-watermarked (every batch id passes), so old
-    // stores keep probing; new writes always persist the field
-    val maxDocId =
-      (""""maxDocId"\s*:\s*(-?\d+)""").r.findFirstMatchIn(json)
-        .map(_.group(1).toLong).getOrElse(Long.MinValue)
-    // optional (absent on stores written before tagged commits existed,
-    // and empty after any untagged commit)
-    val lastCommitTag =
-      (""""lastCommitTag"\s*:\s*"([^"]*)"""").r.findFirstMatchIn(json)
-        .map(_.group(1)).getOrElse("")
+    // stores keep probing; new writes always persist the field.
+    // lastCommitTag is absent on stores written before tagged commits
+    val maxDocId = num(f, "maxDocId").filter(_.isValidLong).map(_.toLong)
+      .getOrElse(Long.MinValue)
     Meta(field("nPrefixes"), field("k"), field("bands"), field("shingleN"),
-      maxDocId, lastCommitTag)
+      maxDocId, str(f, "lastCommitTag").getOrElse(""))
   }
 }

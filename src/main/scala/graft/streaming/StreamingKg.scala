@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.core.{Article, Mention}
 import graft.ner.{NerStage, TokenScorer}
+import graft.ops.{Dedup, SignatureStore}
 
 /** Structured-Streaming front-end for the KG pipeline.
   *
@@ -122,16 +123,22 @@ object StreamingKg {
     * join against an external indexed table — a streaming stateful op
     * would have to hold the whole signature store in executor state.
     *
-    * Retry safety (foreachBatch is at-least-once): a `_batch_<id>_done`
-    * marker on the store's filesystem, written through
-    * [[graft.pipeline.ManifestRecord]]'s temp + rename writer, makes a
-    * replayed epoch a no-op;
-    * survivors go to a PER-BATCH subdir in overwrite mode, so a retry
-    * that died mid-loop rewrites instead of duplicating; the store
-    * append is a journaled staged commit (the live store stays valid
-    * while new files stage; a crash inside the commit window is
-    * replayable with [[graft.ops.SignatureStore.recover]]); and the
-    * probe itself tolerates re-appended duplicate signature rows.
+    * Retry safety (foreachBatch is at-least-once): each epoch's commit
+    * record is the store append's own `commitTag`, `<query id>#<batch
+    * id>` ([[graft.ops.SignatureStore.appendSignatures]]), committed in
+    * the same rename as the appended rows. The query id is the one Spark
+    * keeps in the checkpoint: the same across restarts from one
+    * checkpoint and new for a new checkpoint, so a second query over the
+    * same store never mistakes its own epochs for the first query's. An
+    * epoch first replays any interrupted commit
+    * ([[graft.ops.SignatureStore.recover]]), then returns at once if the
+    * store's last commit carries its tag; otherwise it probes and appends
+    * strictly (a committed epoch never reaches the probe, so the store's
+    * monotone-id check needs no replay window). Survivors go to a
+    * PER-BATCH subdir in overwrite mode, so a retry rewrites instead of
+    * duplicating. An epoch whose batch leaves no survivors commits
+    * nothing; its retry re-runs it against the same store and writes the
+    * same (empty) result.
     *
     * Semantics note: this is INCREMENTAL keep-first dedup — within one
     * micro-batch the drop set equals the batch CC transform's, but a doc
@@ -151,9 +158,10 @@ object StreamingKg {
     * the store's file count bounded over an unbounded append loop (each
     * batch adds one file per touched partition; probe listing cost grows
     * with file count, not data size). 0 disables. Compaction runs AFTER
-    * the epoch's done-marker: a crash inside it leaves a journal the
-    * next epoch's entry recover() replays, and a replayed epoch skips
-    * straight past it. */
+    * the epoch's commit: a crash inside it leaves a journal the next
+    * epoch's entry recover() replays; a crash before it defers the
+    * compaction to the next cadence, because the retried epoch returns at
+    * its tag. */
   def nearDupDedupStream(
       docs: DataFrame,
       storePath: String,
@@ -165,86 +173,62 @@ object StreamingKg {
       maxFilesPerPartition: Int = 4
   ): StreamingQuery =
     docs.writeStream
-      .foreachBatch {
-        (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$storePath/_batch_${batchId}_done")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          // a crash INSIDE a previous epoch's commit window leaves a
-          // journal (and possibly no metadata) — replay the staged
-          // commit before probing, or every restart refuses forever.
-          // No-op (one existence check) on a healthy store.
-          graft.ops.SignatureStore.recover(spark, storePath)
-          // normalize the id type at entry (the store's long contract —
-          // SignatureStore casts everywhere for exactly this reason): an
-          // int-typed doc_id source must not ClassCastException at the
-          // watermark agg's getLong below
-          val b = batch
-            .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-            .localCheckpoint()
-          // allowReplay: foreachBatch is at-least-once — a crash AFTER
-          // the store append but BEFORE the done-marker replays this
-          // epoch with ids already at/below the store watermark. The
-          // relaxation is windowed, not blanket: the store accepts the
-          // batch only if it sits ENTIRELY at or below the watermark
-          // (the append below advances it to the FULL batch max for
-          // exactly this test), so a genuinely misnumbered source still
-          // fails loudly. A replayed probe is exact (the merged
-          // membership deduplicates the batch's own stored rows) and the
-          // replayed append's duplicate rows are probe-tolerated and
-          // compactable.
-          val (pairs, bKeys, bSh) = graft.ops.SignatureStore
-            .probeWithSignatures(spark, storePath, b, maxBucket, minJaccard,
-              allowReplay = true)
-          // keep-min representatives: stored ids are smaller than batch
-          // ids by contract, so a cluster's rep is stored iff any stored
-          // doc is in it — batch members drop unless they ARE the rep
-          val drops = graft.ops.Dedup.clustersFromPairs(pairs)
-            .where(col("doc_id") =!= col("cluster_rep"))
-            .select(col("doc_id"))
-          val keep = b.join(drops, Seq("doc_id"), "left_anti")
-            .select(col("doc_id")).localCheckpoint()
-          b.join(keep, Seq("doc_id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          // watermark advances to the FULL batch max (not the surviving
-          // max): a replay of this batch must fall entirely at or below
-          // the watermark even when its largest doc was dropped
-          val fullMaxRow = b.agg(
-            org.apache.spark.sql.functions.max(col("doc_id"))).collect()(0)
-          val fullMax =
-            if (fullMaxRow.isNullAt(0)) None else Some(fullMaxRow.getLong(0))
-          graft.ops.SignatureStore.appendSignatures(spark, storePath,
-            bKeys.join(keep, Seq("doc_id"), "left_semi"),
-            bSh.join(keep, Seq("doc_id"), "left_semi"),
-            allowReplay = true, advanceWatermarkTo = fullMax)
-          graft.pipeline.ManifestRecord.writeString(spark, marker, "")
-          // marker lifecycle: epoch N can only replay until epoch N+1
-          // starts (Structured Streaming commits N's offsets first), so
-          // every marker below the current id is dead — sweep them or a
-          // long-running query accumulates one small file per micro-batch
-          // in the store root forever
-          val MarkerRe = "_batch_(\\d+)_done".r
-          fs.listStatus(new org.apache.hadoop.fs.Path(storePath)).foreach {
-            st =>
-              st.getPath.getName match {
-                case MarkerRe(id) if id.toLong < batchId =>
-                  fs.delete(st.getPath, false)
-                case _ => ()
-              }
-          }
-          // maintenance cadence: threshold-gated compaction AFTER the
-          // epoch is durably done (marker written). A crash mid-compact
-          // leaves a journal; the recover() at the next epoch's entry
-          // replays it before probing.
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            graft.ops.SignatureStore.compact(spark, storePath,
-              maxFilesPerPartition)
-        }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val queryId = batch.sparkSession.sparkContext
+          .getLocalProperty("sql.streaming.queryId")
+        nearDupDedupEpoch(batch, queryId, batchId, storePath, outDir,
+          maxBucket, minJaccard, compactEvery, maxFilesPerPartition)
       }
       .option("checkpointLocation", checkpointDir)
       .start()
+
+  /** One epoch of [[nearDupDedupStream]], committed under the store tag
+    * `<queryId>#<batchId>`. */
+  private[graft] def nearDupDedupEpoch(
+      batch: DataFrame,
+      queryId: String,
+      batchId: Long,
+      storePath: String,
+      outDir: String,
+      maxBucket: Int,
+      minJaccard: Double,
+      compactEvery: Int,
+      maxFilesPerPartition: Int
+  ): Unit = {
+    val spark = batch.sparkSession
+    val tag = s"$queryId#$batchId"
+    // a crash INSIDE a previous commit window leaves a journal (and
+    // possibly no metadata): replay it first, so the tag check below
+    // reads the completed commit. No-op on a healthy store.
+    SignatureStore.recover(spark, storePath)
+    if (SignatureStore.readMeta(spark, storePath).lastCommitTag == tag) return
+    // normalize the id type at entry (the store's long contract): an
+    // int-typed doc_id source must not ClassCastException downstream
+    val b = batch
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .localCheckpoint()
+    val (pairs, bKeys, bSh) = SignatureStore.probeWithSignatures(spark,
+      storePath, b, maxBucket, minJaccard)
+    // keep-min representatives: stored ids are smaller than batch ids by
+    // contract, so a cluster's rep is stored iff any stored doc is in it
+    // — batch members drop unless they ARE the rep
+    val drops = Dedup.clustersFromPairs(pairs)
+      .where(col("doc_id") =!= col("cluster_rep"))
+      .select(col("doc_id"))
+    val keep = b.join(drops, Seq("doc_id"), "left_anti")
+      .select(col("doc_id")).localCheckpoint()
+    b.join(keep, Seq("doc_id"), "left_semi")
+      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    SignatureStore.appendSignatures(spark, storePath,
+      bKeys.join(keep, Seq("doc_id"), "left_semi"),
+      bSh.join(keep, Seq("doc_id"), "left_semi"),
+      commitTag = Some(tag))
+    // maintenance cadence: threshold-gated compaction AFTER the epoch's
+    // commit. A crash mid-compact leaves a journal; the recover() at the
+    // next epoch's entry replays it before probing.
+    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+      SignatureStore.compact(spark, storePath, maxFilesPerPartition)
+  }
 
   /** Start a memory-sink query for tests/smoke (append mode). */
   def startMemorySink(mentions: Dataset[Mention], name: String,

@@ -1,13 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -17,7 +14,7 @@ import graft.core.{GoldMention, Mention, Triple}
 import graft.eval.SpanEval
 import graft.graph.GraphMaterialize
 import graft.ner.{AliasTrieScorer, NerStage}
-import graft.SparkTestSession.withConfs
+import graft.SparkTestSession.{countingJobs, withConfs}
 import graft.ops.CleaningPipeline
 import graft.pipeline.{KgPipeline, ManifestRecord}
 import graft.synth.Synth
@@ -166,31 +163,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(KgPipeline.manifest(spark, dir).as[KgPipeline.BucketStat]
       .collect().map(_.copy(wall_ms = 0)).sortBy(_.bucket).toSeq ==
       stats.map(_.copy(wall_ms = 0)))
-  }
-
-  /** Runs `body` and returns its result with the number of Spark jobs it
-    * started. A marker job posted afterwards proves every earlier job
-    * event reached the listener (the listener bus is FIFO). */
-  private def countingJobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = "graft.spec.marker"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(marker) != null)
-          drained.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   test("bucket commit: at most 3 jobs per bucket, manifest counts equal the written rows") {

@@ -450,7 +450,7 @@ class SignatureStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("allowReplay: a replayed already-appended batch probes identically and re-appends safely") {
+  test("allowReplay: a re-append is accepted and later probes stay exact") {
     import spark.implicits._
     def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
     val corpus = (0L until 50L).map(i => (i, words(s"c$i")))
@@ -461,24 +461,13 @@ class SignatureStoreSpec extends AnyFunSuite {
     // the batch: a near-dup of stored doc 7 + a fresh doc
     val batch = Seq((100L, words("c7") + " tail"), (101L, words("f1")))
       .toDF("doc_id", "text")
-    def canon(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e9))).toSet
-    val first = canon(SignatureStore.probe(spark, path, batch).collect())
-    assert(first.map(t => (t._1, t._2)) == Set((7L, 100L)))
     SignatureStore.append(spark, path, batch)
-    // the crash-retry path: the SAME batch replays after its append
-    // committed. Strict mode refuses (watermark), allowReplay probes
-    // with the original pair set — the batch's own stored rows fold into
-    // the merged membership instead of self-pairing
+    // a re-append of rows already folded in (ids at or below the
+    // watermark) refuses strictly and is accepted with allowReplay; its
+    // duplicate rows do not corrupt later probes
     intercept[IllegalArgumentException] {
-      SignatureStore.probe(spark, path, batch).count()
+      SignatureStore.append(spark, path, batch)
     }
-    val replay = canon(SignatureStore
-      .probe(spark, path, batch, allowReplay = true).collect())
-    assert(replay == first)
-    // the replayed append is also accepted and does not corrupt later
-    // probes (duplicate rows are probe-tolerated)
     SignatureStore.append(spark, path, batch, allowReplay = true)
     val next = Seq((200L, words("f1") + " x")).toDF("doc_id", "text")
     val got = SignatureStore.probe(spark, path, next).collect()
@@ -486,16 +475,82 @@ class SignatureStoreSpec extends AnyFunSuite {
     assert(got == Set((101L, 200L)))
     // allowReplay is a WINDOW, not an off-switch: a batch straddling the
     // watermark (one id below, one above) is a misnumbered source, not a
-    // replay — it must refuse even with the flag
+    // re-append — it must refuse even with the flag
     val mixed = Seq((99L, words("m1")), (300L, words("m2")))
       .toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      SignatureStore.probe(spark, path, mixed, allowReplay = true).count()
-    }
-    assert(e.getMessage.contains("misnumbered"))
-    intercept[IllegalArgumentException] {
       SignatureStore.append(spark, path, mixed, allowReplay = true)
     }
+    assert(e.getMessage.contains("misnumbered"))
+  }
+
+  /** Replaces a store file with `text`, dropping the Hadoop checksum
+    * sidecar the raw edit invalidates. */
+  private def overwrite(path: String, name: String, text: String): Unit = {
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$path/$name"), text)
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$path/.$name.crc"))
+  }
+
+  test("metadata codec: any tag round-trips; older metadata and journals read as before") {
+    import spark.implicits._
+    def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
+    val path = TempDirs.scoped("graft_sigstore_codec")
+    SignatureStore.init(spark, path, nPrefixes = 8, k = 32, bands = 16,
+      shingleN = 3)
+    val meta = java.nio.file.Paths.get(s"$path/_store_meta.json")
+    // the written form is byte-for-byte the earlier hand-written layout
+    assert(java.nio.file.Files.readString(meta) ==
+      """{"nPrefixes":8,"k":32,"bands":16,"shingleN":3,"sigVersion":2,""" +
+        """"shRepr":"xxhash64","maxDocId":-9223372036854775808,""" +
+        """"lastCommitTag":""}""")
+    // a tag with JSON's special characters reads back exactly
+    val tag = "run \"7\" c:\\tmp\n"
+    val b1 = Seq((1L, words("a"))).toDF("doc_id", "text")
+    SignatureStore.appendSignatures(spark, path,
+      Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bh"),
+      b1.select(col("doc_id"),
+        Dedup.hashShingles(Dedup.distinctShingles(col("text"), 3)).as("sh")),
+      commitTag = Some(tag))
+    assert(SignatureStore.readMeta(spark, path) ==
+      SignatureStore.Meta(8, 32, 16, 3, 1L, tag))
+
+    // metadata from before the watermark and commit tags: defaults
+    overwrite(path, "_store_meta.json",
+      """{"nPrefixes":8,"k":32,"bands":16,"shingleN":3,"sigVersion":2,""" +
+        """"shRepr":"xxhash64"}""")
+    assert(SignatureStore.readMeta(spark, path) ==
+      SignatureStore.Meta(8, 32, 16, 3, Long.MinValue, ""))
+    overwrite(path, "_store_meta.json",
+      """{"nPrefixes":8,"k":32,"bands":16,"shingleN":3,"sigVersion":2,""" +
+        """"shRepr":"xxhash64","maxDocId":1,"lastCommitTag":"t1"}""")
+
+    // a staged append whose journal is in the earlier literal layout
+    // commits as before
+    val b2 = Seq((2L, words("b"))).toDF("doc_id", "text")
+    assert(SignatureStore.stageAppendBatch(spark, path, b2))
+    val token = new java.io.File(path).listFiles().map(_.getName)
+      .collectFirst { case n if n.startsWith("_staging_") =>
+        n.stripPrefix("_staging_") }.get
+    val journal = s"""{"jv":1,"op":"append","token":"$token","meta":""" +
+      """{"nPrefixes":8,"k":32,"bands":16,"shingleN":3,"sigVersion":2,""" +
+      """"shRepr":"xxhash64","maxDocId":2,"lastCommitTag":"t2"}}"""
+    overwrite(path, "_commit_journal.json", journal)
+    // an unknown journal version refuses before the live store is touched
+    overwrite(path, "_commit_journal.json", journal.replace(""""jv":1""",
+      """"jv":2"""))
+    val e = intercept[IllegalArgumentException] {
+      SignatureStore.recover(spark, path)
+    }
+    assert(e.getMessage.contains("format version 2"), e.getMessage)
+    assert(SignatureStore.readMeta(spark, path).lastCommitTag == "t1")
+    overwrite(path, "_commit_journal.json", journal)
+    assert(SignatureStore.recover(spark, path))
+    assert(SignatureStore.readMeta(spark, path) ==
+      SignatureStore.Meta(8, 32, 16, 3, 2L, "t2"))
+    assert(spark.read.parquet(s"$path/shingles").select("doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L))
   }
 
   test("day-0 empty store: first probe works, appends build the corpus up") {

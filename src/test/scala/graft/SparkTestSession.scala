@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 import graft.tools.TempDirs
@@ -34,5 +38,30 @@ object SparkTestSession {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started. A marker job posted afterwards proves every earlier job
+    * event reached the listener (the listener bus is FIFO). */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val marker = "graft.spec.marker"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null)
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
   }
 }

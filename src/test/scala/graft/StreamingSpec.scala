@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
 
 import graft.ner.{AliasTrieScorer, NerStage}
 import graft.streaming.StreamingKg
@@ -166,13 +167,93 @@ class StreamingSpec extends AnyFunSuite {
         .select("doc_id").collect().map(_.getLong(0)).toSet
       // 200 dups the appended 101; 202 dups 201 within the batch
       assert(out2 == Set(101L, 201L, 203L))
-      // dead done-markers are swept: epoch 0's marker is gone once
-      // epoch 1 has run (only the current epoch can ever replay), so a
-      // long-running query doesn't accumulate one file per micro-batch
+      // the store's commit tag is the only commit record: no marker files
+      // in the store root, and the last commit is the last epoch's
       val markers = new java.io.File(store).listFiles()
-        .map(_.getName).filter(_.matches("_batch_\\d+_done")).toSet
-      assert(markers == Set("_batch_1_done"), markers.toString)
+        .map(_.getName).filter(_.startsWith("_batch_"))
+      assert(markers.isEmpty, markers.toSeq)
+      assert(graft.ops.SignatureStore.readMeta(spark, store).lastCommitTag ==
+        s"${q.id}#1")
     } finally q.stop()
+  }
+
+  test("two queries with different checkpoints over one store each commit every epoch") {
+    import spark.implicits._
+    val store = TempDirs.scoped("two_q_store")
+    def words(p: String) = (1 to 15).map(t => s"${p}_$t").mkString(" ")
+    graft.ops.SignatureStore.init(spark, store, nPrefixes = 8, k = 32,
+      bands = 16, shingleN = 3)
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // two epochs per query, one fresh doc each; the second query's batch
+    // ids come after the first's, as the store's monotone ids require
+    def run(name: String, ids: Seq[Long]): Set[Long] = {
+      val outDir = TempDirs.scoped(s"${name}_out") + "/survivors"
+      val mem = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, String)]
+      val q = StreamingKg.nearDupDedupStream(mem.toDF().toDF("doc_id", "text"),
+        store, outDir, TempDirs.scoped(s"${name}_ck"), maxBucket = 1024)
+      try ids.foreach { id =>
+        mem.addData((id, words(s"d$id")))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.read.parquet(outDir).select("doc_id").as[Long].collect().toSet
+    }
+    assert(run("two_q_a", Seq(1000L, 1010L)) == Set(1000L, 1010L))
+    // the second query's epoch ids repeat the first's: its epoch 1 must
+    // still run, because its tag carries its own query id
+    assert(run("two_q_b", Seq(2000L, 2010L)) == Set(2000L, 2010L))
+    assert(spark.read.parquet(s"$store/shingles").select("doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(1000L, 1010L, 2000L, 2010L))
+  }
+
+  test("near-dup epoch replay: a committed epoch is skipped by its tag with no Spark job; a pending commit is completed once") {
+    import spark.implicits._
+    val store = TempDirs.scoped("replay_store")
+    val outDir = TempDirs.scoped("replay_out") + "/survivors"
+    def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
+    graft.ops.SignatureStore.init(spark, store, nPrefixes = 8, k = 32,
+      bands = 16, shingleN = 3)
+    def epoch(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      StreamingKg.nearDupDedupEpoch(batch, "q1", id, store, outDir,
+        maxBucket = 1024, minJaccard = 0.8, compactEvery = 0,
+        maxFilesPerPartition = 4)
+    def storeIds() = spark.read.parquet(s"$store/shingles")
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    def survivors() = spark.read.parquet(outDir)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    val metaFile = java.nio.file.Paths.get(s"$store/_store_meta.json")
+    // epoch 0: 101 near-dups 100 inside the batch
+    val b0 = Seq((100L, words("a")), (101L, words("a") + " tail"))
+      .toDF("doc_id", "text")
+    epoch(b0, 0L)
+    val (ids0, surv0) = (storeIds(), survivors())
+    val meta0 = java.nio.file.Files.readAllBytes(metaFile)
+    assert(surv0 == Seq(100L) && ids0 == Seq(100L))
+    // the at-least-once retry of the committed epoch
+    val (_, jobs) = SparkTestSession.countingJobs(epoch(b0, 0L))
+    assert(jobs == 0, s"a committed epoch's replay ran $jobs jobs")
+    assert(storeIds() == ids0 && survivors() == surv0)
+    assert(java.nio.file.Files.readAllBytes(metaFile).sameElements(meta0))
+
+    // epoch 1 crashed inside its store commit: survivors written, journal
+    // under the epoch's tag, metadata deleted
+    val b1 = Seq((200L, words("b"))).toDF("doc_id", "text")
+    b1.write.parquet(s"$outDir/batch=1")
+    assert(graft.ops.SignatureStore.stageAppend(spark, store,
+      Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bh"),
+      b1.select(col("doc_id"), graft.ops.Dedup.hashShingles(
+        graft.ops.Dedup.distinctShingles(col("text"), 3)).as("sh")),
+      commitTag = Some("q1#1")))
+    java.nio.file.Files.delete(metaFile)
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$store/._store_meta.json.crc"))
+    // the retry's recover completes the commit, then the tag skips it:
+    // a re-run would refuse 200 as at or below the watermark
+    epoch(b1, 1L)
+    assert(storeIds() == Seq(100L, 200L))
+    assert(survivors() == Seq(100L, 200L))
+    assert(graft.ops.SignatureStore.readMeta(spark, store).lastCommitTag ==
+      "q1#1")
   }
 
   test("soak: 50 micro-batches with compaction cadence keep the store's file count bounded") {
