@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.{KgPipeline, ManifestRecord}
 
@@ -97,6 +98,12 @@ object CleaningPipeline {
     *                      file per committed stage, written on the driver
     *                      with no Spark job; files an older engine appended
     *                      with Spark read alongside.
+    *
+    * Each stage dir is read at most once per call, with a known schema
+    * ([[StageDirs]]); only a `staged/` an earlier call wrote is
+    * schema-inferred, once. The three id dirs are disjoint drop sets, so
+    * stage 3 and the survivors anti-join their union: one drop set, one
+    * broadcast per action.
     *
     * CONTRACT (same as KgPipeline staging): the run binds to the FIRST
     * input staged into `stageDir` — resuming with different/extra `docs`
@@ -263,10 +270,8 @@ object CleaningPipeline {
           " every future near-duplicate")
     }
 
-    val stagedDir = s"$stageDir/staged"
-    val flaggedDir = s"$stageDir/stage1_flagged"
-    val exactDir = s"$stageDir/stage2_exact_drops"
-    val nearDir = s"$stageDir/stage3_near_drops"
+    val dirs = new StageDirs(spark, stageDir)
+    import dirs.{staged, flagged, exactDrops, nearDrops}
     val manifestDir = s"$stageDir/_manifest"
 
     // stage s is committed when s and every stage before it have a
@@ -292,98 +297,75 @@ object CleaningPipeline {
     def record(stage: Int, rows: Long): Unit =
       ManifestRecord.append(spark, manifestDir,
         StageStat(stage, rows, (System.nanoTime() - t0) / 1000000L))
+    def commit(stage: Int, df: DataFrame, dir: String): Unit = {
+      val (out, n) = KgPipeline.observedRows(df, s"stage$stage rows")
+      out.write.mode(SaveMode.Overwrite).parquet(dir)
+      record(stage, n())
+    }
 
     // stage 0 — THE text pass, at rest (staging the BINDING run's keep
-    // columns, a superset of this caller's). `nsh` carries the shingle
-    // count as its own tiny column so stage 3's sub-shingle gate never
-    // has to decode the heavy `sh` array just to take its size.
+    // columns, a superset of this caller's)
     if (!done(0)) {
-      val (df0, rows0) = KgPipeline.observedRows(docs.select(
-          Seq(col("doc_id")) ++ stagedKeep.map(col) ++ Seq(
-            md5(col("text").cast("binary")).as("_h"),
-            Dedup.hashShingles(
-              Dedup.distinctShingles(col("text"), shingleN)).as("sh"),
-            Dedup.minhashSignature(col("text"), k, shingleN).as("sig")): _*)
-        .withColumn("nsh", size(col("sh"))),
-        "stage0 rows")
-      df0
-        // the staged table's codec is DELIBERATELY not pinned: an
-        // un-optioned parquet write follows the session's standard
-        // `spark.sql.parquet.compression.codec` (default snappy), so a
-        // deployment whose staging storage is bandwidth-starved flips to
-        // zstd by conf, no code change. The 20M A/B (BENCH.md round-6
-        // ladders) read: at 8 cores the codecs are indistinguishable
-        // inside the ±25% ambient-disk band; at 32 cores zstd's stage-3
-        // medians ran ~15% ahead (fewer bytes off the slow shared disk,
-        // decode parallelism ample) — suggestive, below conclusive.
-        // Decode-cheap snappy stays the default for a transient
-        // intra-job artifact; the long-lived CORPUS is where the
-        // round-5 zstd-at-rest recommendation applies.
-        .write.mode(SaveMode.Overwrite).parquet(stagedDir)
-      record(0, rows0())
+      val df0 = stagedFrame(docs, stagedKeep, k, shingleN)
+      // the staged table's codec is DELIBERATELY not pinned: an
+      // un-optioned parquet write follows the session's standard
+      // `spark.sql.parquet.compression.codec` (default snappy), so a
+      // deployment whose staging storage is bandwidth-starved flips to
+      // zstd by conf, no code change. The 20M A/B (BENCH.md round-6
+      // ladders) read: at 8 cores the codecs are indistinguishable
+      // inside the ±25% ambient-disk band; at 32 cores zstd's stage-3
+      // medians ran ~15% ahead (fewer bytes off the slow shared disk,
+      // decode parallelism ample) — suggestive, below conclusive.
+      // Decode-cheap snappy stays the default for a transient
+      // intra-job artifact; the long-lived CORPUS is where the
+      // round-5 zstd-at-rest recommendation applies.
+      commit(0, df0, dirs.stagedDir)
+      dirs.stagedSchema = Some(df0.schema)
     }
-    def staged = spark.read.parquet(stagedDir)
     if (upTo < 1) return None
 
     // stage 1 — decontamination flags over the staged shingle sets
     t0 = System.nanoTime()
-    if (!done(1)) {
-      val (df1, rows1) = KgPipeline.observedRows(
-        Decontaminate.contaminationReportOnShingles(
-            staged.select(col("doc_id"), col("sh")), bench, shingleN,
-            minOverlap, minRatio, broadcastBench)
-          .select(col("doc_id")).distinct(),
-        "stage1 rows")
-      df1.write.mode(SaveMode.Overwrite).parquet(flaggedDir)
-      record(1, rows1())
-    }
-    def flagged = spark.read.parquet(flaggedDir)
+    if (!done(1))
+      commit(1, Decontaminate.contaminationReportOnShingles(
+          staged.select(col("doc_id"), col("sh")), bench, shingleN,
+          minOverlap, minRatio, broadcastBench)
+        .select(col("doc_id")).distinct(), dirs.flaggedDir)
     if (upTo < 2) return None
 
     // stage 2 — exact-duplicate drops (digest-keyed window, hash+id only)
     t0 = System.nanoTime()
-    if (!done(2)) {
-      val (df2, rows2) = KgPipeline.observedRows(
-        staged.select(col("doc_id"), col("_h"))
-          .join(flagged, Seq("doc_id"), "left_anti")
-          .withColumn("_rn", row_number().over(
-            Window.partitionBy(col("_h")).orderBy(col("doc_id"))))
-          .where(col("_rn") > 1)
-          .select(col("doc_id")),
-        "stage2 rows")
-      df2.write.mode(SaveMode.Overwrite).parquet(exactDir)
-      record(2, rows2())
-    }
-    def exactDrops = spark.read.parquet(exactDir)
+    if (!done(2))
+      commit(2, staged.select(col("doc_id"), col("_h"))
+        .join(flagged, Seq("doc_id"), "left_anti")
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col("_h")).orderBy(col("doc_id"))))
+        .where(col("_rn") > 1)
+        .select(col("doc_id")), dirs.exactDir)
     if (upTo < 3) return None
 
-    // stage 3 — near-dup drops through the near-dup core. The
-    // drop-filter anti-joins run over the (doc_id, sig) projection only;
-    // the core reads the heavy shingle column straight from the staged
-    // table (candidate ids came from banding over the filtered frame, so
-    // they already exclude every dropped document) — the shingle sets
-    // never ride through an anti-join exchange, and the core reduces
-    // them to the candidate population before its two verify joins.
+    // stage 3 — near-dup drops through the near-dup core. The drop
+    // filter (one anti-join against the earlier drop sets' union) runs
+    // over the (doc_id, sig) projection only; the core reads the heavy
+    // shingle column straight from the staged table (candidate ids came
+    // from banding over the filtered frame, so they already exclude every
+    // dropped document) — the shingle sets never ride through an
+    // anti-join exchange, and the core reduces them to the candidate
+    // population before its two verify joins.
     t0 = System.nanoTime()
     if (!done(3)) {
       val sigs = staged
         .where(col("nsh") > 0).select(col("doc_id"), col("sig"))
-        .join(flagged, Seq("doc_id"), "left_anti")
-        .join(exactDrops, Seq("doc_id"), "left_anti")
+        .join(flagged.union(exactDrops), Seq("doc_id"), "left_anti")
       val pairs = Dedup.verifiedPairs(sigs,
         staged.select(col("doc_id"), col("sh")), k, bands, maxBucket,
         minJaccard)
-      val (df3, rows3) =
-        KgPipeline.observedRows(Dedup.nearDupDropIds(pairs), "stage3 rows")
-      df3.write.mode(SaveMode.Overwrite).parquet(nearDir)
-      record(3, rows3())
+      commit(3, Dedup.nearDupDropIds(pairs), dirs.nearDir)
     }
-    def nearDrops = spark.read.parquet(nearDir)
+    // the chain's one drop set: every id a stage dropped
     def survivorIds(cols: Seq[String]) =
-      staged.select(cols.map(col): _*)
-        .join(flagged, Seq("doc_id"), "left_anti")
-        .join(exactDrops, Seq("doc_id"), "left_anti")
-        .join(nearDrops, Seq("doc_id"), "left_anti")
+      staged.select(cols.map(col): _*).join(
+        flagged.union(exactDrops).union(nearDrops), Seq("doc_id"), "left_anti")
     if (upTo < 4) return None
 
     // stage 4 — fold survivors into the incremental store (signatures
@@ -430,5 +412,40 @@ object CleaningPipeline {
     }
 
     Some(survivorIds("doc_id" +: keepCols))
+  }
+
+  /** Stage 0's projection: `(doc_id, keep…, _h, sh, sig, nsh)`, with
+    * `doc_id` on the long contract of the near-dup core and the store.
+    * `nsh` carries the shingle count as its own tiny column so stage 3's
+    * sub-shingle gate never has to decode the heavy `sh` array just to
+    * take its size. */
+  private[graft] def stagedFrame(docs: DataFrame, keepCols: Seq[String],
+      k: Int, shingleN: Int): DataFrame =
+    docs.select(
+        Seq(col("doc_id").cast("long").as("doc_id")) ++ keepCols.map(col) ++
+          Seq(
+            md5(col("text").cast("binary")).as("_h"),
+            Dedup.hashShingles(
+              Dedup.distinctShingles(col("text"), shingleN)).as("sh"),
+            Dedup.minhashSignature(col("text"), k, shingleN).as("sig")): _*)
+      .withColumn("nsh", size(col("sh")))
+
+  /** The stage dirs of one chain call, each read at most once (a lazy
+    * val) with a known schema: an inference read is a one-task job.
+    * `staged` takes `stagedSchema`, the schema of the frame this call
+    * wrote, or is inferred once when an earlier call wrote it (`None`);
+    * the id dirs take staged's `doc_id` field. */
+  private[graft] final class StageDirs(spark: SparkSession, stageDir: String) {
+    val stagedDir = s"$stageDir/staged"
+    val flaggedDir = s"$stageDir/stage1_flagged"
+    val exactDir = s"$stageDir/stage2_exact_drops"
+    val nearDir = s"$stageDir/stage3_near_drops"
+    var stagedSchema: Option[StructType] = None
+    lazy val staged: DataFrame = stagedSchema
+      .fold(spark.read.parquet(stagedDir))(spark.read.schema(_).parquet(stagedDir))
+    private lazy val ids = StructType(Seq(staged.schema("doc_id")))
+    lazy val flagged: DataFrame = spark.read.schema(ids).parquet(flaggedDir)
+    lazy val exactDrops: DataFrame = spark.read.schema(ids).parquet(exactDir)
+    lazy val nearDrops: DataFrame = spark.read.schema(ids).parquet(nearDir)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -60,7 +60,10 @@ import graft.pipeline.ManifestRecord
   * metadata rewrite). A crash anywhere after the journal is repairable:
   * [[recover]] replays the remaining renames idempotently and restores
   * the metadata — no corpus re-ingest. A crash BEFORE the journal leaves
-  * the live store untouched. [[compact]] uses the same journaled
+  * the live store untouched. The monotone-ingest guard is observed on
+  * the staged shingles write itself and checked before the bands write
+  * and the journal; a refused or empty batch deletes its staging dir, so
+  * the live store is untouched then too. [[compact]] uses the same journaled
   * discipline with partition-directory swaps. The journal's op is
   * `append` (staged files move into the live partitions) or
   * `replace_parts` (staged partition directories replace live ones);
@@ -169,18 +172,12 @@ object SignatureStore {
     // band derivation from the staged signatures — the same sub-shingle
     // gate as the batch path (no shingles → no banding; an all-MaxValue
     // signature would collide every short doc into one degenerate bucket)
-    Dedup.bandRowsFromSigs(
+    writePrefixed(Dedup.bandRowsFromSigs(
         staged.where(size(col("sh")) > 0).select(col("doc_id"), col("sig")),
-        k, bands)
-      .withColumn("bh_pfx", pmod(col("bh"), lit(nPrefixes.toLong)))
-      .repartition(col("bh_pfx"))
-      .write.mode("overwrite").partitionBy("bh_pfx")
-      .parquet(s"$path/bands")
-    staged.select(col("doc_id"), col("sh"))
-      .withColumn("doc_pfx", pmod(col("doc_id"), lit(nPrefixes.toLong)))
-      .repartition(col("doc_pfx"))
-      .write.mode("overwrite").partitionBy("doc_pfx")
-      .parquet(s"$path/shingles")
+        k, bands), "bh_pfx", pmod(col("bh"), lit(nPrefixes.toLong)),
+      s"$path/bands")
+    writePrefixed(staged.select(col("doc_id"), col("sh")), "doc_pfx",
+      pmod(col("doc_id"), lit(nPrefixes.toLong)), s"$path/shingles")
     // the partition modulus is part of the layout contract: a probe with
     // a different P computes prefixes that miss the written partitions,
     // so P travels WITH the store, never as a caller-remembered argument.
@@ -414,10 +411,10 @@ object SignatureStore {
       commitStaged(spark, path)
   }
 
-  /** First half of [[appendSignatures]]: the guard, the staged writes,
-    * and the journal. Returns false (and stages nothing) for an empty
-    * batch. Package-private so specs can simulate a crash between
-    * staging and commit. */
+  /** First half of [[appendSignatures]]: the staged writes, the guard
+    * between them, and the journal. Returns false for an empty batch,
+    * whose staging dir is deleted like a refused one's. Package-private
+    * so specs can simulate a crash between staging and commit. */
   private[graft] def stageAppend(spark: SparkSession, path: String,
       banded: DataFrame, shingleSets: DataFrame,
       allowReplay: Boolean = false,
@@ -436,36 +433,38 @@ object SignatureStore {
     require(!fs(spark, path).exists(journalPath(path)),
       s"$path has an unfinished staged commit (${journalPath(path)}) — " +
         "run SignatureStore.recover first")
-    // monotone-ingest guard + the new watermark, one batch-sized job
-    // (cast before the agg — int-typed ids must not ClassCastException)
-    val r = shingleSets
-      .agg(min(col("doc_id").cast("long")).as("mn"),
-        max(col("doc_id").cast("long")).as("mx"))
-      .collect()(0)
-    if (r.isNullAt(0)) return false
-    val (mn, mx) = (r.getLong(0), r.getLong(1))
-    require(mn > m.maxDocId ||
-      (allowReplay && math.max(mx, advanceWatermarkTo.getOrElse(mx))
-        <= m.maxDocId),
-      s"append batch doc_ids [$mn, $mx] vs the store's max ingested " +
-        s"doc_id ${m.maxDocId} ($path) — incremental dedup requires " +
-        "strictly monotone ingest ids. A true at-least-once replay sits " +
-        "entirely at or below the watermark and passes with " +
-        "allowReplay=true; anything else is a misnumbered source — " +
-        "re-number the batch or rebuild the store.")
     val token = newToken()
     val staging = s"$path/$StagingPrefix$token"
-    banded.select(col("doc_id").cast("long").as("doc_id"), col("band"),
-        col("bh"))
-      .withColumn("bh_pfx", pmod(col("bh"), lit(m.nPrefixes.toLong)))
-      .repartition(col("bh_pfx"))
-      .write.mode("overwrite").partitionBy("bh_pfx")
-      .parquet(s"$staging/bands")
-    shingleSets.select(col("doc_id").cast("long").as("doc_id"), col("sh"))
-      .withColumn("doc_pfx", pmod(col("doc_id"), lit(m.nPrefixes.toLong)))
-      .repartition(col("doc_pfx"))
-      .write.mode("overwrite").partitionBy("doc_pfx")
-      .parquet(s"$staging/shingles")
+    // the monotone-ingest guard and the new watermark are OBSERVED on the
+    // staged shingles write: no agg job re-deriving the batch. A refused
+    // or empty batch deletes its staging dir before the bands write.
+    val guard = Observation("append guard")
+    writePrefixed(
+      shingleSets.select(col("doc_id").cast("long").as("doc_id"), col("sh"))
+        .observe(guard, count(lit(1)).as("n"), min(col("doc_id")).as("mn"),
+          max(col("doc_id")).as("mx")),
+      "doc_pfx", pmod(col("doc_id"), lit(m.nPrefixes.toLong)),
+      s"$staging/shingles")
+    val g = guard.get
+    // an empty batch observes null bounds, read as 0 and never used
+    val (n, mn, mx) = (g("n").asInstanceOf[Long], g("mn").asInstanceOf[Long],
+      g("mx").asInstanceOf[Long])
+    if (n == 0 || !(mn > m.maxDocId ||
+        (allowReplay && math.max(mx, advanceWatermarkTo.getOrElse(mx))
+          <= m.maxDocId))) {
+      fs(spark, path).delete(new Path(staging), true)
+      require(n == 0,
+        s"append batch doc_ids [$mn, $mx] vs the store's max ingested " +
+          s"doc_id ${m.maxDocId} ($path) — incremental dedup requires " +
+          "strictly monotone ingest ids. A true at-least-once replay sits " +
+          "entirely at or below the watermark and passes with " +
+          "allowReplay=true; anything else is a misnumbered source — " +
+          "re-number the batch or rebuild the store.")
+      return false
+    }
+    writePrefixed(banded.select(col("doc_id").cast("long").as("doc_id"),
+        col("band"), col("bh")),
+      "bh_pfx", pmod(col("bh"), lit(m.nPrefixes.toLong)), s"$staging/bands")
     val newMeta = m.copy(
       maxDocId = math.max(m.maxDocId,
         math.max(mx, advanceWatermarkTo.getOrElse(mx))),
@@ -617,18 +616,29 @@ object SignatureStore {
     // no partition list to mis-parse
     val token = newToken()
     tables.foreach { case (table, schema, pfx, parts) =>
-      spark.read.schema(schema)
-        .option("basePath", s"$path/$table")
-        .parquet(parts.map(_.toString): _*)
-        .repartition(col(pfx))
-        .write.mode("overwrite").partitionBy(pfx)
-        .parquet(s"$path/$StagingPrefix$token/$table")
+      writePrefixed(spark.read.schema(schema)
+          .option("basePath", s"$path/$table")
+          .parquet(parts.map(_.toString): _*),
+        pfx, col(pfx), s"$path/$StagingPrefix$token/$table")
     }
     writeJournal(spark, path, Journal("replace_parts", token, m))
     true
   }
 
   private val StagingPrefix = "_staging_"
+
+  /** `df` with its `pfx` column set to `prefix`, written partitioned by
+    * it. A partitioned write costs per FILE while AQE coalesces by bytes,
+    * packing a small append's prefix files into one task; a by-number
+    * repartition is never coalesced. Each prefix still lands in one task
+    * (one file per prefix per write). */
+  private def writePrefixed(df: DataFrame, pfx: String, prefix: Column,
+      dir: String): Unit =
+    df.withColumn(pfx, prefix)
+      .repartition(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col(pfx))
+      .write.mode("overwrite").partitionBy(pfx).parquet(dir)
 
   /** Unique-enough commit token: wall clock + pid (single-writer store —
     * concurrent appends to one store are out of contract). */

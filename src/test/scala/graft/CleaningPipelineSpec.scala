@@ -549,4 +549,75 @@ class CleaningPipelineSpec extends AnyFunSuite {
     assert(cwd.list().toSet == cwdBefore,
       s"written to the working directory: ${cwd.list().toSet -- cwdBefore}")
   }
+
+  /** The Spark jobs of a fresh-dir chain call with a store, measured on
+    * this spec's session (local[8], 8 shuffle partitions) over
+    * [[resumeFixture]], survivors' collect included: 30 or 31 — the one
+    * that comes and goes is the map stage of stage 1's `distinct()`
+    * exchange, which AQE sometimes folds into the write's final stage
+    * after the aggregate's shuffle reads back as one partition. */
+  private val ChainJobBudget = 31
+
+  test("job budget: a fresh-dir chain call with a store runs a bounded number of jobs and infers no schema") {
+    val (docs, bench) = resumeFixture()
+    val store = freshStore(TempDirs.scoped("graft_budget_store"))
+    val (kept, jobs) = SparkTestSession.recordingJobs(
+      CleaningPipeline.cleanedMetaResumable(docs, bench, freshStage(),
+        keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
+        maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
+        storePath = Some(store)).collect().map(_.getLong(0)).toSet)
+    assert(kept == Set(3L, 6L))
+    info(s"fresh chain call: ${jobs.size} jobs")
+    assert(jobs.count(SparkTestSession.isSchemaInference) == 0)
+    assert(jobs.size <= ChainJobBudget,
+      s"${jobs.size} jobs > budget $ChainJobBudget")
+  }
+
+  test("a resumed call whose stages 0-3 are committed runs at most one schema-inference job") {
+    val (docs, bench) = resumeFixture()
+    val store = freshStore(TempDirs.scoped("graft_budget_resume_store"))
+    val stage = freshStage()
+    CleaningPipeline.runStages(docs, bench, stage, Seq("lang"), k = 32,
+      bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
+      minOverlap = 5, minRatio = 0.0, broadcastBench = true,
+      storePath = Some(store), allowStoreReplay = false, upTo = 3)
+    val (kept, jobs) = SparkTestSession.recordingJobs(
+      CleaningPipeline.cleanedMetaResumable(docs, bench, stage,
+        keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
+        maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
+        storePath = Some(store)).collect().map(_.getLong(0)).toSet)
+    assert(kept == Set(3L, 6L))
+    val inferred = jobs.count(SparkTestSession.isSchemaInference)
+    info(s"resumed call: ${jobs.size} jobs, $inferred schema-inference")
+    assert(inferred <= 1)
+  }
+
+  test("every stage dir reads back with the schema inference reads; an int-typed doc_id chain equals the long-typed one") {
+    val (docs, bench) = resumeFixture()
+    def chain(in: org.apache.spark.sql.DataFrame) = {
+      val stage = freshStage()
+      val kept = CleaningPipeline.cleanedMetaResumable(in, bench, stage,
+        keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
+        maxBucket = 64, minJaccard = 0.8, minOverlap = 5)
+        .collect().map(_.getLong(0)).toSet
+      // the schema of the staged frame a fresh call writes, and a resume
+      // that infers the staged dir's
+      Seq(Some(CleaningPipeline.stagedFrame(in, Seq("lang"), 32, 3).schema),
+          None).foreach { written =>
+        val dirs = new CleaningPipeline.StageDirs(spark, stage)
+        dirs.stagedSchema = written
+        Seq(dirs.stagedDir -> dirs.staged, dirs.flaggedDir -> dirs.flagged,
+            dirs.exactDir -> dirs.exactDrops, dirs.nearDir -> dirs.nearDrops)
+          .foreach { case (dir, df) =>
+            assert(df.schema == spark.read.parquet(dir).schema,
+              s"$dir (written schema: $written)")
+          }
+      }
+      (kept, manifestRows(stage))
+    }
+    val long = chain(docs)
+    assert(long._1 == Set(3L, 6L))
+    assert(long._2.map(_._1) == Seq(0, 1, 2, 3))
+    assert(chain(docs.withColumn("doc_id", col("doc_id").cast("int"))) == long)
+  }
 }

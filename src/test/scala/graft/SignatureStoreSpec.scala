@@ -714,4 +714,78 @@ class SignatureStoreSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((7L, 10000L)))
   }
+
+  /** Every path under `path` (directories too), with the bytes of each
+    * file. */
+  private def snapshot(path: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(path)
+    java.nio.file.Files.walk(root).iterator().asScala.map { f =>
+      root.relativize(f).toString ->
+        (if (java.nio.file.Files.isRegularFile(f))
+          java.nio.file.Files.readAllBytes(f).toSeq
+        else Seq.empty[Byte])
+    }.toMap
+  }
+
+  /** The Spark jobs of one `appendSignatures` of pre-computed frames,
+    * measured on this spec's session (local[8], 8 shuffle partitions):
+    * the shingles write carrying the observed guard, then the bands
+    * write, each a shuffle-map job and a write job. */
+  private val AppendJobBudget = 4
+
+  test("job budget: one appendSignatures runs a bounded number of jobs; an empty batch stages nothing") {
+    import spark.implicits._
+    def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
+    val path = TempDirs.scoped("graft_sigstore_budget")
+    SignatureStore.write((0L until 100L).map(i => (i, words(s"c$i")))
+      .toDF("doc_id", "text"), path, nPrefixes = 16, k = 32, bands = 16,
+      shingleN = 3)
+    // the batch's frames as the streaming loop holds them: from the
+    // probe, already materialized by its own jobs
+    val batch = (100L until 150L).map(i => (i, words(s"b$i")))
+      .toDF("doc_id", "text")
+    val (pairs, keys, sh) =
+      SignatureStore.probeWithSignatures(spark, path, batch)
+    assert(pairs.count() == 0)
+    val (_, jobs) = SparkTestSession.countingJobs(
+      SignatureStore.appendSignatures(spark, path, keys, sh))
+    info(s"appendSignatures: $jobs jobs")
+    assert(jobs <= AppendJobBudget, s"$jobs jobs > budget $AppendJobBudget")
+    assert(spark.read.parquet(s"$path/shingles").count() == 150L)
+    assert(SignatureStore.readMeta(spark, path).maxDocId == 149L)
+
+    val before = snapshot(path)
+    SignatureStore.appendSignatures(spark, path, keys.limit(0), sh.limit(0))
+    assert(snapshot(path) == before, "the empty batch changed the store")
+  }
+
+  test("a refused append leaves the store as it was: no staging dir, no journal, the same metadata bytes") {
+    import spark.implicits._
+    def words(p: String) = (1 to 20).map(t => s"${p}_$t").mkString(" ")
+    val path = TempDirs.scoped("graft_sigstore_refuse")
+    SignatureStore.write((0L until 100L).map(i => (i, words(s"c$i")))
+      .toDF("doc_id", "text"), path, nPrefixes = 16, k = 32, bands = 16,
+      shingleN = 3)
+    SignatureStore.append(spark, path,
+      Seq((100L, words("a")), (101L, words("b"))).toDF("doc_id", "text"))
+    val before = snapshot(path)
+    assert(before.contains("_store_meta.json"))
+    // strict refusal: every id at or below the watermark, no replay
+    val strict = intercept[IllegalArgumentException] {
+      SignatureStore.append(spark, path,
+        Seq((50L, words("x")), (101L, words("y"))).toDF("doc_id", "text"))
+    }
+    assert(strict.getMessage.contains("monotone"), strict.getMessage)
+    assert(snapshot(path) == before, "the strict refusal changed the store")
+    // a batch straddling the watermark refuses even as a declared replay
+    val straddle = intercept[IllegalArgumentException] {
+      SignatureStore.append(spark, path,
+        Seq((99L, words("m1")), (300L, words("m2"))).toDF("doc_id", "text"),
+        allowReplay = true)
+    }
+    assert(straddle.getMessage.contains("misnumbered"), straddle.getMessage)
+    assert(snapshot(path) == before, "the straddling refusal changed the store")
+    assert(SignatureStore.readMeta(spark, path).maxDocId == 101L)
+  }
 }

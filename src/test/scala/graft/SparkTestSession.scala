@@ -1,10 +1,12 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.tools.TempDirs
 
@@ -41,18 +43,25 @@ object SparkTestSession {
   }
 
   /** Runs `body` and returns its result with the number of Spark jobs it
-    * started. A marker job posted afterwards proves every earlier job
-    * event reached the listener (the listener bus is FIFO). */
+    * started. */
   def countingJobs[T](body: => T): (T, Int) = {
+    val (out, jobs) = recordingJobs(body)
+    (out, jobs.size)
+  }
+
+  /** Runs `body` and returns its result with the start events of the
+    * Spark jobs it started. A marker job posted afterwards proves every
+    * earlier job event reached the listener (the listener bus is FIFO). */
+  def recordingJobs[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
     val marker = "graft.spec.marker"
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(marker) != null)
           drained.countDown()
-        else jobs.incrementAndGet()
+        else jobs.add(e)
     }
     sc.addSparkListener(listener)
     try {
@@ -61,7 +70,14 @@ object SparkTestSession {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(marker, null)
       assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get())
+      (out, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Whether `job` is a parquet schema-inference read: a footer job run
+    * outside any SQL execution. */
+  def isSchemaInference(job: SparkListenerJobStart): Boolean =
+    (job.properties == null ||
+      job.properties.getProperty(SQLExecution.EXECUTION_ID_KEY) == null) &&
+      job.stageInfos.exists(_.name.startsWith("parquet at"))
 }
