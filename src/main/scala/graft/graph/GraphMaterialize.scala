@@ -265,19 +265,38 @@ object GraphMaterialize {
     val spark = mentions.sparkSession
     import spark.implicits._
     mentions.toDF()
-      .where(col("qid") =!= "NIL")
-      .select(explode(array(
-        struct(col("url").as("subj"),
-          lit("mentions_agency").as("pred"),
-          col("qid").as("obj")),
-        struct(col("qid").as("subj"),
-          lit("alias").as("pred"),
-          col("surface").as("obj")))).as("t"))
+      .where(linked)
+      .select(explode(tripleStructs).as("t"))
       .select(col("t.subj").as("subj"), col("t.pred").as("pred"),
         col("t.obj").as("obj"))
       .distinct()
       .as[Triple]
   }
+
+  /** The distinct triples of the mention rows an aggregate sees — the
+    * rows of [[triples]] as `array<struct<subj, pred, obj>>`, or NULL once
+    * more than `cap` distinct triples are seen
+    * ([[graft.functions.BoundedDistinctStructs]]). Partial-aggregable
+    * with a bounded buffer, so it can ride a write as a `Dataset.observe`
+    * metric. */
+  private[graft] def boundedTripleSet(cap: Int): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.functions.BoundedDistinctStructs(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
+          when(linked, tripleStructs)), cap)
+        .toAggregateExpression())
+
+  /** A mention whose triples enter the graph: one linked to an agency. */
+  private def linked: Column = col("qid") =!= "NIL"
+
+  /** A mention's two triples as `(subj, pred, obj)` structs. */
+  private def tripleStructs: Column = array(
+    struct(col("url").as("subj"),
+      lit("mentions_agency").as("pred"),
+      col("qid").as("obj")),
+    struct(col("qid").as("subj"),
+      lit("alias").as("pred"),
+      col("surface").as("obj")))
 
   /** K3: GEXF export — collected driver-side AFTER thresholding (graphs are
     * ≤ thousands of edges, `network_analysis.ipynb cells 59-60`). */

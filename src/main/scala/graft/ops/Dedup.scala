@@ -85,7 +85,8 @@ object Dedup {
     * signature store ([[SignatureStore]]); both MUST band identically or
     * incremental probes miss pairs the batch path finds. Sub-shingle docs
     * (fewer than `shingleN` tokens → no shingles) are gated out so they
-    * cannot collide into one degenerate all-MaxValue bucket. */
+    * cannot collide into one degenerate all-MaxValue bucket. `doc_id` is
+    * taken in as long, the type of the bucket cap's ids. */
   private[ops] def bandedSignatures(
       docs: DataFrame,
       k: Int,
@@ -94,7 +95,7 @@ object Dedup {
   ): DataFrame = {
     val sig = docs
       .where(size(split(col("text"), " ")) >= shingleN)
-      .select(col("doc_id"),
+      .select(col("doc_id").cast("long").as("doc_id"),
         minhashSignature(col("text"), k, shingleN).as("sig"))
     bandRowsFromSigs(sig, k, bands)
   }
@@ -340,6 +341,8 @@ object Dedup {
     * composition ([[lshCandidatePairs]] + [[jaccardVerify]]) reads
     * `text` three times and exchanges corpus-sized shingle arrays; here
     * text is read once. OpsSpec asserts equal pairs and jaccards.
+    * `doc_id` is taken in as long, as in [[bandedSignatures]], so an
+    * int-typed id gives the pairs of its long-typed copy.
     *
     * Runs one Spark job when called: the core's candidate count, which
     * also materializes the staged frame. */
@@ -353,7 +356,7 @@ object Dedup {
   ): DataFrame = {
     val staged = docs
       .where(size(split(col("text"), " ")) >= shingleN)
-      .select(col("doc_id"),
+      .select(col("doc_id").cast("long").as("doc_id"),
         hashShingles(distinctShingles(col("text"), shingleN)).as("sh"),
         minhashSignature(col("text"), k, shingleN).as("sig"))
       .localCheckpoint(eager = false)

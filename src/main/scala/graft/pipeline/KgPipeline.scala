@@ -1,9 +1,12 @@
 package graft.pipeline
 
+import java.util.UUID
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
 import graft.core.{Article, Mention, Triple}
 import graft.graph.GraphMaterialize
@@ -30,15 +33,17 @@ import graft.ner.{AliasTrieScorer, NerStage, TokenScorer}
   * resumed run never recomputes finished work and per-partition lineage is
   * queryable from the `_manifest` table.
   *
-  * A bucket commits with two Spark jobs — the mentions write and the
-  * triples write — and no other: its input is scanned once, NER runs once,
-  * the manifest counts are observed on the write jobs (`Dataset.observe`),
-  * not counted by re-scans or read-backs, and the manifest row is a
-  * one-row parquet file written on the driver ([[ManifestRecord]]). A
-  * bucket with at most [[OneTaskTriplesMaxRows]] mentions builds its
-  * triples in one task with no exchange. A bucket with no article,
-  * mention or triple commits a manifest row of zeros. Every path is
-  * resolved through the Hadoop `FileSystem` API.
+  * A small bucket commits with ONE Spark job, its mentions write, and no
+  * other: its input is scanned once, NER runs once, and the write's
+  * `Dataset.observe` carries the manifest counts and the bucket's
+  * distinct triples, bounded at [[TripleCap]]
+  * ([[GraphMaterialize.boundedTripleSet]]). The driver writes those
+  * triples, one parquet file per `pred`, and the manifest row, a one-row
+  * parquet file, both through [[ManifestRecord]]. A bucket with more
+  * distinct triples than the cap observes NULL instead and builds its
+  * triples from its written mentions with an exchange, in a second job.
+  * A bucket with no article, mention or triple commits a manifest row of
+  * zeros. Every path is resolved through the Hadoop `FileSystem` API.
   */
 object KgPipeline {
 
@@ -73,27 +78,28 @@ object KgPipeline {
       buckets: Int = 8,
       scorer: TokenScorer = new AliasTrieScorer
   ): Seq[BucketStat] =
-    runResumable(articles, outDir, buckets, scorer, OneTaskTriplesMaxRows)
+    runResumable(articles, outDir, buckets, scorer, TripleCap)
 
-  /** Maximum mention rows of a bucket whose triples are built in ONE task
-    * with no exchange. The count is the one the bucket's mentions write
-    * observed, never an estimate. The triples' `distinct` runs over at
-    * most twice as many exploded rows; on 4 cores one task and the
-    * exchange path took about the same time at 100k mention rows (0.4–0.5
-    * s), the one task was ahead at 20k and the exchange twice as fast at
-    * 300k. Half the break-even keeps the one task well under a second and
-    * leaves larger buckets to the exchange, which spreads them over the
-    * session's cores. */
-  private[graft] val OneTaskTriplesMaxRows = 50000L
+  /** Most distinct triples a bucket's mentions write observes for the
+    * driver to write; past it the observation is NULL and the bucket's
+    * triples take the exchange path. The cap also bounds what one task's
+    * buffer and the driver hold. On 4 cores, observing the set and writing
+    * it on the driver took about as long as the read-back and exchange at
+    * 150k distinct triples (1.0–1.3 s, with one or four write tasks); the
+    * driver path was ahead by 0.3–0.7 s at 15k and by 0.04–0.16 s at 75k,
+    * and the exchange 1.5× faster at 300k. Half the break-even keeps the
+    * driver path clearly ahead and leaves larger buckets to the exchange,
+    * which spreads them over the session's cores. */
+  private[graft] val TripleCap = 75000
 
-  /** [[runResumable]] with the one-task triples limit as an argument — the
-    * seam that lets specs place a bucket on either side of the gate. */
+  /** [[runResumable]] with the triples cap as an argument — the seam that
+    * lets specs place a bucket on either side of the gate. */
   private[graft] def runResumable(
       articles: Dataset[Article],
       outDir: String,
       buckets: Int,
       scorer: TokenScorer,
-      oneTaskTriplesMaxRows: Long
+      tripleCap: Int
   ): Seq[BucketStat] = {
     val spark = articles.sparkSession
     import spark.implicits._
@@ -124,68 +130,96 @@ object KgPipeline {
     // articles processes the staged corpus, not the new one. A new input
     // needs a new outDir (validating input-vs-staging equality would cost
     // a full second pass over the raw corpus — exactly what staging exists
-    // to avoid).
+    // to avoid). The staging is read with the schema of its write, so no
+    // schema-inference job runs.
     //
-    // `checkBuckets`: only a bucket column this call did not compute can
-    // carry a bucket ≥ `buckets` — the input's own, or a staging written
-    // by an earlier run, which is also read with its own (inferred)
-    // schema. A staging this call writes is read back with the schema of
-    // its write, so no schema-inference job runs.
-    val stagingDir = s"$outDir/_staging"
-    val (bucketed, checkBuckets) =
-      if (articles.columns.contains("bucket"))
-        (articles.toDF().withColumnRenamed("bucket", "_bucket"), true)
-      else if (fs.exists(new Path(s"$stagingDir/_SUCCESS")))
-        (spark.read.parquet(stagingDir), true)
-      else {
-        articles.toDF()
-          .withColumn("_bucket",
-            pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("_bucket")
-          .parquet(stagingDir)
-        (spark.read.schema(articles.schema.add("_bucket", IntegerType))
-          .parquet(stagingDir), false)
-      }
-
-    // the authoritative bucket count is what the data says, not the
+    // The authoritative bucket count is what the data says, not the
     // caller's argument: resuming with a smaller `buckets` than the run
-    // that staged/started would silently never process the tail buckets
-    if (checkBuckets) {
-      val staged = bucketed.select(max(col("_bucket"))).head()
-      val maxSeen = if (staged.isNullAt(0)) -1 else staged.getInt(0)
-      require(maxSeen < buckets,
-        s"input carries buckets up to $maxSeen but runResumable was called " +
-          s"with buckets=$buckets — those buckets would silently never be " +
-          "processed; resume with the original bucket count")
-    }
+    // that staged/started would silently never process the tail buckets.
+    // A staging's buckets are its `_bucket=N` directory names; only an
+    // input's own bucket column costs a job to read.
+    val stagingDir = new Path(s"$outDir/_staging")
+    val (bucketed, maxSeen) =
+      if (articles.columns.contains("bucket")) {
+        val in = articles.toDF().withColumnRenamed("bucket", "_bucket")
+        val top = in.select(max(col("_bucket"))).head()
+        (in, if (top.isNullAt(0)) -1 else top.getInt(0))
+      } else {
+        if (!fs.exists(new Path(stagingDir, "_SUCCESS")))
+          articles.toDF()
+            .withColumn("_bucket",
+              pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
+            .write.mode(SaveMode.Overwrite)
+            .partitionBy("_bucket")
+            .parquet(stagingDir.toString)
+        val StagedBucket = "_bucket=(\\d+)".r
+        (spark.read.schema(articles.schema.add("_bucket", IntegerType))
+          .parquet(stagingDir.toString),
+          fs.listStatus(stagingDir).map(_.getPath.getName)
+            .collect { case StagedBucket(n) => n.toInt }.maxOption.getOrElse(-1))
+      }
+    require(maxSeen < buckets,
+      s"input carries buckets up to $maxSeen but runResumable was called " +
+        s"with buckets=$buckets — those buckets would silently never be " +
+        "processed; resume with the original bucket count")
 
     val mentionSchema = Encoders.product[Mention].schema
     (0 until buckets).filterNot(done).map { b =>
       val t0 = System.nanoTime()
       val mentionsDir = s"$outDir/mentions/bucket=$b"
+      val triplesDir = new Path(s"$outDir/triples/bucket=$b")
       val (ms, articlesIn) = bucketMentions(bucketed, b, scorer)
-      val (msOut, mentionsOut) = observedRows(ms.toDF(), s"bucket $b mentions")
-      msOut.write.mode(SaveMode.Overwrite).parquet(mentionsDir)
-      // triples come from the bucket's just-written mentions, read with
-      // the known schema so no schema-inference job runs. Read as ONE
-      // partition when the write counted few enough rows, the distinct
-      // needs no exchange: one job instead of a shuffle-map and a result
-      // job.
-      val nMentions = mentionsOut()
-      val written = spark.read.schema(mentionSchema).parquet(mentionsDir).as[Mention]
-      val (ts, triplesOut) = observedRows(GraphMaterialize.triples(
-          if (nMentions <= oneTaskTriplesMaxRows) written.coalesce(1) else written)
-        .toDF(), s"bucket $b triples")
-      ts.write.mode(SaveMode.Overwrite)
-        .partitionBy("pred")
-        .parquet(s"$outDir/triples/bucket=$b")
-      val stat = BucketStat(b, articlesIn(), nMentions, triplesOut(),
-        (System.nanoTime() - t0) / 1000000)
+      val obs = Observation(s"bucket $b mentions")
+      ms.toDF()
+        .observe(obs, count(lit(1)).as("rows"),
+          GraphMaterialize.boundedTripleSet(tripleCap).as("triples"))
+        .write.mode(SaveMode.Overwrite).parquet(mentionsDir)
+      val nTriples = obs.get("triples") match {
+        case observed: collection.Seq[Row @unchecked] =>
+          writeTriples(spark, triplesDir, observed)
+          observed.size.toLong
+        case null =>
+          // too many triples for the driver: build them from the just-
+          // written mentions, read with the known schema so no
+          // schema-inference job runs
+          val (ts, triplesOut) = observedRows(GraphMaterialize.triples(
+              spark.read.schema(mentionSchema).parquet(mentionsDir).as[Mention])
+            .toDF(), s"bucket $b triples")
+          ts.write.mode(SaveMode.Overwrite)
+            .partitionBy("pred")
+            .parquet(triplesDir.toString)
+          triplesOut()
+      }
+      val stat = BucketStat(b, articlesIn(), obs.get("rows").asInstanceOf[Long],
+        nTriples, (System.nanoTime() - t0) / 1000000)
       ManifestRecord.append(spark, manifestDir, stat)
       stat
     }
   }
+
+  /** Replaces `dir` with the `(subj, pred, obj)` rows of `triples`, laid
+    * out as `write.partitionBy("pred")` lays them out: one parquet file of
+    * `(subj, obj)` per `pred` value under `pred=<value>`. With no triple
+    * the directory stays, empty, as Spark's write of an empty frame
+    * leaves it. */
+  private def writeTriples(spark: SparkSession, dir: Path,
+      triples: collection.Seq[Row]): Unit = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(dir, true)
+    fs.mkdirs(dir)
+    triples.groupBy(_.getString(1)).foreach { case (pred, rows) =>
+      ManifestRecord.writeParquet(spark,
+        new Path(new Path(dir, ExternalCatalogUtils.getPartitionPathString("pred", pred)),
+          s"part-${UUID.randomUUID()}.parquet"),
+        TriplesFileSchema,
+        rows.map(r => Row(r.getString(0), r.getString(2))))
+    }
+  }
+
+  /** The columns of a triples file: [[Triple]] without its `pred`
+    * partition column, all nullable, as Spark writes them. */
+  private val TriplesFileSchema =
+    new StructType().add("subj", StringType).add("obj", StringType)
 
   /** The plan of one bucket's mentions: the bucket's rows of the staged
     * table (partition-pruned on `_bucket`), counted BEFORE the NER gate —

@@ -9,62 +9,85 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
-import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.parquet.schema.LogicalTypeAnnotation.stringType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+import org.apache.spark.sql.{Encoders, Row, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 /** The one driver-side file writer of the resumable writers, and the
   * commit record of their `_manifest` tables.
   *
-  * Every file the driver writes — a manifest record, a parameter file, a
-  * marker, a store's metadata or commit journal — goes through [[commit]]:
-  * the bytes land in a dot-prefixed temp file beside the target (Spark's
-  * file listing skips it), then ONE Hadoop `FileSystem.rename` moves it
-  * onto the target, which must be absent (HDFS rename does not
-  * overwrite). A reader therefore sees a file whole or not at all, on any
-  * Hadoop filesystem; a crash leaves at most a temp file, which
-  * [[isTemp]] names so its owner can sweep it.
+  * Every file the driver writes — a manifest record, a small bucket's
+  * triples, a parameter file, a marker, a store's metadata or commit
+  * journal — goes through [[commit]]: the bytes land in a dot-prefixed
+  * temp file beside the target (Spark's file listing skips it), then ONE
+  * Hadoop `FileSystem.rename` moves it onto the target, which must be
+  * absent (HDFS rename does not overwrite). A reader therefore sees a
+  * file whole or not at all, on any Hadoop filesystem; a crash leaves at
+  * most a temp file, which [[isTemp]] names so its owner can sweep it.
   *
-  * A manifest record ([[append]]) is one one-row parquet file per
-  * committed unit, the file `Seq(rec).toDS().write.mode(Append)
-  * .parquet(dir)` writes — same message name, column names, physical
-  * types and repetition, and the same Spark row-schema footer key — so
-  * `spark.read.parquet(dir)` reads records of either writer side by side.
-  * It runs no Spark job. Records hold `Int` and `Long` fields only. */
+  * A parquet file ([[writeParquet]]) is the file Spark writes for the
+  * same rows — same message name, column names, physical and logical
+  * types, repetition and compression codec, and the same Spark row-schema
+  * footer key — so `spark.read.parquet` reads files of either writer side
+  * by side. It runs no Spark job. A manifest record ([[append]]) is one
+  * such one-row file per committed unit, the file `Seq(rec).toDS().write
+  * .mode(Append).parquet(dir)` writes. */
 private[graft] object ManifestRecord {
 
   /** The footer key Spark reads its own schema from (nullability
     * included) when it infers a parquet file's schema. */
   private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  def append[T <: Product : TypeTag](spark: SparkSession, dir: String, rec: T): Unit = {
-    val schema = Encoders.product[T].schema
+  def append[T <: Product : TypeTag](spark: SparkSession, dir: String, rec: T): Unit =
+    writeParquet(spark, new Path(dir, s"part-${UUID.randomUUID()}.parquet"),
+      Encoders.product[T].schema, Seq(Row.fromTuple(rec)))
+
+  /** Writes `rows` of `schema` as the one parquet file `target`, which
+    * must be absent, compressed with the session's
+    * `spark.sql.parquet.compression.codec`. Fields hold `Int`, `Long` or
+    * `String` values; a nullable field may hold null. */
+  def writeParquet(spark: SparkSession, target: Path, schema: StructType,
+      rows: Iterable[Row]): Unit = {
     val msg = new MessageType("spark_schema", schema.fields.toSeq.map[Type] { f =>
       val t = f.dataType match {
         case IntegerType => INT32
         case LongType => INT64
+        case StringType => BINARY
         case other => throw new IllegalArgumentException(
-          s"manifest field ${f.name} has type $other; records hold Int and Long only")
+          s"field ${f.name} has type $other; files hold Int, Long and String only")
       }
-      (if (f.nullable) Types.optional(t) else Types.required(t)).named(f.name)
+      val b = if (f.nullable) Types.optional(t) else Types.required(t)
+      (if (t == BINARY) b.as(stringType()) else b).named(f.name)
     }.asJava)
-    val row = new SimpleGroup(msg)
-    rec.productIterator.zipWithIndex.foreach {
-      case (v: Int, i) => row.add(i, v)
-      case (v: Long, i) => row.add(i, v)
-      case (v, i) => throw new IllegalArgumentException(
-        s"manifest field ${schema.fields(i).name} holds $v")
+    val codec = spark.conf.get("spark.sql.parquet.compression.codec").toUpperCase match {
+      case "NONE" => CompressionCodecName.UNCOMPRESSED
+      case name => CompressionCodecName.valueOf(name)
     }
-    commit(spark, new Path(dir, s"part-${UUID.randomUUID()}.parquet")) { tmp =>
+    commit(spark, target) { tmp =>
       val conf = spark.sparkContext.hadoopConfiguration
       val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
         .withConf(conf)
         .withType(msg)
+        .withCompressionCodec(codec)
         .withExtraMetaData(Map(SparkRowMetadataKey -> schema.json).asJava)
         .build()
-      try w.write(row) finally w.close()
+      try rows.foreach { r =>
+        val g = new SimpleGroup(msg)
+        (0 until r.length).filterNot(r.isNullAt).foreach { i =>
+          r.get(i) match {
+            case v: Int => g.add(i, v)
+            case v: Long => g.add(i, v)
+            case v: String => g.add(i, v)
+            case v => throw new IllegalArgumentException(
+              s"field ${schema.fields(i).name} holds $v")
+          }
+        }
+        w.write(g)
+      } finally w.close()
     }
   }
 

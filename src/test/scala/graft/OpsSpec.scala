@@ -136,6 +136,32 @@ class OpsSpec extends AnyFunSuite {
     assert(kept == Set(10L, 13L)) // rep of the cluster + the singleton
   }
 
+  test("near-dup operators: an int-typed doc_id gives the output of its long copy") {
+    val base = (1 to 30).map(i => s"w$i")
+    val long = docs(
+      (10L, base.mkString(" ")),
+      (11L, (base ++ (1 to 5).map(i => s"x$i")).mkString(" ")),
+      (12L, (base ++ (1 to 10).map(i => s"x$i")).mkString(" ")),
+      (13L, (1 to 30).map(i => s"z$i").mkString(" ")))
+    val int = long.select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    /** Rows of `df` with every integral column read as long, sorted. */
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.select(df.schema.fields.toSeq.map { f =>
+        if (f.dataType == org.apache.spark.sql.types.IntegerType)
+          col(f.name).cast("long").as(f.name)
+        else col(f.name)
+      }: _*).collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+    def same(op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+      val expected = rows(op(long))
+      assert(expected.nonEmpty)
+      assert(rows(op(int)) == expected)
+    }
+    same(Dedup.lshCandidatePairs(_, k = 32, bands = 16, shingleN = 3))
+    same(Dedup.nearDupPairsStaged(_, bands = 16))
+    same(Dedup.nearDupGroups(_, bands = 16))
+    same(Dedup.nearDupDedup(_, bands = 16))
+  }
+
   test("decontamination: planted benchmark overlap flags and drops, threshold holds") {
     import spark.implicits._
     val benchToks = (1 to 10).map(i => s"b$i")

@@ -135,8 +135,23 @@ class PipelineSpec extends AnyFunSuite {
     val mdir = new java.io.File(s"$dir/_manifest")
     mdir.listFiles().foreach(_.delete())
     m.write.mode("overwrite").parquet(s"$dir/_manifest")
+    val before = tripleRows(dir, 2)
+    assert(before.nonEmpty)
     val stats = KgPipeline.runResumable(articles, dir, buckets = 4)
     assert(stats.map(_.bucket) == Seq(2))
+    // the recomputed bucket replaced its triples: no stale file is left
+    assert(tripleRows(dir, 2) == before)
+  }
+
+  test("a resume into a fully committed directory runs one job") {
+    val dir = TempDirs.scoped("kg_resume_done")
+    val articles = Synth.articles(spark, 200, 42L, 4)
+    KgPipeline.runResumable(articles, dir, buckets = 4)
+    val (stats, jobs) = countingJobs(KgPipeline.runResumable(articles, dir, buckets = 4))
+    assert(stats.isEmpty)
+    // the manifest read; the staging's bucket range comes from its
+    // directory names and its schema from the input, with no job
+    assert(jobs <= 1, s"$jobs jobs for a resume with nothing to do")
   }
 
   /** Every manifest count equals what the bucket actually wrote or read:
@@ -165,7 +180,7 @@ class PipelineSpec extends AnyFunSuite {
       stats.map(_.copy(wall_ms = 0)))
   }
 
-  test("bucket commit: at most 3 jobs per bucket, manifest counts equal the written rows") {
+  test("bucket commit: buckets + 1 jobs, manifest counts equal the written rows") {
     val dir = TempDirs.scoped("kg_jobs")
     val n = 1200L
     val articles = Synth.articles(spark, n, 42L, 8)
@@ -173,12 +188,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(stats.map(_.bucket) == (0 until 8))
     info(f"$jobs jobs for ${stats.length} buckets " +
       f"(${jobs.toDouble / stats.length}%.2f per bucket, staging included)")
-    // a bucket needs its mentions write and its triples write (one job
-    // each: a bucket this small builds its triples without an exchange,
-    // and its manifest row is written on the driver); the one staging
-    // write is shared. A count, read-back, schema-inference or manifest
-    // job per bucket would break the bound.
-    assert(jobs <= 3 * stats.length, s"$jobs jobs for ${stats.length} buckets")
+    // a bucket this small needs its mentions write only: the write
+    // observes its triples, which the driver writes with its manifest
+    // row; the one staging write is shared. A count, read-back,
+    // schema-inference, triples or manifest job per bucket would break
+    // the bound.
+    assert(jobs <= stats.length + 1, s"$jobs jobs for ${stats.length} buckets")
     assertManifestMatchesOutput(dir, stats, n)
     assert(stats.map(_.n_triples).sum > 0)
   }
@@ -254,24 +269,26 @@ class PipelineSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Triples rows of each bucket, as written. */
-  private def writtenTriples(dir: String, b: Int): Set[Triple] = {
+  /** Triples rows of a bucket, as written. */
+  private def tripleRows(dir: String, b: Int): Seq[Triple] = {
     import spark.implicits._
     spark.read.schema(Encoders.product[Triple].schema)
-      .parquet(s"$dir/triples/bucket=$b").as[Triple].collect().toSet
+      .parquet(s"$dir/triples/bucket=$b").as[Triple].collect().toSeq
+      .sortBy(t => (t.subj, t.pred, t.obj))
   }
 
   private lazy val gateArticles = Synth.articles(spark, 400, 42L, 8)
-  /** The shuffle path's output under the session's own confs: every
-    * bucket above a zero-row limit. */
+  /** The exchange path's output under the session's own confs: every
+    * bucket above a zero-triple cap. */
   private lazy val gateReference: (String, Seq[KgPipeline.BucketStat]) = {
     val dir = TempDirs.scoped("kg_gate_ref")
-    (dir, KgPipeline.runResumable(gateArticles, dir, 4, new AliasTrieScorer, 0L))
+    (dir, KgPipeline.runResumable(gateArticles, dir, 4, new AliasTrieScorer, 0))
   }
 
-  /** Cells cross the confs a partition-count gate would read with a limit
-    * on either side of every bucket's mention count: the path must follow
-    * the measured count alone, and both paths write the same triples. */
+  /** Cells cross the confs a partition-count gate would read with a cap
+    * on either side of every bucket's distinct triples: the path must
+    * follow the observed set alone, and both paths write the same
+    * triples. Below the cap no triples SQL execution runs at all. */
   for {
     (cell, confs) <- Seq(
       "AQE on" -> Nil,
@@ -282,19 +299,43 @@ class PipelineSpec extends AnyFunSuite {
     below <- Seq(true, false)
   } test(s"triples gate matrix: $cell, buckets ${if (below) "below" else "above"} the row limit") {
     val (refDir, ref) = gateReference
-    assert(ref.forall(_.n_mentions > 0), "a bucket without mentions")
-    val limit = if (below) KgPipeline.OneTaskTriplesMaxRows else 0L
+    assert(ref.forall(_.n_triples > 0), "a bucket without triples")
+    val cap = if (below) KgPipeline.TripleCap else 0
     val dir = TempDirs.scoped("kg_gate")
     val (stats, plans) = withConfs(confs)(triplesPlans(
-      KgPipeline.runResumable(gateArticles, dir, 4, new AliasTrieScorer, limit)))
+      KgPipeline.runResumable(gateArticles, dir, 4, new AliasTrieScorer, cap)))
     assert(stats.map(_.copy(wall_ms = 0)) == ref.map(_.copy(wall_ms = 0)))
-    assert(plans.keySet == (0 until 4).toSet)
+    assert(plans.keySet == (if (below) Set.empty[Int] else (0 until 4).toSet))
     stats.foreach { s =>
-      assert(writtenTriples(dir, s.bucket) == writtenTriples(refDir, s.bucket),
+      assert(tripleRows(dir, s.bucket) == tripleRows(refDir, s.bucket),
         s"bucket ${s.bucket} triples")
-      assert(plans(s.bucket).contains("Exchange") != below,
-        s"bucket ${s.bucket} (${s.n_mentions} mentions, limit $limit):\n" +
+      if (!below) assert(plans(s.bucket).contains("Exchange"),
+        s"bucket ${s.bucket} (${s.n_triples} triples, cap $cap):\n" +
           plans(s.bucket))
+    }
+  }
+
+  test("driver-written triples read like Spark-written ones, in the session's codec") {
+    val (refDir, ref) = gateReference
+    val dir = TempDirs.scoped("kg_codec")
+    withConfs(Seq("spark.sql.parquet.compression.codec" -> "gzip"))(
+      KgPipeline.runResumable(gateArticles, dir, 4, new AliasTrieScorer,
+        KgPipeline.TripleCap))
+    // an inferred read sees the same schema, partition columns included
+    assert(spark.read.parquet(s"$dir/triples").schema ==
+      spark.read.parquet(s"$refDir/triples").schema)
+    val files = Files.walk(java.nio.file.Paths.get(dir, "triples")).iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.map(_.getParent.getFileName.toString).toSet ==
+      Set("pred=alias", "pred=mentions_agency"))
+    assert(files.length == 2 * ref.length, files.mkString("\n"))
+    files.foreach { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .foreach(c => assert(c.getCodec.name == "GZIP", s"$f: ${c.getCodec}"))
+      finally reader.close()
     }
   }
 
