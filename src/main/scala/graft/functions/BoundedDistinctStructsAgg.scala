@@ -2,6 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
@@ -9,23 +10,23 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
-/** Set of at most `cap` distinct rows. The row that would make it
-  * `cap + 1` overflows it: every kept row is dropped and only the flag
-  * stays, so the set never holds more than `cap` rows. */
-final class BoundedRowSet(val cap: Int) {
+/** Set of distinct rows that overflows instead of passing the limit each
+  * add is given: the row that would make it `cap + 1` rows drops every
+  * kept row and leaves only the flag. */
+final class BoundedRowSet {
   private[graft] var rows = new java.util.HashSet[UnsafeRow]()
   private[graft] var overflowed = false
 
   /** Adds a copy of `r` unless an equal row is kept already. */
-  def add(r: UnsafeRow): Unit =
+  def add(r: UnsafeRow, cap: Int): Unit =
     if (!overflowed && !rows.contains(r)) {
       if (rows.size >= cap) overflow()
       else rows.add(r.copy())
     }
 
   /** Adds every row of `o`; an overflowed `o` overflows this set. */
-  def addAll(o: BoundedRowSet): Unit =
-    if (o.overflowed) overflow() else o.rows.forEach(r => add(r))
+  def addAll(o: BoundedRowSet, cap: Int): Unit =
+    if (o.overflowed) overflow() else o.rows.forEach(r => add(r, cap))
 
   private def overflow(): Unit = {
     overflowed = true
@@ -34,15 +35,26 @@ final class BoundedRowSet(val cap: Int) {
 }
 
 /** Aggregate collecting the distinct non-null structs of an
-  * `array<struct>` column, bounded: once more than `cap` distinct structs
-  * are seen it returns NULL. NULL arrays, NULL elements and repeats do
-  * not count toward the cap.
+  * `array<struct>` column, bounded: it returns NULL rather than more than
+  * `cap` structs. NULL arrays, NULL elements and repeats do not count.
   *
-  * Unlike `collect_set`, neither a task's buffer nor the merged result
-  * ever holds more than `cap` rows, so the aggregate is safe as a
-  * `Dataset.observe` metric whose partial buffers all reach the driver:
-  * a bucket of millions of triples ships a flag, not its triples. A
-  * caller reads NULL as "too many" and takes its scalable path. */
+  * The bound holds for everything a stage's partial buffers carry
+  * together, not only for each one. A buffer that a task fills from its
+  * input rows keeps at most `cap / n` structs, `n` being the number of
+  * tasks in the task's stage (`n` = 1 outside a task); the struct that
+  * would pass that share overflows the buffer, which then keeps only its
+  * flag. Merges keep at most `cap`, and an overflowed partial overflows
+  * any merge. So NULL means that some task saw more than its share, not
+  * that the input holds more than `cap` distinct structs; the exact set
+  * comes back whenever every task stays within its share.
+  *
+  * This makes the aggregate safe as a `Dataset.observe` metric. There
+  * every task ships its partial buffer to the driver in its task result,
+  * and the driver merges the buffers only as they arrive: a write of `n`
+  * tasks ships at most `cap` structs in all, and a task past its share
+  * ships a flag instead of its structs. Unlike `collect_set`, no buffer
+  * and no merge grows with the input. A caller reads NULL as "too many"
+  * and takes its scalable path. */
 case class BoundedDistinctStructs(
     child: Expression,
     cap: Int,
@@ -70,23 +82,32 @@ case class BoundedDistinctStructs(
   // array hands out, so UnsafeRow equality is value equality
   @transient private lazy val toUnsafe = UnsafeProjection.create(elementType)
 
-  override def createAggregationBuffer(): BoundedRowSet = new BoundedRowSet(cap)
+  override def createAggregationBuffer(): BoundedRowSet = new BoundedRowSet
 
   override def update(b: BoundedRowSet, input: InternalRow): BoundedRowSet = {
-    val arr = child.eval(input).asInstanceOf[ArrayData]
+    // an overflowed buffer skips the child, whose arrays it would drop
+    val arr = if (b.overflowed) null else child.eval(input).asInstanceOf[ArrayData]
     if (arr != null) {
+      val share = taskShare
       val fields = elementType.length
       var i = 0
       while (i < arr.numElements() && !b.overflowed) {
-        if (!arr.isNullAt(i)) b.add(toUnsafe(arr.getStruct(i, fields)))
+        if (!arr.isNullAt(i)) b.add(toUnsafe(arr.getStruct(i, fields)), share)
         i += 1
       }
     }
     b
   }
 
+  /** The structs one task's buffer may keep: its even share of `cap`
+    * among the tasks of its stage. */
+  private def taskShare: Int = TaskContext.get() match {
+    case null => cap
+    case tc => cap / tc.numPartitions()
+  }
+
   override def merge(b: BoundedRowSet, o: BoundedRowSet): BoundedRowSet = {
-    b.addAll(o)
+    b.addAll(o, cap)
     b
   }
 
@@ -109,7 +130,7 @@ case class BoundedDistinctStructs(
 
   override def deserialize(bytes: Array[Byte]): BoundedRowSet = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val b = new BoundedRowSet(cap)
+    val b = new BoundedRowSet
     val n = in.readInt()
     if (n < 0) b.overflowed = true
     else (0 until n).foreach { _ =>

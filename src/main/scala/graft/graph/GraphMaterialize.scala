@@ -275,10 +275,10 @@ object GraphMaterialize {
 
   /** The distinct triples of the mention rows an aggregate sees — the
     * rows of [[triples]] as `array<struct<subj, pred, obj>>`, or NULL once
-    * more than `cap` distinct triples are seen
-    * ([[graft.functions.BoundedDistinctStructs]]). Partial-aggregable
-    * with a bounded buffer, so it can ride a write as a `Dataset.observe`
-    * metric. */
+    * a task sees more than its even share of `cap` distinct triples
+    * ([[graft.functions.BoundedDistinctStructs]]). The partial buffers of
+    * one stage hold at most `cap` triples together, so it can ride a
+    * write as a `Dataset.observe` metric. */
   private[graft] def boundedTripleSet(cap: Int): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.BoundedDistinctStructs(

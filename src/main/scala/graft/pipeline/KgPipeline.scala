@@ -36,12 +36,13 @@ import graft.ner.{AliasTrieScorer, NerStage, TokenScorer}
   * A small bucket commits with ONE Spark job, its mentions write, and no
   * other: its input is scanned once, NER runs once, and the write's
   * `Dataset.observe` carries the manifest counts and the bucket's
-  * distinct triples, bounded at [[TripleCap]]
-  * ([[GraphMaterialize.boundedTripleSet]]). The driver writes those
-  * triples, one parquet file per `pred`, and the manifest row, a one-row
-  * parquet file, both through [[ManifestRecord]]. A bucket with more
-  * distinct triples than the cap observes NULL instead and builds its
-  * triples from its written mentions with an exchange, in a second job.
+  * distinct triples, bounded at [[TripleCap]] for the write's tasks
+  * together ([[GraphMaterialize.boundedTripleSet]]). The driver writes
+  * those triples, one parquet file per `pred`, and the manifest row, a
+  * one-row parquet file, both through [[ManifestRecord]]. A bucket one of
+  * whose write tasks sees more distinct triples than its even share of
+  * the cap observes NULL instead, and builds its triples from its written
+  * mentions with an exchange, in a second job.
   * A bucket with no article, mention or triple commits a manifest row of
   * zeros. Every path is resolved through the Hadoop `FileSystem` API.
   */
@@ -81,15 +82,17 @@ object KgPipeline {
     runResumable(articles, outDir, buckets, scorer, TripleCap)
 
   /** Most distinct triples a bucket's mentions write observes for the
-    * driver to write; past it the observation is NULL and the bucket's
-    * triples take the exchange path. The cap also bounds what one task's
-    * buffer and the driver hold. On 4 cores, observing the set and writing
-    * it on the driver took about as long as the read-back and exchange at
-    * 150k distinct triples (1.0–1.3 s, with one or four write tasks); the
-    * driver path was ahead by 0.3–0.7 s at 15k and by 0.04–0.16 s at 75k,
-    * and the exchange 1.5× faster at 300k. Half the break-even keeps the
-    * driver path clearly ahead and leaves larger buckets to the exchange,
-    * which spreads them over the session's cores. */
+    * driver to write, all its tasks together: each task keeps at most its
+    * even share, and one past it makes the observation NULL, sending the
+    * bucket's triples down the exchange path. So the cap also bounds what
+    * the write's task results ship to the driver and what the driver
+    * merges. On 4 cores, observing the set and writing it on the driver
+    * took about as long as the read-back and exchange at 150k distinct
+    * triples (1.0–1.3 s, with one or four write tasks); the driver path
+    * was ahead by 0.3–0.7 s at 15k and by 0.04–0.16 s at 75k, and the
+    * exchange 1.5× faster at 300k. Half the break-even keeps the driver
+    * path clearly ahead and leaves larger buckets to the exchange, which
+    * spreads them over the session's cores. */
   private[graft] val TripleCap = 75000
 
   /** [[runResumable]] with the triples cap as an argument — the seam that

@@ -1,11 +1,17 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,8 +23,9 @@ import graft.synth.Synth
 
 /** The bounded distinct-struct aggregate behind a bucket's observed
   * triples (graft.functions.BoundedDistinctStructs): the exact set below
-  * the cap, NULL past it, what does not count toward it, overflow through
-  * merges and serialization, and its agreement with
+  * the cap, NULL past it or past a task's share of it, what does not
+  * count toward it, overflow through merges and serialization, the task
+  * results of an observation, and its agreement with
   * `GraphMaterialize.triples`. */
 class BoundedTripleSetSpec extends AnyFunSuite {
 
@@ -45,17 +52,16 @@ class BoundedTripleSetSpec extends AnyFunSuite {
     }
 
   /** The aggregate over the `(a, b)` structs of `elems` through the
-    * DataFrame API, one array per row, partials merged across `parts`
-    * partitions. */
+    * DataFrame API, one array per row, over `parts` partitions: each
+    * partition's task keeps at most `cap / parts`, the merge `cap`. */
   private def collected(elems: Seq[Option[(String, Int)]], cap: Int,
       parts: Int): Option[Set[(String, Int)]] = {
     import spark.implicits._
     val df = elems.map(e => (e.map(_._1), e.map(_._2))).toDF("a", "b")
       .repartition(parts)
       .select(when(col("a").isNotNull, array(struct(col("a"), col("b")))).as("arr"))
-    val out = df.agg(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      BoundedDistinctStructs(org.apache.spark.sql.graftbridge.ColumnBridge
-        .expression(col("arr")), cap).toAggregateExpression())).head()
+    val out = df.agg(ColumnBridge.column(BoundedDistinctStructs(
+      ColumnBridge.expression(col("arr")), cap).toAggregateExpression())).head()
     if (out.isNullAt(0)) None
     else Some(out.getSeq[Row](0).map(r => (r.getString(0), r.getInt(1))).toSet)
   }
@@ -66,8 +72,9 @@ class BoundedTripleSetSpec extends AnyFunSuite {
     a.update(b, inputRow(Some("x" -> 1), Some("y" -> 2)))
     a.update(b, inputRow(Some("z" -> 3)))
     assert(setOf(a, b).contains(Set("x" -> 1, "y" -> 2, "z" -> 3)))
+    // over 4 partitions a task keeps a quarter of the cap, here 10
     val elems = (0 until 40).map(i => Some(s"k${i % 10}" -> i % 10))
-    assert(collected(elems, 10, parts = 4).contains(
+    assert(collected(elems, 40, parts = 4).contains(
       (0 until 10).map(i => s"k$i" -> i).toSet))
   }
 
@@ -83,8 +90,11 @@ class BoundedTripleSetSpec extends AnyFunSuite {
     a.update(b, inputRow(Some("x" -> 1)))
     assert(setOf(a, b).isEmpty)
     val elems = (0 until 11).map(i => Some(s"k$i" -> i))
-    assert(collected(elems, 10, parts = 4).isEmpty)
-    assert(collected(elems, 11, parts = 4).map(_.size).contains(11))
+    assert(collected(elems, 10, parts = 1).isEmpty)
+    assert(collected(elems, 11, parts = 1).map(_.size).contains(11))
+    // over 4 partitions, one of them holds 3 structs, past its share of 11
+    assert(collected(elems, 11, parts = 4).isEmpty)
+    assert(collected(elems, 44, parts = 4).map(_.size).contains(11))
   }
 
   test("repeats, NULL elements and NULL arrays do not count toward the cap") {
@@ -99,7 +109,7 @@ class BoundedTripleSetSpec extends AnyFunSuite {
     assert(setOf(a, b).isEmpty)
     val elems = Seq.fill(5)(Some("x" -> 1)) ++ Seq.fill(5)(None) ++
       Seq.fill(5)(Some("y" -> 2))
-    assert(collected(elems, 2, parts = 3).contains(Set("x" -> 1, "y" -> 2)))
+    assert(collected(elems, 2, parts = 1).contains(Set("x" -> 1, "y" -> 2)))
   }
 
   test("merging with an overflowed buffer overflows; merges stay within the cap") {
@@ -127,13 +137,48 @@ class BoundedTripleSetSpec extends AnyFunSuite {
     assert(!back.overflowed)
     assert(back.rows == b.rows)
     // a deserialized row still dedupes against a fresh one
-    back.add(toUnsafe(InternalRow(UTF8String.fromString("x"), 1)))
+    back.add(toUnsafe(InternalRow(UTF8String.fromString("x"), 1)), 4)
     assert(back.rows.size == 3)
     a.update(b, inputRow(Some("p" -> 1), Some("q" -> 2)))
     assert(b.overflowed)
     val over = a.deserialize(a.serialize(b))
     assert(over.overflowed && over.rows.isEmpty)
     assert(a.deserialize(a.serialize(a.createAggregationBuffer())).rows.isEmpty)
+  }
+
+  test("a stage's tasks ship at most cap structs together to an observation") {
+    // 8 tasks of 100 distinct structs each: every task is under the cap of
+    // 400 on its own, all of them together are over it
+    val parts = 8
+    val df = spark.range(0, 800, 1, parts).select(array(struct(
+        concat(lit("x" * 100), col("id").cast("string")).as("a"),
+        col("id").cast("int").as("b"))).as("arr"))
+    def observed(cap: Int): (Option[Int], Seq[Long]) = {
+      val obs = Observation(s"cap $cap")
+      val ends = new ConcurrentLinkedQueue[SparkListenerTaskEnd]
+      val listener = new SparkListener {
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = ends.add(t)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val jobs = try SparkTestSession.recordingJobs(df
+          .observe(obs, ColumnBridge.column(BoundedDistinctStructs(
+            ColumnBridge.expression(col("arr")), cap).toAggregateExpression()).as("s"))
+          .write.format("noop").mode(SaveMode.Overwrite).save())._2
+        finally spark.sparkContext.removeSparkListener(listener)
+      val stages = jobs.flatMap(_.stageIds).toSet
+      (Option(obs.get("s")).map(_.asInstanceOf[Seq[Row]].size),
+        ends.asScala.toSeq.filter(t => stages(t.stageId)).map(_.taskMetrics.resultSize))
+    }
+    // a share of 100 per task: every task ships its 100 structs
+    val (all, shipped) = observed(parts * 100)
+    assert(all.contains(800))
+    // a share of 50: every task overflows and ships its flag alone
+    val (over, flagged) = observed(400)
+    assert(over.isEmpty)
+    assert(shipped.size == parts && flagged.size == parts)
+    // 100 structs of over 100 bytes each are what a shipping task adds
+    assert(flagged.max + 100 * 100 < shipped.min,
+      s"task result bytes: overflowed $flagged, shipped $shipped")
   }
 
   test("observed triples equal GraphMaterialize.triples, bucket by bucket") {
@@ -154,11 +199,11 @@ class BoundedTripleSetSpec extends AnyFunSuite {
       assert(observed(b).sortBy(t => (t.subj, t.pred, t.obj)) ==
         expected.sortBy(t => (t.subj, t.pred, t.obj)), s"bucket $b")
     }
-    // the observation of the whole input is the whole graph, and one
-    // triple fewer as cap gives NULL
+    // the observation of the whole input in one task is the whole graph,
+    // and one triple fewer as cap gives NULL
     val all = GraphMaterialize.triples(mentions.drop("bucket").as[core.Mention]).count()
     def whole(cap: Int): DataFrame =
-      mentions.agg(GraphMaterialize.boundedTripleSet(cap).as("t"))
+      mentions.coalesce(1).agg(GraphMaterialize.boundedTripleSet(cap).as("t"))
     assert(whole(all.toInt).head().getSeq[Row](0).size == all)
     assert(whole(all.toInt - 1).head().isNullAt(0))
     mentions.unpersist()
