@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.WriteFs
+
 /** Similarity search over an embedding column (`Array[Float]`) —
   * training-data-pipeline layer.
   *
@@ -255,9 +257,8 @@ object Ann {
     * PartitionFilters). This is the 100-TB shape: assignment once at
     * ingest, every query rereads `nprobe/nlist` of the bytes. */
   def writeIvfLayout(assigned: DataFrame, path: String): Unit =
-    assigned
-      .repartition(col("ivf_list"))
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(path)
+    WriteFs.write(assigned.repartition(col("ivf_list")))
+      .mode("overwrite").partitionBy("ivf_list").parquet(path)
 
   /** nprobe search over the partitioned layout (see [[writeIvfLayout]]). */
   def ivfSearchPartitioned(

@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.io.WriteFs
 import graft.pipeline.{KgPipeline, ManifestRecord}
 
 /** The composed corpus-cleaning pipeline a training-data user actually
@@ -251,7 +252,7 @@ object CleaningPipeline {
         s"minRatio=$minRatio\n" +
         s"storePath=${storePath.getOrElse("")}",
       keepCols)
-    val fs = new Path(stageDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = WriteFs.of(spark, new Path(stageDir))
     val attempt = new Path(s"$stageDir/stage4_store_attempt")
     storePath.foreach { p =>
       // a prior attempt that crashed INSIDE the store's commit window
@@ -299,7 +300,7 @@ object CleaningPipeline {
         StageStat(stage, rows, (System.nanoTime() - t0) / 1000000L))
     def commit(stage: Int, df: DataFrame, dir: String): Unit = {
       val (out, n) = KgPipeline.observedRows(df, s"stage$stage rows")
-      out.write.mode(SaveMode.Overwrite).parquet(dir)
+      WriteFs.write(out).mode(SaveMode.Overwrite).parquet(dir)
       record(stage, n())
     }
 

@@ -107,7 +107,11 @@ object Dedup {
     * staged pass and must band IDENTICALLY to the batch path and the
     * store. Callers are responsible for the sub-shingle gate (docs with
     * no shingles must not reach banding — their all-MaxValue signatures
-    * would collide into one degenerate bucket). */
+    * would collide into one degenerate bucket).
+    *
+    * Both `transform`s run interpreted: `ArrayTransform` is a
+    * `CodegenFallback` on Spark 4.1.2, so every band formats its longs to
+    * strings and joins them row by row before `xxhash64` hashes them. */
   private[ops] def bandRowsFromSigs(
       sigs: DataFrame,
       k: Int,
@@ -141,7 +145,9 @@ object Dedup {
     docs.select(col("doc_id"), distinctShingles(col("text"), shingleN).as("sh"))
 
   /** Per-shingle 64-bit hash of a shingle-set column: `array<string>` →
-    * `array<long>` (XxHash64 inside a codegen'd `transform` HOF) — the
+    * `array<long>` (XxHash64 per element inside a `transform` HOF, which
+    * runs interpreted: `ArrayTransform` is a `CodegenFallback` on Spark
+    * 4.1.2) — the
     * AT-REST representation of shingle sets (the cleaning chain's staged
     * frame, [[SignatureStore]]'s shingle table). Distinct strings map to
     * distinct hashes with overwhelming probability. Two bounds matter:

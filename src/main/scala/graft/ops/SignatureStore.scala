@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.json4s.{JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
+import graft.io.WriteFs
 import graft.pipeline.ManifestRecord
 
 /** Incremental near-dup dedup against a PERSISTED signature store — the
@@ -634,11 +635,11 @@ object SignatureStore {
     * (one file per prefix per write). */
   private def writePrefixed(df: DataFrame, pfx: String, prefix: Column,
       dir: String): Unit =
-    df.withColumn(pfx, prefix)
+    WriteFs.write(df.withColumn(pfx, prefix)
       .repartition(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col(pfx))
-      .write.mode("overwrite").partitionBy(pfx).parquet(dir)
+        col(pfx)))
+      .mode("overwrite").partitionBy(pfx).parquet(dir)
 
   /** Unique-enough commit token: wall clock + pid (single-writer store —
     * concurrent appends to one store are out of contract). */
@@ -687,7 +688,7 @@ object SignatureStore {
   private def journalPath(path: String) =
     new Path(s"$path/_commit_journal.json")
   private def fs(spark: SparkSession, path: String) =
-    metaPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    WriteFs.of(spark, metaPath(path))
 
   private def deleteMeta(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(metaPath(path), false)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
 import graft.core.{Article, Mention, Triple}
 import graft.graph.GraphMaterialize
+import graft.io.WriteFs
 import graft.link.Linker
 import graft.ner.{AliasTrieScorer, NerStage, TokenScorer}
 
@@ -44,7 +45,9 @@ import graft.ner.{AliasTrieScorer, NerStage, TokenScorer}
   * the cap observes NULL instead, and builds its triples from its written
   * mentions with an exchange, in a second job.
   * A bucket with no article, mention or triple commits a manifest row of
-  * zeros. Every path is resolved through the Hadoop `FileSystem` API.
+  * zeros. Every path is resolved through the Hadoop `FileSystem` API,
+  * and every filesystem and writer comes from [[graft.io.WriteFs]]: on
+  * `file:` no file or directory of a commit forks a `chmod` process.
   */
 object KgPipeline {
 
@@ -106,7 +109,7 @@ object KgPipeline {
   ): Seq[BucketStat] = {
     val spark = articles.sparkSession
     import spark.implicits._
-    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = WriteFs.of(spark, new Path(outDir))
 
     val manifestDir = s"$outDir/_manifest"
     val done: Set[Int] =
@@ -149,10 +152,10 @@ object KgPipeline {
         (in, if (top.isNullAt(0)) -1 else top.getInt(0))
       } else {
         if (!fs.exists(new Path(stagingDir, "_SUCCESS")))
-          articles.toDF()
+          WriteFs.write(articles.toDF()
             .withColumn("_bucket",
-              pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
-            .write.mode(SaveMode.Overwrite)
+              pmod(xxhash64(col("url")), lit(buckets)).cast("int")))
+            .mode(SaveMode.Overwrite)
             .partitionBy("_bucket")
             .parquet(stagingDir.toString)
         val StagedBucket = "_bucket=(\\d+)".r
@@ -173,13 +176,13 @@ object KgPipeline {
       val triplesDir = new Path(s"$outDir/triples/bucket=$b")
       val (ms, articlesIn) = bucketMentions(bucketed, b, scorer)
       val obs = Observation(s"bucket $b mentions")
-      ms.toDF()
+      WriteFs.write(ms.toDF()
         .observe(obs, count(lit(1)).as("rows"),
-          GraphMaterialize.boundedTripleSet(tripleCap).as("triples"))
-        .write.mode(SaveMode.Overwrite).parquet(mentionsDir)
+          GraphMaterialize.boundedTripleSet(tripleCap).as("triples")))
+        .mode(SaveMode.Overwrite).parquet(mentionsDir)
       val nTriples = obs.get("triples") match {
         case observed: collection.Seq[Row @unchecked] =>
-          writeTriples(spark, triplesDir, observed)
+          writeTriples(spark, fs, triplesDir, observed)
           observed.size.toLong
         case null =>
           // too many triples for the driver: build them from the just-
@@ -188,7 +191,7 @@ object KgPipeline {
           val (ts, triplesOut) = observedRows(GraphMaterialize.triples(
               spark.read.schema(mentionSchema).parquet(mentionsDir).as[Mention])
             .toDF(), s"bucket $b triples")
-          ts.write.mode(SaveMode.Overwrite)
+          WriteFs.write(ts).mode(SaveMode.Overwrite)
             .partitionBy("pred")
             .parquet(triplesDir.toString)
           triplesOut()
@@ -205,9 +208,8 @@ object KgPipeline {
     * `(subj, obj)` per `pred` value under `pred=<value>`. With no triple
     * the directory stays, empty, as Spark's write of an empty frame
     * leaves it. */
-  private def writeTriples(spark: SparkSession, dir: Path,
+  private def writeTriples(spark: SparkSession, fs: FileSystem, dir: Path,
       triples: collection.Seq[Row]): Unit = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(dir, true)
     fs.mkdirs(dir)
     triples.groupBy(_.getString(1)).foreach { case (pred, rows) =>

@@ -6,7 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -16,6 +16,8 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.stringType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
 import org.apache.spark.sql.{Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+
+import graft.io.WriteFs
 
 /** The one driver-side file writer of the resumable writers, and the
   * commit record of their `_manifest` tables.
@@ -28,6 +30,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
   * absent (HDFS rename does not overwrite). A reader therefore sees a
   * file whole or not at all, on any Hadoop filesystem; a crash leaves at
   * most a temp file, which [[isTemp]] names so its owner can sweep it.
+  * The filesystem comes from [[graft.io.WriteFs]], so on `file:` the temp
+  * file, its `.crc` sidecar and any parent directory get their
+  * permission bits in-process, with no `chmod` process per file.
   *
   * A parquet file ([[writeParquet]]) is the file Spark writes for the
   * same rows — same message name, column names, physical and logical
@@ -67,8 +72,8 @@ private[graft] object ManifestRecord {
       case "NONE" => CompressionCodecName.UNCOMPRESSED
       case name => CompressionCodecName.valueOf(name)
     }
-    commit(spark, target) { tmp =>
-      val conf = spark.sparkContext.hadoopConfiguration
+    val conf = WriteFs.conf(spark)
+    commit(WriteFs.of(spark, target), target) { tmp =>
       val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
         .withConf(conf)
         .withType(msg)
@@ -92,31 +97,31 @@ private[graft] object ManifestRecord {
   }
 
   /** Writes `text` (UTF-8) to the absent file `target` through [[commit]]. */
-  def writeString(spark: SparkSession, target: Path, text: String): Unit =
-    commit(spark, target) { tmp =>
-      val out = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(tmp, true)
+  def writeString(spark: SparkSession, target: Path, text: String): Unit = {
+    val fs = WriteFs.of(spark, target)
+    commit(fs, target) { tmp =>
+      val out = fs.create(tmp, true)
       try out.write(text.getBytes("UTF-8")) finally out.close()
     }
+  }
 
   /** The UTF-8 content of `target`, or `None` when it does not exist. */
   def readString(spark: SparkSession, target: Path): Option[String] =
     try {
-      val in = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .open(target)
+      val in = WriteFs.of(spark, target).open(target)
       try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
     } catch { case _: FileNotFoundException => None }
 
   /** True for a file name [[commit]] writes before its rename. */
   def isTemp(name: String): Boolean = name.startsWith(".") && name.endsWith(".tmp")
 
-  /** `write` fills the temp file beside `target`; one rename then moves it
-    * onto `target`, which the caller has made sure is absent. A temp file
-    * an earlier crash left under the same name is overwritten. */
-  private def commit(spark: SparkSession, target: Path)(write: Path => Unit): Unit = {
+  /** `write` fills the temp file beside `target`; one rename on `fs` then
+    * moves it onto `target`, which the caller has made sure is absent. A
+    * temp file an earlier crash left under the same name is overwritten. */
+  private def commit(fs: FileSystem, target: Path)(write: Path => Unit): Unit = {
     val tmp = new Path(target.getParent, s".${target.getName}.tmp")
     write(tmp)
-    if (!tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).rename(tmp, target))
+    if (!fs.rename(tmp, target))
       throw new IOException(s"could not rename $tmp onto $target")
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.core.{Article, Mention}
+import graft.io.WriteFs
 import graft.ner.{NerStage, TokenScorer}
 import graft.ops.{Dedup, SignatureStore}
 
@@ -217,8 +218,8 @@ object StreamingKg {
       .select(col("doc_id"))
     val keep = b.join(drops, Seq("doc_id"), "left_anti")
       .select(col("doc_id")).localCheckpoint()
-    b.join(keep, Seq("doc_id"), "left_semi")
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    WriteFs.write(b.join(keep, Seq("doc_id"), "left_semi"))
+      .mode("overwrite").parquet(s"$outDir/batch=$batchId")
     SignatureStore.appendSignatures(spark, storePath,
       bKeys.join(keep, Seq("doc_id"), "left_semi"),
       bSh.join(keep, Seq("doc_id"), "left_semi"),
